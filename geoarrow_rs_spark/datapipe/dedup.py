@@ -303,7 +303,8 @@ def _cc_local(hi, lo, max_rounds: int = 64):
     """Vectorized connected components over edge arrays: min-label
     propagation with pointer jumping (labels are indices into the sorted
     unique node array, so the converged label IS the component-minimum
-    id). Returns [(node, component_min)] — the same label function the
+    id). Returns ``(nodes, labels)`` int64 arrays (``labels[i]`` is the
+    component minimum of ``nodes[i]``) — the same label function the
     distributed loop converges to. O(E) numpy work per round, O(log n)
     rounds; returns None if the round cap fires (caller falls back to
     the distributed loop)."""
@@ -321,9 +322,7 @@ def _cc_local(hi, lo, max_rounds: int = 64):
         for _ in range(3):
             new = new[new]
         if np.array_equal(new, lab):
-            return [
-                (int(nodes[i]), int(nodes[lab[i]])) for i in range(len(nodes))
-            ]
+            return nodes, nodes[lab]
         lab = new
     return None
 
@@ -368,15 +367,15 @@ def dedup_clusters(
     if not LOCAL_CC_DISABLED:
         probe = raw_edges.limit(_LOCAL_CC_MAX_EDGES + 1).toPandas()
         if len(probe) <= _LOCAL_CC_MAX_EDGES:
+            import pyarrow as pa
+
             ids = df.select(F.col(id_col).cast("long").alias(id_col))
-            local = (
-                _cc_local(probe["hi"].to_numpy(), probe["lo"].to_numpy())
-                if len(probe)
-                else []
-            )
+            local = _cc_local(probe["hi"].to_numpy(), probe["lo"].to_numpy())
             if local is not None:
+                # Arrow hand-back: no per-row pickling through parallelize
                 labels = pairs.sparkSession.createDataFrame(
-                    local, "node long, label long"
+                    pa.table({"node": local[0], "label": local[1]}),
+                    "node long, label long",
                 )
                 return ids.join(labels, ids[id_col] == labels.node, "left").select(
                     id_col, F.coalesce("label", F.col(id_col)).alias("cluster_id")

@@ -13,14 +13,17 @@ This is the semantics of the standard funnel tools; note the greedy
 window-capped chain is not guaranteed to find a completion that a later
 t1 would have found (the documented first-touch trade-off).
 
-Scale shape: one filter + groupBy per step, every join and groupBy keyed
-on the user column — with the input pre-partitioned by user the whole
-funnel runs with a single exchange. State per user is k timestamps.
+Scale shape: one plan with a single exchange keyed on the user column.
+Step times come from unordered windows over ``partitionBy(user)`` (t_i
+depends on t_{i-1}, so the k windows stack on the same partitioning),
+the per-user row is a distinct over that partitioning, and the report is
+one global aggregate. No checkpoint and no job runs while the plan is
+built. State per user is k timestamps.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def funnel(
@@ -34,42 +37,37 @@ def funnel(
     """Per-user step-completion times for an ordered funnel.
 
     Output: one row per user who completed ALL ``len(steps)`` steps, with
-    columns ``t1 .. tk`` (the matched event times). Use the intermediate
-    per-prefix frames via :func:`funnel_counts` for the usual step-counts
-    report. ``window`` (same unit as ``ts_col``) caps every step at
-    ``t1 + window``.
+    columns ``t1 .. tk`` (the matched event times). A user whose step-1
+    events all have NULL times starts the funnel with ``t1`` NULL and goes
+    no further; a NULL user reaches step 1 only. Use :func:`funnel_counts`
+    for the usual step-counts report. ``window`` (same unit as ``ts_col``)
+    caps every step at ``t1 + window``.
     """
-    return _funnel_stages(events, steps, user_col, type_col, ts_col, window)[-1]
+    per_user = _funnel_per_user(events, steps, user_col, type_col, ts_col, window)
+    last = F.col("__has1") if len(steps) == 1 else F.col(f"t{len(steps)}").isNotNull()
+    return per_user.where(last).drop("__has1")
 
 
-def _funnel_stages(events, steps, user_col, type_col, ts_col, window):
-    # each stage is referenced by the next stage AND by the counts report:
-    # checkpoint so stage i's work runs once, not once per downstream use
-    stages = []
-    cur = (
-        events.where(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t1"))
-        .localCheckpoint(eager=False)
+def _funnel_per_user(events, steps, user_col, type_col, ts_col, window):
+    """One row per user with a step-1 event: ``user_col, __has1, t1..tk``
+    (t_i NULL where the user stopped before step i)."""
+    w = Window.partitionBy(user_col)
+    ts = F.col(ts_col)
+    is_step = [F.col(type_col) == F.lit(s) for s in steps]
+    df = events.where(F.col(type_col).isin(*steps)).select(
+        user_col, type_col, ts_col,
+        F.max(is_step[0]).over(w).alias("__has1"),
+        F.min(F.when(is_step[0], ts)).over(w).alias("t1"),
     )
-    stages.append(cur)
-    for i, s in enumerate(steps[1:], start=2):
-        nxt = events.where(F.col(type_col) == s).select(
-            user_col, F.col(ts_col).alias("__ts")
-        )
-        cond = F.col("__ts") > F.col(f"t{i - 1}")
+    for i in range(2, len(steps) + 1):
+        # a NULL user never reaches step 2: the staged definition joins
+        # each step on the user key, and NULL keys never match
+        cond = is_step[i - 1] & F.col(user_col).isNotNull() & (ts > F.col(f"t{i - 1}"))
         if window is not None:
-            cond = cond & (F.col("__ts") <= F.col("t1") + F.lit(window))
-        prev_cols = [f"t{j}" for j in range(1, i)]
-        cur = (
-            nxt.join(stages[-1], user_col)
-            .where(cond)
-            .groupBy(user_col, *prev_cols)
-            .agg(F.min("__ts").alias(f"t{i}"))
-            .localCheckpoint(eager=False)
-        )
-        stages.append(cur)
-    return stages
+            cond = cond & (ts <= F.col("t1") + F.lit(window))
+        df = df.withColumn(f"t{i}", F.min(F.when(cond, ts)).over(w))
+    cols = [user_col, "__has1"] + [f"t{i}" for i in range(1, len(steps) + 1)]
+    return df.select(*cols).where(F.col("__has1")).distinct()
 
 
 def funnel_counts(
@@ -81,27 +79,25 @@ def funnel_counts(
     window=None,
 ) -> DataFrame:
     """The funnel report: one row per step with the user count and the
-    exact integer-ppm conversion vs step 1 — assembled as ONE plan (a
-    union of per-stage aggregates over the checkpointed stages), not k
-    driver-side count() jobs."""
-    stages = _funnel_stages(events, steps, user_col, type_col, ts_col, window)
-    per = [
-        st.agg(F.count(F.lit(1)).alias("n_users")).select(
+    exact integer-ppm conversion vs step 1 — one global aggregate over
+    the per-user funnel rows, exploded into the k report rows (one user
+    exchange, no per-step count() jobs)."""
+    per_user = _funnel_per_user(events, steps, user_col, type_col, ts_col, window)
+    counts = per_user.agg(
+        F.count(F.lit(1)).alias("n1"),
+        *[F.count(f"t{i}").alias(f"n{i}") for i in range(2, len(steps) + 1)],
+    )
+    rows = F.explode(F.array(*[
+        F.struct(
             F.lit(i).alias("step"),
             F.lit(name).alias("step_name"),
-            F.col("n_users").cast("long").alias("n_users"),
+            F.col(f"n{i}").alias("n_users"),
         )
-        for i, (name, st) in enumerate(zip(steps, stages), start=1)
-    ]
-    u = per[0]
-    for p in per[1:]:
-        u = u.unionByName(p)
-    first = u.where(F.col("step") == 1).select(
-        F.col("n_users").alias("__n1")
-    )
-    return u.crossJoin(F.broadcast(first)).select(
-        "step", "step_name", "n_users",
+        for i, name in enumerate(steps, start=1)
+    ])).alias("r")
+    return counts.select(rows, "n1").select(
+        "r.step", "r.step_name", "r.n_users",
         F.when(
-            F.col("__n1") > 0, F.expr("n_users * 1000000 div __n1")
+            F.col("n1") > 0, F.expr("r.n_users * 1000000 div n1")
         ).otherwise(F.lit(0)).cast("long").alias("conv_ppm"),
     )

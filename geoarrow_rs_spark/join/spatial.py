@@ -281,34 +281,42 @@ def _knn_local(l_ids, lxs, lys, r_ids, rxs, rys, k, cs, max_radius_cells):
     lcx = np.floor(lxs / cs).astype(np.int64)
     lcy = np.floor(lys / cs).astype(np.int64)
 
-    pair_dt = np.dtype([("d", "<f8"), ("i", "<i8")])
     chunks_l, chunks_r, chunks_rn, chunks_d = [], [], [], []
     # dense (left x cand) matrix bound: ~0.5 GB of f8 — bigger blocks
     # bail to the distributed path, which streams them on executors
     max_cells = 1 << 26
 
     def rank(lidx, cand):
-        """(top, cnt, kdist): sorted (dist, r_id) top-k per left row."""
+        """(top_d, top_i, cnt, kdist): (dist, r_id)-sorted top-k per left
+        row. np.partition finds each row's k-th distance; only entries at
+        or under it (ties included) are lexsorted."""
         dx = lxs[lidx][:, None] - rxs[cand][None, :]
         dy = lys[lidx][:, None] - rys[cand][None, :]
         dist = np.sqrt(dx * dx + dy * dy)
-        arr = np.empty(dist.shape, dtype=pair_dt)
-        arr["d"] = dist
-        arr["i"] = r_ids[cand][None, :]
-        arr = np.sort(arr, axis=1)  # lexicographic (dist, r_id)
-        take = min(int(k), arr.shape[1])
-        top = arr[:, :take]
-        kdist = top["d"][:, take - 1] if take else np.full(len(lidx), np.inf)
-        return top, arr.shape[1], kdist
+        m, cnt = dist.shape
+        take = min(int(k), cnt)
+        if take == 0:
+            return dist[:, :0], np.zeros((m, 0), np.int64), cnt, np.full(m, np.inf)
+        kth = np.partition(dist, take - 1, axis=1)[:, take - 1]
+        # a NaN k-th distance keeps the whole row (NaN sorts last)
+        rows, cols = np.nonzero((dist <= kth[:, None]) | np.isnan(kth)[:, None])
+        d, rid = dist[rows, cols], r_ids[cand][cols]
+        o = np.lexsort((rid, d, rows))
+        rows, d, rid = rows[o], d[o], rid[o]
+        # rank within each row; every row keeps >= take entries
+        first = np.searchsorted(rows, rows)
+        keep = (np.arange(len(rows)) - first) < take
+        top_d = d[keep].reshape(m, take)
+        return top_d, rid[keep].reshape(m, take), cnt, top_d[:, -1]
 
-    def emit(lidx, top):
-        m, take = top.shape
+    def emit(lidx, top_d, top_i):
+        m, take = top_d.shape
         if m == 0 or take == 0:
             return
         chunks_l.append(np.repeat(l_ids[lidx], take))
-        chunks_r.append(top["i"].ravel())
+        chunks_r.append(top_i.ravel())
         chunks_rn.append(np.tile(np.arange(1, take + 1, dtype=np.int64), m))
-        chunks_d.append(top["d"].ravel())
+        chunks_d.append(top_d.ravel())
 
     unresolved = np.arange(nl)
     radius = 1
@@ -343,11 +351,11 @@ def _knn_local(l_ids, lxs, lys, r_ids, rxs, rys, k, cs, max_radius_cells):
             cand = np.concatenate(parts)
             if len(lidx) * len(cand) > max_cells:
                 return None
-            top, cnt, kdist = rank(lidx, cand)
+            top_d, top_i, cnt, kdist = rank(lidx, cand)
             ok = (kdist <= radius * cs) if cnt >= int(k) else np.zeros(
                 len(lidx), dtype=bool
             )
-            emit(lidx[ok], top[ok])
+            emit(lidx[ok], top_d[ok], top_i[ok])
             still.extend(lidx[~ok])
         unresolved = np.asarray(still, dtype=np.int64)
         radius *= 2
@@ -359,8 +367,8 @@ def _knn_local(l_ids, lxs, lys, r_ids, rxs, rys, k, cs, max_radius_cells):
         cand = np.arange(nr)
         for i0 in range(0, len(unresolved), block):
             part = unresolved[i0 : i0 + block]
-            top, _cnt, _kd = rank(part, cand)
-            emit(part, top)
+            top_d, top_i, _cnt, _kd = rank(part, cand)
+            emit(part, top_d, top_i)
     if not chunks_l:
         return [], [], [], []
     return (

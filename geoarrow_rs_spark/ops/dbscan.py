@@ -90,10 +90,12 @@ def _dbscan_local(ids, xs, ys, eps: float, min_pts: int):
     """Driver-local DBSCAN over collected points — the same arithmetic as
     the distributed composition (dx*dx + dy*dy <= eps*eps in IEEE doubles,
     cluster id = smallest core id in the component, border = min
-    neighboring core cluster), computed block-wise in numpy. Returns
-    [(id, cluster_id_or_None, role)], or None if the edge set exceeds the
-    local cap (caller falls back to the distributed path)."""
+    neighboring core cluster), computed block-wise in numpy. Returns a
+    ``pyarrow.Table`` ``(id, cluster_id, role)`` with NULL cluster ids for
+    noise, or None if the edge set exceeds the local cap (caller falls
+    back to the distributed path)."""
     import numpy as np
+    import pyarrow as pa
 
     from ..datapipe.dedup import _cc_local
 
@@ -151,28 +153,22 @@ def _dbscan_local(ids, xs, ys, eps: float, min_pts: int):
         return None
     # cluster id per point index: core points take their component min
     # (singleton cores keep their own id), vectorized via sorted-id lookup
+    lab_nodes, lab_vals = labels
     sort_ids = np.argsort(ids, kind="stable")
     sorted_ids = ids[sort_ids]
     cluster = np.where(is_core, ids, np.int64(-1))
-    if labels:
-        lab_nodes = np.array([p for p, _ in labels], dtype=np.int64)
-        lab_vals = np.array([v for _, v in labels], dtype=np.int64)
-        pos = sort_ids[np.searchsorted(sorted_ids, lab_nodes)]
-        cluster[pos] = lab_vals
+    cluster[sort_ids[np.searchsorted(sorted_ids, lab_nodes)]] = lab_vals
     # border: non-core with >= 1 core neighbor -> min neighboring cluster
     bmask = ~is_core[a] & is_core[b]
-    border_min = np.full(n, np.iinfo(np.int64).max)
+    none = np.iinfo(np.int64).max
+    border_min = np.full(n, none)
     np.minimum.at(border_min, a[bmask], cluster[b[bmask]])
-    out = []
-    for i in range(n):
-        pid = int(ids[i])
-        if is_core[i]:
-            out.append((pid, int(cluster[i]), "core"))
-        elif border_min[i] != np.iinfo(np.int64).max:
-            out.append((pid, int(border_min[i]), "border"))
-        else:
-            out.append((pid, None, "noise"))
-    return out
+    noise = ~is_core & (border_min == none)
+    return pa.table({
+        "id": ids,
+        "cluster_id": pa.array(np.where(is_core, cluster, border_min), mask=noise),
+        "role": np.where(is_core, "core", np.where(noise, "noise", "border")),
+    })
 
 
 def dbscan(
@@ -194,7 +190,7 @@ def dbscan(
 
     # Small-input fast path: probe with limit(cap + 1) — if the point set
     # fits on the driver, the whole algorithm runs in numpy with identical
-    # arithmetic (one job + one createDataFrame instead of ~8 shuffle
+    # arithmetic (one job + one Arrow createDataFrame instead of ~8 shuffle
     # stages). The grid/CC composition below remains the at-scale path.
     if not LOCAL_DBSCAN_DISABLED:
         probe = (
@@ -213,7 +209,8 @@ def dbscan(
             )
             if local is not None:
                 return df.sparkSession.createDataFrame(
-                    local, f"{id_col} long, cluster_id long, role string"
+                    local.rename_columns([id_col, "cluster_id", "role"]),
+                    f"{id_col} long, cluster_id long, role string",
                 )
 
     pairs = eps_neighbor_pairs(df, id_col, x_col, y_col, eps).localCheckpoint(

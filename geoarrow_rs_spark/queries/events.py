@@ -68,10 +68,11 @@ def events_retention(spark, sf_dir):
 
 def events_funnel_windowed(spark, sf_dir):
     """Ordered 3-step funnel view -> click -> purchase within 7 days
-    (datapipe.events.funnel_counts): first-touch greedy matching, every
-    join/groupBy keyed on user_id, per-step user counts + exact
-    integer-ppm conversion vs step 1. The oracle replays the same staged
-    min-after-previous-step construction."""
+    (datapipe.events.funnel_counts): first-touch greedy matching as
+    windows over one user_id exchange, per-step user counts + exact
+    integer-ppm conversion vs step 1. The oracle is the staged
+    min-after-previous-step construction (join + groupBy per step), so it
+    checks the windowed plan independently."""
     from ..datapipe.events import funnel_counts
 
     e = _t(spark, sf_dir, "events")

@@ -841,3 +841,90 @@ def test_funnel_first_touch_semantics(spark):
     assert counts[1]["n_users"] == 3 and counts[1]["conv_ppm"] == 1000000
     assert counts[2]["n_users"] == 2 and counts[2]["conv_ppm"] == 666666
     assert counts[3]["n_users"] == 1 and counts[3]["conv_ppm"] == 333333
+
+
+def _staged_funnel(rows, steps, window):
+    """Pure-Python replica of the staged funnel definition: stage 1 groups
+    step-1 events by user (NULL user included, t1 = min non-NULL ts); each
+    later stage equi-joins the previous one on the user key (a NULL user
+    never matches) and keeps the earliest qualifying event."""
+    t1s = {}
+    for u, kind, t in rows:
+        if kind == steps[0]:
+            t1s.setdefault(u, []).append(t)
+    cur = {u: (min((t for t in ts if t is not None), default=None),)
+           for u, ts in t1s.items()}
+    stages = [cur]
+    for s in steps[1:]:
+        nxt = {}
+        for u, prev in cur.items():
+            cand = [t for uu, kind, t in rows
+                    if u is not None and uu == u and kind == s
+                    and t is not None and prev[-1] is not None and t > prev[-1]
+                    and (window is None or t <= prev[0] + window)]
+            if cand:
+                nxt[u] = prev + (min(cand),)
+        stages.append(nxt)
+        cur = nxt
+    n1 = len(stages[0])
+    counts = sorted(
+        (i, name, len(st), len(st) * 1000000 // n1 if n1 else 0)
+        for i, (name, st) in enumerate(zip(steps, stages), start=1)
+    )
+    return counts, sorted(((u,) + ts for u, ts in cur.items()), key=repr)
+
+
+def test_funnel_matches_staged_semantics(spark):
+    """funnel/funnel_counts against a replica of the staged definition on
+    seeded random logs with NULL users, NULL timestamps, repeated step
+    types, a one-step funnel, and both an open and a capped window. The
+    crafted prefix pins three edge cases: a NULL user counts at step 1
+    only; a user whose step-1 events all have NULL ts still counts at
+    step 1; and a one-step funnel() keeps that user (with t1 NULL)."""
+    from pyspark.sql.types import (
+        IntegerType, LongType, StringType, StructField, StructType,
+    )
+
+    from geoarrow_rs_spark.datapipe.events import funnel, funnel_counts
+
+    crafted = [
+        (None, "view", 1), (None, "cart", 2), (None, "buy", 3),
+        (7, "view", None), (7, "view", None), (7, "cart", 5),
+        (8, "view", 4), (8, "view", 6), (8, "buy", 9),
+    ]
+    schema = "user_id long, event_type string, ts long"
+    count_schema = StructType([
+        StructField("step", IntegerType(), False),
+        StructField("step_name", StringType(), False),
+        StructField("n_users", LongType(), False),
+        StructField("conv_ppm", LongType(), True),
+    ])
+    cases = [
+        (["view", "cart", "buy"], None), (["view", "cart", "buy"], 15),
+        (["view", "view", "buy"], None), (["view", "view", "buy"], 15),
+        (["view"], None), (["view"], 15),
+    ]
+    for seed, (steps, window) in enumerate(cases):
+        r = random.Random(seed)
+        rows = crafted + [
+            (r.choice([None, 0, 1, 2, 3, 4, 5]),
+             r.choice(["view", "cart", "buy", "other", None]),
+             r.choice([None] + list(range(40))))
+            for _ in range(60)
+        ]
+        e = spark.createDataFrame(rows, schema)
+        want_counts, want_rows = _staged_funnel(rows, steps, window)
+        got = funnel_counts(e, steps, window=window)
+        assert got.schema == count_schema
+        assert sorted(map(tuple, got.collect())) == want_counts, (steps, window)
+        done = funnel(e, steps, window=window)
+        assert done.schema == StructType(
+            [StructField("user_id", LongType(), True)]
+            + [StructField(f"t{i}", LongType(), True) for i in range(1, len(steps) + 1)]
+        )
+        assert sorted(map(tuple, done.collect()), key=repr) == want_rows, (steps, window)
+        if steps == ["view"]:
+            assert {None, 7}.issubset(u for u, *_ in want_rows)
+        else:
+            assert None not in {u for u, *_ in want_rows}
+        assert want_counts[0][2] >= 3  # NULL user, user 7 and user 8 start

@@ -169,7 +169,11 @@ def test_null_coordinates_are_excluded_not_fatal(spark):
 def test_local_fast_paths_match_distributed(spark):
     """The driver-local kNN / DBSCAN / connected-components fast paths
     must produce row-identical results to the distributed plans they
-    replace (same resolution rules, tie-breaks and IEEE arithmetic)."""
+    replace (same resolution rules, tie-breaks and IEEE arithmetic).
+    Two inputs: uniform points (kNN self-join), and points on a half-unit
+    lattice (tied distances) queried by the same points plus a few far
+    outside the candidates' extent (these reach the brute-force
+    fallback)."""
     import numpy as np
 
     from geoarrow_rs_spark.datapipe import dedup as D
@@ -177,20 +181,32 @@ def test_local_fast_paths_match_distributed(spark):
     from geoarrow_rs_spark.ops import dbscan as DB
 
     rng = np.random.default_rng(11)
+    schema = "id long, x double, y double"
     pts = [(i, float(x), float(y))
            for i, (x, y) in enumerate(rng.uniform(0, 12, (300, 2)))]
-    df = spark.createDataFrame(pts, "id long, x double, y double")
+    df = spark.createDataFrame(pts, schema)
+    lattice = spark.createDataFrame(
+        [(i, float(x), float(y))
+         for i, (x, y) in enumerate(np.round(rng.uniform(0, 12, (300, 2)) * 2) / 2)],
+        schema,
+    )
+    far = spark.createDataFrame(
+        [(1000 + i, float(x), float(y))
+         for i, (x, y) in enumerate(rng.uniform(60, 90, (12, 2)))],
+        schema,
+    )
+    inputs = [(df, df), (lattice.unionByName(far), lattice)]
 
-    def knn_rows():
+    def knn_rows(left, right):
         return sorted(
             (r["l_id"], r["r_id"], r["rn"], round(r["dist"], 12))
-            for r in knn_spatial_join(df, df, k=4, cell_size=2.0).collect()
+            for r in knn_spatial_join(left, right, k=4, cell_size=2.0).collect()
         )
 
-    def db_rows():
+    def db_rows(right):
         return sorted(
             (r["id"], r["cluster_id"], r["role"])
-            for r in dbscan(df, "id", "x", "y", eps=1.0, min_pts=4).collect()
+            for r in dbscan(right, "id", "x", "y", eps=1.0, min_pts=4).collect()
         )
 
     pairs = spark.createDataFrame(
@@ -204,16 +220,22 @@ def test_local_fast_paths_match_distributed(spark):
 
         return sorted(map(tuple, dedup_clusters(ids, pairs).collect()))
 
-    local = (knn_rows(), db_rows(), cc_rows())
+    def all_rows():
+        return ([knn_rows(lf, rt) for lf, rt in inputs],
+                [db_rows(rt) for _, rt in inputs], cc_rows())
+
+    local = all_rows()
     SP.LOCAL_KNN_DISABLED = True
     DB.LOCAL_DBSCAN_DISABLED = True
     D.LOCAL_CC_DISABLED = True
     try:
-        dist = (knn_rows(), db_rows(), cc_rows())
+        dist = all_rows()
     finally:
         SP.LOCAL_KNN_DISABLED = False
         DB.LOCAL_DBSCAN_DISABLED = False
         D.LOCAL_CC_DISABLED = False
+    # the far queries get all k neighbors, ranked 1..k
+    assert sum(1 for r in local[0][1] if r[0] >= 1000) == 12 * 4
     assert local[0] == dist[0]
     assert local[1] == dist[1]
     assert local[2] == dist[2]

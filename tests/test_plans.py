@@ -508,6 +508,28 @@ def test_window_analytics_single_exchange(spark, sf_dir):
         assert n <= max_ex, (fn.__name__, n, max_ex)
 
 
+def test_funnel_counts_is_one_exchange_and_builds_without_jobs(spark):
+    """funnel_counts is one checkpoint-free plan: building it launches no
+    job, and its plan shuffles the events exactly once, by user."""
+    from geoarrow_rs_spark.datapipe.events import funnel_counts
+
+    events = spark.range(400).select(
+        (F.col("id") % 37).alias("user_id"),
+        F.element_at(F.array(*map(F.lit, ("view", "cart", "buy", "x"))),
+                     (F.col("id") % 4 + 1).cast("int")).alias("event_type"),
+        (F.col("id") * 7919 % 1000).alias("ts"),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = len(tracker.getJobIdsForGroup() or [])
+    out = funnel_counts(events, ["view", "cart", "buy"], window=500)
+    jobs_after = len(tracker.getJobIdsForGroup() or [])
+    assert jobs_after == jobs_before, "funnel_counts launched a job at build time"
+    plan = _plan(out)
+    assert plan.count("Exchange hashpartitioning(user_id") == 1, plan
+    assert "ExistingRDD" not in plan, plan  # no checkpoint scan
+    assert len(out.collect()) == 3
+
+
 def test_mmr_and_mixture_and_budget_fill_plans(spark, sf_dir):
     """Round-4 pipeline operators stay native and scale-shaped:
     mmr_rerank plans no Python eval and no CartesianProduct (its joins
