@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..checkpoint import checkpoint_df
+from ..checkpoint import checkpoint_df, collect_small
 
 from .text import char_ngrams
 
@@ -293,9 +293,6 @@ def simhash_near_pairs(
     )
 
 
-LOCAL_CC_DISABLED = __import__("os").environ.get(
-    "SPARK_GRAFT_DISABLE_LOCAL_CC", ""
-) == "1"
 _LOCAL_CC_MAX_EDGES = 2_000_000
 
 
@@ -349,7 +346,7 @@ def dedup_clusters(
     handful in practice) — unlike plain min-label propagation, whose
     round count equals the component DIAMETER and silently truncates
     long chains (road networks, drifting near-dup chains) at the
-    iteration cap. Each round materializes via localCheckpoint so
+    iteration cap. Each round materializes via checkpoint_df so
     lineage stays flat; convergence is detected by a (count, hash-sum)
     signature — two cheap aggregates, no edge-set diff join."""
     raw_edges = pairs.select(
@@ -364,24 +361,23 @@ def dedup_clusters(
     # (component minimum). No distinct shuffle, no checkpoint, no rounds.
     # Oversized graphs waste only the bounded probe and take the
     # distributed large-star/small-star loop — the 100 TB path.
-    if not LOCAL_CC_DISABLED:
-        probe = raw_edges.limit(_LOCAL_CC_MAX_EDGES + 1).toPandas()
-        if len(probe) <= _LOCAL_CC_MAX_EDGES:
-            import pyarrow as pa
+    probe = collect_small(raw_edges, _LOCAL_CC_MAX_EDGES)
+    if probe is not None:
+        import pyarrow as pa
 
-            ids = df.select(F.col(id_col).cast("long").alias(id_col))
-            local = _cc_local(probe["hi"].to_numpy(), probe["lo"].to_numpy())
-            if local is not None:
-                # Arrow hand-back: no per-row pickling through parallelize
-                labels = pairs.sparkSession.createDataFrame(
-                    pa.table({"node": local[0], "label": local[1]}),
-                    "node long, label long",
-                )
-                return ids.join(labels, ids[id_col] == labels.node, "left").select(
-                    id_col, F.coalesce("label", F.col(id_col)).alias("cluster_id")
-                )
+        ids = df.select(F.col(id_col).cast("long").alias(id_col))
+        local = _cc_local(probe["hi"].to_numpy(), probe["lo"].to_numpy())
+        if local is not None:
+            # Arrow hand-back: no per-row pickling through parallelize
+            labels = pairs.sparkSession.createDataFrame(
+                pa.table({"node": local[0], "label": local[1]}),
+                "node long, label long",
+            )
+            return ids.join(labels, ids[id_col] == labels.node, "left").select(
+                id_col, F.coalesce("label", F.col(id_col)).alias("cluster_id")
+            )
 
-    edges = raw_edges.distinct().localCheckpoint(eager=True)
+    edges = checkpoint_df(raw_edges.distinct(), eager=True)
 
     def _sig(E):
         r = E.agg(
@@ -413,12 +409,12 @@ def dedup_clusters(
         # rewire to the minimum, and u links there too
         mins2 = ls.groupBy("hi").agg(F.min("lo").alias("m"))
         joined = ls.join(mins2, "hi")
-        edges = (
+        edges = checkpoint_df(
             joined.filter(F.col("lo") != F.col("m"))
             .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
             .union(joined.select("hi", F.col("m").alias("lo")))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            eager=True,
         )
         new_sig = _sig(edges)
         if new_sig == sig:

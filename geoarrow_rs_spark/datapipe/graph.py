@@ -18,42 +18,28 @@ small-star contraction); this module adds the weighted-centrality side.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..checkpoint import checkpoint_df
+from ..checkpoint import checkpoint_df, collect_small
 
 _DEC = "decimal(38,12)"
 
 # k_core local fast path: when the canonical edge list is small (gated by
-# an exact count over the already-materialized checkpoint — the
-# distributed rounds would materialize it anyway), peel driver-locally
-# instead of paying ~3 shuffle stages per round. Pure integer set logic,
-# bit-identical to the distributed rounds by construction.
-LOCAL_KCORE_DISABLED = (
-    _os.environ.get("SPARK_GRAFT_DISABLE_LOCAL_KCORE", "") == "1"
-)
-_LOCAL_KCORE_MAX_EDGES = int(
-    _os.environ.get("SPARK_GRAFT_LOCAL_KCORE_MAX_EDGES", str(2_000_000))
-)
+# a bounded collect_small probe over the checkpoint the distributed rounds
+# would materialize anyway), peel driver-locally instead of paying ~3
+# shuffle stages per round. Pure integer set logic, bit-identical to the
+# distributed rounds by construction.
+_LOCAL_KCORE_MAX_EDGES = 2_000_000
 
-# pagerank local fast path: same gate design (exact counts over inputs the
-# distributed rounds would materialize anyway), with every decimal /
+# pagerank local fast path: same gate design (bounded probes over inputs
+# the distributed rounds would materialize anyway), with every decimal /
 # rounding step replicated exactly (see the replica rules block in
 # datapipe/similarity.py): CAST(double AS DECIMAL(38,12)) ==
 # Decimal(repr(x)) HALF_UP at 12 dp, decimal SUM exact, CAST(decimal AS
 # DOUBLE) == float(Decimal), round(double, 12) == the shortest-repr
 # HALF_UP replica.
-LOCAL_PAGERANK_DISABLED = (
-    _os.environ.get("SPARK_GRAFT_DISABLE_LOCAL_PAGERANK", "") == "1"
-)
-_LOCAL_PAGERANK_MAX_EDGES = int(
-    _os.environ.get("SPARK_GRAFT_LOCAL_PAGERANK_MAX_EDGES", str(1_000_000))
-)
-_LOCAL_PAGERANK_MAX_NODES = int(
-    _os.environ.get("SPARK_GRAFT_LOCAL_PAGERANK_MAX_NODES", str(1_000_000))
-)
+_LOCAL_PAGERANK_MAX_EDGES = 1_000_000
+_LOCAL_PAGERANK_MAX_NODES = 1_000_000
 
 
 def _pagerank_local(node_ids, directed_edges, iters, damping):
@@ -93,15 +79,10 @@ def _pagerank_local(node_ids, directed_edges, iters, damping):
     return [(v, pr[v]) for v in node_ids]
 
 
-# neighborhood_function (HyperBall/KMV) local fast path: same gate/kill-
-# switch design; the md5 node hashes, k-smallest-distinct merges and the
-# HALF_UP micro-unit estimates are replicated exactly.
-LOCAL_ANF_DISABLED = (
-    _os.environ.get("SPARK_GRAFT_DISABLE_LOCAL_ANF", "") == "1"
-)
-_LOCAL_ANF_MAX_EDGES = int(
-    _os.environ.get("SPARK_GRAFT_LOCAL_ANF_MAX_EDGES", str(500_000))
-)
+# neighborhood_function (HyperBall/KMV) local fast path: same gate
+# design; the md5 node hashes, k-smallest-distinct merges and the HALF_UP
+# micro-unit estimates are replicated exactly.
+_LOCAL_ANF_MAX_EDGES = 500_000
 
 
 def _anf_local(directed_edges, k, hops, salt):
@@ -182,34 +163,34 @@ def pagerank(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    E = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    if not LOCAL_PAGERANK_DISABLED and not (
-        pairs.isStreaming or nodes.isStreaming
+    E = checkpoint_df(
+        edges.union(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ),
+        eager=True,
+    )
+    # bounded probes (E is already materialized above), so nothing big is
+    # ever pulled to the driver
+    ep = collect_small(E, _LOCAL_PAGERANK_MAX_EDGES)
+    npdf = None if ep is None else collect_small(
+        nodes.select(F.col(id_col).cast("long").alias("n")),
+        _LOCAL_PAGERANK_MAX_NODES,
+    )
+    # no nodes, a NULL node id (the column comes back as float) or a
+    # duplicate one: take the distributed rounds
+    if (
+        npdf is not None
+        and len(npdf)
+        and npdf["n"].dtype.kind == "i"
+        and npdf["n"].is_unique
     ):
-        # counts gate the collects (E is already materialized above; the
-        # node count is a column-pruned aggregate), so nothing big is
-        # ever pulled to the driver
-        if E.count() <= _LOCAL_PAGERANK_MAX_EDGES:
-            n_nodes = nodes.count()
-            if 0 < n_nodes <= _LOCAL_PAGERANK_MAX_NODES:
-                node_ids = [
-                    r[0]
-                    for r in nodes.select(
-                        F.col(id_col).cast("long")
-                    ).collect()
-                ]
-                if len(set(node_ids)) == len(node_ids):
-                    directed = [(r[0], r[1]) for r in E.collect()]
-                    out = _pagerank_local(
-                        node_ids, directed, iters, damping
-                    )
-                    return nodes.sparkSession.createDataFrame(
-                        out, f"{id_col} long, pr double"
-                    )
+        directed = list(zip(ep["src"].tolist(), ep["dst"].tolist()))
+        out = _pagerank_local(npdf["n"].tolist(), directed, iters, damping)
+        return nodes.sparkSession.createDataFrame(
+            out, f"{id_col} long, pr double"
+        )
     deg = E.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
-    ED = E.join(deg, on="src").localCheckpoint(eager=True)
+    ED = checkpoint_df(E.join(deg, on="src"), eager=True)
 
     nn = nodes.agg(F.count(F.lit(1)).alias("__N"))
     base = nodes.select(F.col(id_col).cast("long").alias("node")).crossJoin(
@@ -272,7 +253,7 @@ def triangle_count(
     # e is referenced three times (degree union x2, the orientation join)
     # and directed three more (both wedge sides + the closing-edge check):
     # checkpoint each so the upstream pair generation runs once
-    e = e.localCheckpoint(eager=False)
+    e = checkpoint_df(e, eager=False)
     deg = (
         e.select(F.col("a").alias("n"))
         .unionAll(e.select(F.col("b").alias("n")))
@@ -285,11 +266,14 @@ def triangle_count(
     fwd = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    directed = ed.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=False)
+    directed = checkpoint_df(
+        ed.select(
+            F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dv"),
+        ),
+        eager=False,
+    )
     d1 = directed.select("u", F.col("v").alias("v1"), F.col("dv").alias("dv1"))
     d2 = directed.select("u", F.col("v").alias("v2"), F.col("dv").alias("dv2"))
     wedges = d1.join(d2, "u").where(
@@ -351,19 +335,19 @@ def neighborhood_function(
     # the edge list joins into EVERY round; checkpoint it once so its
     # upstream lineage (e.g. minhash pair generation) runs once, not
     # once per hop
-    e = e.localCheckpoint(eager=False)
-    if not LOCAL_ANF_DISABLED and not pairs.isStreaming:
-        # the count materializes the checkpoint (the distributed rounds'
-        # first action would too) and gates the collect
-        if e.count() <= _LOCAL_ANF_MAX_EDGES:
-            directed = [(r[0], r[1]) for r in e.collect()]
-            out = _anf_local(directed, k, hops, salt)
-            schema = ", ".join(
-                ["node long"]
-                + [f"n{h} double" for h in range(1, hops + 1)]
-                + ["harmonic double"]
-            )
-            return pairs.sparkSession.createDataFrame(out, schema)
+    e = checkpoint_df(e, eager=False)
+    # the bounded probe materializes the checkpoint (the distributed
+    # rounds' first action would too)
+    probe = collect_small(e, _LOCAL_ANF_MAX_EDGES)
+    if probe is not None:
+        directed = list(zip(probe["src"].tolist(), probe["dst"].tolist()))
+        out = _anf_local(directed, k, hops, salt)
+        schema = ", ".join(
+            ["node long"]
+            + [f"n{h} double" for h in range(1, hops + 1)]
+            + ["harmonic double"]
+        )
+        return pairs.sparkSession.createDataFrame(out, schema)
     from .dedup import gram_hash_expr
 
     h_expr = gram_hash_expr(
@@ -409,7 +393,7 @@ def neighborhood_function(
         )
         # truncate lineage so round r+1's plan doesn't re-run rounds 1..r
         # per reference (blocks released on dereference, unlike cache)
-        state = state.localCheckpoint(eager=False)
+        state = checkpoint_df(state, eager=False)
         ests.append(
             state.select("node", est_micro(F.col("hs")).alias(f"__n{h}"))
         )
@@ -470,33 +454,32 @@ def k_core(
     # probe side); checkpoint so the upstream pair generation runs once
     # (checkpoint_df: reliable-checkpoint escape hatch for real clusters)
     e = checkpoint_df(e, eager=False)
-    if not LOCAL_KCORE_DISABLED and not pairs.isStreaming:
-        # the count materializes the checkpoint (the distributed rounds'
-        # first action would too) and gates the collect, so nothing big
-        # is ever pulled to the driver
-        n_edges = e.count()
-        if n_edges <= _LOCAL_KCORE_MAX_EDGES:
-            edges = [(r[0], r[1]) for r in e.collect()]
-            prev_n = None
-            for _ in range(rounds):
-                deg: dict = {}
-                for a, b in edges:
-                    deg[a] = deg.get(a, 0) + 1
-                    deg[b] = deg.get(b, 0) + 1
-                keep = {n for n, d in deg.items() if d >= k}
-                edges = [(a, b) for a, b in edges if a in keep and b in keep]
-                if early_stop:
-                    if prev_n is not None and len(edges) == prev_n:
-                        break
-                    prev_n = len(edges)
-            deg = {}
+    # the bounded probe materializes the checkpoint (the distributed
+    # rounds' first action would too), so nothing big is ever pulled to
+    # the driver
+    probe = collect_small(e, _LOCAL_KCORE_MAX_EDGES)
+    if probe is not None:
+        edges = list(zip(probe["a"].tolist(), probe["b"].tolist()))
+        prev_n = None
+        for _ in range(rounds):
+            deg: dict = {}
             for a, b in edges:
                 deg[a] = deg.get(a, 0) + 1
                 deg[b] = deg.get(b, 0) + 1
-            out = sorted((n, d) for n, d in deg.items() if d >= k)
-            return pairs.sparkSession.createDataFrame(
-                out, "node long, core_deg long"
-            )
+            keep = {n for n, d in deg.items() if d >= k}
+            edges = [(a, b) for a, b in edges if a in keep and b in keep]
+            if early_stop:
+                if prev_n is not None and len(edges) == prev_n:
+                    break
+                prev_n = len(edges)
+        deg = {}
+        for a, b in edges:
+            deg[a] = deg.get(a, 0) + 1
+            deg[b] = deg.get(b, 0) + 1
+        out = sorted((n, d) for n, d in deg.items() if d >= k)
+        return pairs.sparkSession.createDataFrame(
+            out, "node long, core_deg long"
+        )
     prev_edges = None
     for _ in range(rounds):
         deg = (
@@ -506,11 +489,11 @@ def k_core(
             .count()
         )
         keep = deg.where(F.col("count") >= k).select("n")
-        e = (
+        e = checkpoint_df(
             e.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=False)
+            .select("a", "b"),
+            eager=False,
         )
         if early_stop:
             cnt = e.count()

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..checkpoint import checkpoint_df
+from ..checkpoint import checkpoint_df, collect_small
 
 
 def dot_expr(v1, v2):
@@ -408,10 +408,10 @@ def assign_clusters(
 #
 # faiss-style practice: k-means / PQ codebooks train on a sample that fits
 # in one machine; only corpus ASSIGNMENT and search need the cluster. When
-# Catalyst's plan-time size estimate says the training input is small, we
-# collect it and run the SAME algorithm locally — bit-identical to the
-# distributed pipeline (and therefore to the SQL oracles) because every
-# decimal operation is replicated exactly:
+# a bounded row probe (checkpoint.collect_small) says the training input
+# is small, we collect it and run the SAME algorithm locally —
+# bit-identical to the distributed pipeline (and therefore to the SQL
+# oracles) because every decimal operation is replicated exactly:
 #   - CAST(double AS DECIMAL(38,12)) == Decimal(repr(x)) HALF_UP at 12 dp
 #     (JVM BigDecimal.valueOf uses the shortest round-trip repr, as repr())
 #   - dist2_decimal_expr's fold widens each (38,12)+(38,12) step to (38,11)
@@ -423,7 +423,6 @@ def assign_clusters(
 # is numpy while every tie resolves exactly as Spark would.
 # ---------------------------------------------------------------------------
 
-import os as _os
 from decimal import ROUND_HALF_UP as _HALF_UP, Decimal as _Dec
 
 import numpy as _np
@@ -431,8 +430,7 @@ import numpy as _np
 _E12 = _Dec("1e-12")
 _E11 = _Dec("1e-11")
 
-LOCAL_TRAIN_DISABLED = _os.environ.get("SPARK_GRAFT_DISABLE_LOCAL_TRAIN", "") == "1"
-_LOCAL_TRAIN_MAX_BYTES = 256 << 20
+_LOCAL_TRAIN_MAX_ROWS = 100_000
 
 
 def _dec12(x) -> _Dec:
@@ -450,31 +448,17 @@ def _fold_d2(a, b) -> _Dec:
     return acc
 
 
-def _plan_size_bytes(df: DataFrame):
-    """Catalyst plan-time size estimate — no job (same trick as the auto
-    spatial-join strategy)."""
-    try:
-        if df.isStreaming:
-            return None
-        jstats = df._jdf.queryExecution().optimizedPlan().stats()
-        size = jstats.sizeInBytes()
-        # Py4J maps scala BigInt to a Python int directly; older bridges
-        # hand back the Java object
-        return size if isinstance(size, int) else int(size.toString())
-    except Exception:
-        return None
-
-
 def _collect_if_small(corpus: DataFrame, id_col: str, vec: str):
-    """[(id, [float, ...])] sorted by id if the training input is estimated
-    small enough to collect, else None (caller uses the distributed path)."""
-    if LOCAL_TRAIN_DISABLED:
+    """[(id, [float, ...])] sorted by id if the training input holds at
+    most ``_LOCAL_TRAIN_MAX_ROWS`` rows, else None (caller uses the
+    distributed path)."""
+    pdf = collect_small(corpus.select(id_col, vec), _LOCAL_TRAIN_MAX_ROWS)
+    if pdf is None:
         return None
-    size = _plan_size_bytes(corpus)
-    if size is None or size > _LOCAL_TRAIN_MAX_BYTES:
-        return None
-    rows = corpus.select(id_col, vec).collect()
-    rows = [(r[0], [float(x) for x in r[1]]) for r in rows]
+    rows = [
+        (i, [float(x) for x in v])
+        for i, v in zip(pdf[id_col].tolist(), pdf[vec])
+    ]
     rows.sort(key=lambda r: r[0])
     return rows
 
@@ -817,7 +801,7 @@ def pq_train(
         cents = _pq_train_local(local_rows, m, k_codes, iters, w)
         if cents is not None:
             return cents
-    sub = _subspace_rows(corpus, vec, id_col, m, w).localCheckpoint(eager=True)
+    sub = checkpoint_df(_subspace_rows(corpus, vec, id_col, m, w), eager=True)
 
     init = (
         corpus.orderBy(id_col).limit(k_codes).selectExpr(
@@ -1223,7 +1207,6 @@ def load_pq_codebooks(spark, path: str) -> list:
     )
 
 
-LOCAL_MMR_DISABLED = _os.environ.get("SPARK_GRAFT_DISABLE_LOCAL_MMR", "") == "1"
 _MMR_LOCAL_MAX_ROWS = 100_000  # ~60 MB of (ids, rel, 64-dim vec) rows
 
 
@@ -1351,43 +1334,44 @@ def mmr_rerank(
     # Driver-local fast path (same design rules as the k-means/PQ/CC local
     # paths, SCALE.md): the candidate table is |queries| x fetch rows by
     # construction, and the unrolled plan pays k rounds of driver-
-    # synchronous stages for kilobyte-scale state. Gate = a bounded
-    # limit(cap + 1) probe — the Catalyst size estimate is useless here
-    # (a post-window cross-join lineage estimates at petabytes), and the
-    # probe's cost is bounded by the cap even on huge inputs. Kill switch
-    # SPARK_GRAFT_DISABLE_LOCAL_MMR=1; output bit-identical to the
-    # distributed plan (equality-tested).
-    if not LOCAL_MMR_DISABLED and not cands.isStreaming:
-        probe = base.select(qid, cid, "__rel8", "__reli", "__v").limit(
-            _MMR_LOCAL_MAX_ROWS + 1
-        ).collect()
-        if len(probe) <= _MMR_LOCAL_MAX_ROWS:
-            rows = [
-                (r[0], r[1], r[2], r[3], [float(x) for x in r[4]])
-                for r in probe
-            ]
-            out = _mmr_local(rows, k, lam_i, scale, f"1E-{round_to}")
-            from pyspark.sql import types as T
-
-            in_schema = {f.name: f.dataType for f in base.schema.fields}
-            schema = T.StructType([
-                T.StructField(qid, in_schema[qid]),
-                T.StructField(cid, in_schema[cid]),
-                T.StructField("mmr_rank", T.IntegerType(), False),
-                T.StructField("mmr_score", T.DoubleType(), True),
-            ])
-            spark = cands.sparkSession
-            return spark.createDataFrame(
-                [(o[0], o[1], o[2], o[3]) for o in out], schema
+    # synchronous stages for kilobyte-scale state. Gate = the bounded
+    # collect_small probe, whose cost is bounded by the cap even on huge
+    # inputs. Output bit-identical to the distributed plan
+    # (equality-tested).
+    probe = collect_small(
+        base.select(qid, cid, "__rel8", "__reli", "__v"), _MMR_LOCAL_MAX_ROWS
+    )
+    if probe is not None:
+        rows = [
+            (q, c, rel, reli, [float(x) for x in v])
+            for q, c, rel, reli, v in zip(
+                probe[qid].tolist(), probe[cid].tolist(),
+                probe["__rel8"].tolist(), probe["__reli"].tolist(),
+                probe["__v"],
             )
+        ]
+        out = _mmr_local(rows, k, lam_i, scale, f"1E-{round_to}")
+        from pyspark.sql import types as T
+
+        in_schema = {f.name: f.dataType for f in base.schema.fields}
+        schema = T.StructType([
+            T.StructField(qid, in_schema[qid]),
+            T.StructField(cid, in_schema[cid]),
+            T.StructField("mmr_rank", T.IntegerType(), False),
+            T.StructField("mmr_score", T.DoubleType(), True),
+        ])
+        spark = cands.sparkSession
+        return spark.createDataFrame(
+            [(o[0], o[1], o[2], o[3]) for o in out], schema
+        )
 
     # every greedy round references the candidate table 2-3 times; without
     # this the upstream RETRIEVAL lineage would re-execute per reference.
-    # localCheckpoint (not cache) so the materialized blocks are released
+    # A checkpoint (not cache) so the materialized blocks are released
     # by the ContextCleaner when the result is dereferenced — cache()
     # would pin them in executor storage for the session's lifetime with
     # no safe point to unpersist.
-    base = base.localCheckpoint(eager=False)
+    base = checkpoint_df(base, eager=False)
     w1 = Window.partitionBy(qid).orderBy(F.desc("__reli"), F.asc(cid))
     sel = (
         base.withColumn("__rn", F.row_number().over(w1))

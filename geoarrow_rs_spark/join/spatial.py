@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..checkpoint import checkpoint_df, collect_small
 from ..functions.registry import bbox_overlap_expr
 
 
@@ -234,9 +235,6 @@ def _refine_expr(predicate: str, lg: str, rg: str):
     return F.expr(f"{fn}({lg}, {rg})")
 
 
-LOCAL_KNN_DISABLED = __import__("os").environ.get(
-    "SPARK_GRAFT_DISABLE_LOCAL_KNN", ""
-) == "1"
 # diagnostic escape hatch: pin the distributed kNN grid to the caller's
 # cell_size instead of sizing it from the right side's measured density
 ADAPTIVE_KNN_CELL_DISABLED = __import__("os").environ.get(
@@ -441,41 +439,38 @@ def knn_spatial_join(
     # resolution rule, same escalation ladder, same dist expression, same
     # (dist, r_id) tie-break) runs vectorized in numpy: two bounded jobs
     # + one Arrow createDataFrame instead of per-round shuffle stages.
-    if not LOCAL_KNN_DISABLED:
+    lp = collect_small(L, _LOCAL_KNN_MAX)
+    if lp is not None:
         self_join = (
             right is left and left_id == right_id and tuple(left_xy) == tuple(right_xy)
         )
-        lp = L.limit(_LOCAL_KNN_MAX + 1).toPandas()
-        if len(lp) <= _LOCAL_KNN_MAX:
-            if self_join:
-                rp = lp.rename(
-                    columns={"l_id": "r_id", "lx": "rx", "ly": "ry"}
-                )
-            else:
-                rp = R.limit(_LOCAL_KNN_MAX + 1).toPandas()
-            if len(rp) <= _LOCAL_KNN_MAX:
-                local = _knn_local(
-                    lp["l_id"].to_numpy(), lp["lx"].to_numpy(), lp["ly"].to_numpy(),
-                    rp["r_id"].to_numpy(), rp["rx"].to_numpy(), rp["ry"].to_numpy(),
-                    k, cs, max_radius_cells,
-                )
-                if local is not None:
-                    import numpy as np
-                    import pandas as pd
+        if self_join:
+            rp = lp.rename(columns={"l_id": "r_id", "lx": "rx", "ly": "ry"})
+        else:
+            rp = collect_small(R, _LOCAL_KNN_MAX)
+        if rp is not None:
+            local = _knn_local(
+                lp["l_id"].to_numpy(), lp["lx"].to_numpy(), lp["ly"].to_numpy(),
+                rp["r_id"].to_numpy(), rp["rx"].to_numpy(), rp["ry"].to_numpy(),
+                k, cs, max_radius_cells,
+            )
+            if local is not None:
+                import numpy as np
+                import pandas as pd
 
-                    pdf = pd.DataFrame(
-                        {
-                            "l_id": np.asarray(local[0], dtype=np.int64),
-                            "r_id": np.asarray(local[1], dtype=np.int64),
-                            "rn": np.asarray(local[2], dtype=np.int32),
-                            "dist": np.asarray(local[3], dtype=np.float64),
-                        }
-                    )
-                    # Arrow path (no nulls, fixed dtypes) — avoids
-                    # pickling n*k rows through parallelize
-                    return left.sparkSession.createDataFrame(pdf)
+                pdf = pd.DataFrame(
+                    {
+                        "l_id": np.asarray(local[0], dtype=np.int64),
+                        "r_id": np.asarray(local[1], dtype=np.int64),
+                        "rn": np.asarray(local[2], dtype=np.int32),
+                        "dist": np.asarray(local[3], dtype=np.float64),
+                    }
+                )
+                # Arrow path (no nulls, fixed dtypes) — avoids
+                # pickling n*k rows through parallelize
+                return left.sparkSession.createDataFrame(pdf)
 
-    R = R.localCheckpoint(eager=True)
+    R = checkpoint_df(R, eager=True)
 
     # Density-adaptive cell size (distributed path only; results are
     # provably invariant to cell size — the (2R+1)^2 probe square plus the
@@ -545,7 +540,7 @@ def knn_spatial_join(
         )
 
     out = []
-    remaining = L.localCheckpoint(eager=True)
+    remaining = checkpoint_df(L, eager=True)
     n_rem = remaining.count()
     radius = 1
     while radius <= max_radius_eff and n_rem > 0:
@@ -576,16 +571,20 @@ def knn_spatial_join(
         # checkpoint the resolved top-k ONCE; both the emitted rows and
         # the anti-join read it, so the candidate join + window never
         # recompute (they are the round's dominant cost)
-        resolved = ranked.filter(
-            (F.col("cnt") >= k)
-            & (F.col("kdist") <= F.lit(radius * cs_eff))
-            & (F.col("rn") <= k)
-        ).select("l_id", "r_id", "rn", "dist").localCheckpoint(eager=True)
+        resolved = checkpoint_df(
+            ranked.filter(
+                (F.col("cnt") >= k)
+                & (F.col("kdist") <= F.lit(radius * cs_eff))
+                & (F.col("rn") <= k)
+            ).select("l_id", "r_id", "rn", "dist"),
+            eager=True,
+        )
         out.append(resolved)
-        remaining = (
+        remaining = checkpoint_df(
             remaining.join(
                 resolved.select("l_id").distinct(), on="l_id", how="left_anti"
-            ).localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         n_rem = remaining.count()  # cheap: counts the checkpointed blocks
         radius *= 2

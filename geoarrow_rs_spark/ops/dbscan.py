@@ -10,7 +10,7 @@ engine's existing scale patterns — no new physical machinery:
    spatial-join candidate plan, so no all-pairs stage ever exists;
 2. core points = neighbor count >= min_pts (map-side combinable count);
 3. cluster ids = connected components over core-core edges, reusing the
-   min-label-propagation loop from datapipe.dedup (localCheckpoint per
+   min-label-propagation loop from datapipe.dedup (a checkpoint per
    round, driver checks convergence only);
 4. border points take the smallest cluster id among their core
    neighbors (deterministic, unlike "first reached" textbook DBSCAN);
@@ -23,6 +23,8 @@ exactly as far as the spatial join and dedup clustering it is built from.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..checkpoint import checkpoint_df, collect_small
 
 _PACK = 1 << 21
 
@@ -79,9 +81,6 @@ def eps_neighbor_pairs(
     )
 
 
-LOCAL_DBSCAN_DISABLED = __import__("os").environ.get(
-    "SPARK_GRAFT_DISABLE_LOCAL_DBSCAN", ""
-) == "1"
 _LOCAL_DBSCAN_MAX_POINTS = 30_000
 _LOCAL_DBSCAN_MAX_EDGES = 5_000_000
 
@@ -192,37 +191,36 @@ def dbscan(
     # fits on the driver, the whole algorithm runs in numpy with identical
     # arithmetic (one job + one Arrow createDataFrame instead of ~8 shuffle
     # stages). The grid/CC composition below remains the at-scale path.
-    if not LOCAL_DBSCAN_DISABLED:
-        probe = (
-            df.select(
-                F.col(id_col).cast("long").alias("pid"),
-                F.col(x_col).cast("double").alias("px"),
-                F.col(y_col).cast("double").alias("py"),
-            )
-            .limit(_LOCAL_DBSCAN_MAX_POINTS + 1)
-            .toPandas()
+    probe = collect_small(
+        df.select(
+            F.col(id_col).cast("long").alias("pid"),
+            F.col(x_col).cast("double").alias("px"),
+            F.col(y_col).cast("double").alias("py"),
+        ),
+        _LOCAL_DBSCAN_MAX_POINTS,
+    )
+    if probe is not None:
+        local = _dbscan_local(
+            probe["pid"].to_numpy(), probe["px"].to_numpy(),
+            probe["py"].to_numpy(), eps, min_pts,
         )
-        if len(probe) <= _LOCAL_DBSCAN_MAX_POINTS:
-            local = _dbscan_local(
-                probe["pid"].to_numpy(), probe["px"].to_numpy(),
-                probe["py"].to_numpy(), eps, min_pts,
+        if local is not None:
+            return df.sparkSession.createDataFrame(
+                local.rename_columns([id_col, "cluster_id", "role"]),
+                f"{id_col} long, cluster_id long, role string",
             )
-            if local is not None:
-                return df.sparkSession.createDataFrame(
-                    local.rename_columns([id_col, "cluster_id", "role"]),
-                    f"{id_col} long, cluster_id long, role string",
-                )
 
-    pairs = eps_neighbor_pairs(df, id_col, x_col, y_col, eps).localCheckpoint(
-        eager=True
+    pairs = checkpoint_df(
+        eps_neighbor_pairs(df, id_col, x_col, y_col, eps), eager=True
     )
     # neighbor count includes the point itself
     counts = pairs.groupBy("a").agg((F.count(F.lit(1)) + 1).alias("n_nb"))
     ids = df.select(F.col(id_col).cast("long").alias("pid"))
-    core = (
-        ids.join(counts, ids.pid == counts.a, "left")
-        .select("pid", (F.coalesce("n_nb", F.lit(1)) >= min_pts).alias("is_core"))
-        .localCheckpoint(eager=True)
+    core = checkpoint_df(
+        ids.join(counts, ids.pid == counts.a, "left").select(
+            "pid", (F.coalesce("n_nb", F.lit(1)) >= min_pts).alias("is_core")
+        ),
+        eager=True,
     )
     core_ids = core.filter("is_core").select("pid")
     core_edges = (

@@ -19,9 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-LOCAL_LOF_DISABLED = __import__("os").environ.get(
-    "SPARK_GRAFT_DISABLE_LOCAL_LOF", ""
-) == "1"
+from ..checkpoint import checkpoint_df, collect_small
+
 _LOCAL_LOF_MAX = 50_000
 
 
@@ -138,32 +137,30 @@ def lof_scores(
     # Small-input fast path (limit probe, same pattern as dbscan): the
     # whole kNN + reachability chain runs on the driver with bit-exact
     # decimal replication — one job + one createDataFrame.
-    if not LOCAL_LOF_DISABLED:
-        probe = (
-            df.select(
-                F.col(id_col).cast("long").alias("pid"),
-                F.col(x_col).cast("double").alias("px"),
-                F.col(y_col).cast("double").alias("py"),
-            )
-            .limit(_LOCAL_LOF_MAX + 1)
-            .toPandas()
+    probe = collect_small(
+        df.select(
+            F.col(id_col).cast("long").alias("pid"),
+            F.col(x_col).cast("double").alias("px"),
+            F.col(y_col).cast("double").alias("py"),
+        ),
+        _LOCAL_LOF_MAX,
+    )
+    if probe is not None:
+        local = _lof_local(
+            probe["pid"].to_numpy(), probe["px"].to_numpy(),
+            probe["py"].to_numpy(), k, cell_size, max_radius_cells,
         )
-        if len(probe) <= _LOCAL_LOF_MAX:
-            local = _lof_local(
-                probe["pid"].to_numpy(), probe["px"].to_numpy(),
-                probe["py"].to_numpy(), k, cell_size, max_radius_cells,
-            )
-            if local is not None:
-                import numpy as np
-                import pandas as pd
+        if local is not None:
+            import numpy as np
+            import pandas as pd
 
-                pdf = pd.DataFrame(
-                    {
-                        id_col: np.asarray([r[0] for r in local], dtype=np.int64),
-                        "lof": np.asarray([r[1] for r in local], dtype=np.float64),
-                    }
-                )
-                return df.sparkSession.createDataFrame(pdf)
+            pdf = pd.DataFrame(
+                {
+                    id_col: np.asarray([r[0] for r in local], dtype=np.int64),
+                    "lof": np.asarray([r[1] for r in local], dtype=np.float64),
+                }
+            )
+            return df.sparkSession.createDataFrame(pdf)
 
     nn = knn_spatial_join(
         df, df, k=k + 1,
@@ -174,11 +171,11 @@ def lof_scores(
     # exactly k neighbors after dropping self (self may not be rank 1 when
     # duplicate coordinates tie at distance 0 — re-rank to be safe)
     w = Window.partitionBy("l_id").orderBy("dist", "r_id")
-    nn = (
+    nn = checkpoint_df(
         nn.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= k)
-        .select("l_id", "r_id", "dist")
-        .localCheckpoint(eager=True)
+        .select("l_id", "r_id", "dist"),
+        eager=True,
     )
 
     kdist = nn.groupBy("l_id").agg(F.max("dist").alias("kdist"))

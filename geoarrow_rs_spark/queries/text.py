@@ -629,22 +629,23 @@ def text_heavy_hitters_cms(spark, sf_dir):
     moves bounded state (<= depth*width counters) regardless of corpus or
     vocabulary size — the 100 TB substitute for an exact token groupBy.
     The md5 bucket addressing and counter minima replay exactly in SQL."""
+    from ..checkpoint import checkpoint_df
     from ..datapipe import sketch
     from ..datapipe.corpus import words_of
 
     d = _t(spark, sf_dir, "documents")
     toks = d.select(F.explode(words_of(F.col("text"))).alias("token"))
     sk = sketch.cms_build(toks, "token", depth=4, width=4096)
-    top = (
+    # referenced twice below (estimate input + final join): checkpoint the
+    # 20 rows so the corpus-wide exact groupBy runs once
+    top = checkpoint_df(
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("exact_count"))
         # distributed top-k (TakeOrderedAndProject: per-partition heads +
         # a 20-row merge), never a single-partition global window
         .orderBy(F.desc("exact_count"), F.asc("token"))
-        .limit(20)
-        # referenced twice below (estimate input + final join): checkpoint
-        # the 20 rows so the corpus-wide exact groupBy runs once
-        .localCheckpoint(eager=False)
+        .limit(20),
+        eager=False,
     )
     est = sketch.cms_estimate(sk, top.select("token"), "token",
                               depth=4, width=4096)

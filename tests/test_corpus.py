@@ -685,33 +685,6 @@ def test_budget_fill_threshold_semantics(spark):
     assert 1000 <= tok_sel <= 2000
 
 
-def test_mmr_local_path_equals_distributed(spark, sf_dir):
-    """The driver-local MMR fast path is bit-identical to the distributed
-    unrolled plan (same in-order cosine fold, same HALF_UP rounding
-    composition, same integer score arithmetic and tie-breaks)."""
-    import geoarrow_rs_spark.datapipe.similarity as S
-    from geoarrow_rs_spark.datapipe.similarity import cosine_topk, mmr_rerank
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = e.where(F.col("vec_id") < 6)
-    c = e.where(F.col("vec_id") >= 6)
-    topk = cosine_topk(q, c, k=6)
-    cands = topk.join(
-        c.select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("embedding").alias("vec")),
-        "neighbor_id",
-    ).select("query_id", "neighbor_id", F.col("cosine").alias("rel"), "vec")
-    local = mmr_rerank(cands, k=3, lam=0.7).collect()
-    saved = S.LOCAL_MMR_DISABLED
-    S.LOCAL_MMR_DISABLED = True
-    try:
-        dist = mmr_rerank(cands, k=3, lam=0.7).collect()
-    finally:
-        S.LOCAL_MMR_DISABLED = saved
-    assert sorted(map(tuple, local)) == sorted(map(tuple, dist))
-    assert len(local) == 18  # 6 queries x 3 picks
-
-
 def test_mixture_plan_keeps_null_domain_rows(spark):
     """Rows with a NULL domain survive mixture_plan (left join + coalesce)
     with 0 epochs / 0 copies instead of silently vanishing."""

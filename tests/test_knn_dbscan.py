@@ -5,6 +5,7 @@ beyond the brute-force oracle parity in test_oracle_parity."""
 import numpy as np
 from pyspark.sql import functions as F
 
+from geoarrow_rs_spark import checkpoint as CK
 from geoarrow_rs_spark.join.spatial import knn_spatial_join
 from geoarrow_rs_spark.ops.dbscan import dbscan, eps_neighbor_pairs
 
@@ -166,82 +167,7 @@ def test_null_coordinates_are_excluded_not_fatal(spark):
     assert roles[1] == "core" and roles[5] == "noise" and roles[6] == "noise"
 
 
-def test_local_fast_paths_match_distributed(spark):
-    """The driver-local kNN / DBSCAN / connected-components fast paths
-    must produce row-identical results to the distributed plans they
-    replace (same resolution rules, tie-breaks and IEEE arithmetic).
-    Two inputs: uniform points (kNN self-join), and points on a half-unit
-    lattice (tied distances) queried by the same points plus a few far
-    outside the candidates' extent (these reach the brute-force
-    fallback)."""
-    import numpy as np
-
-    from geoarrow_rs_spark.datapipe import dedup as D
-    from geoarrow_rs_spark.join import spatial as SP
-    from geoarrow_rs_spark.ops import dbscan as DB
-
-    rng = np.random.default_rng(11)
-    schema = "id long, x double, y double"
-    pts = [(i, float(x), float(y))
-           for i, (x, y) in enumerate(rng.uniform(0, 12, (300, 2)))]
-    df = spark.createDataFrame(pts, schema)
-    lattice = spark.createDataFrame(
-        [(i, float(x), float(y))
-         for i, (x, y) in enumerate(np.round(rng.uniform(0, 12, (300, 2)) * 2) / 2)],
-        schema,
-    )
-    far = spark.createDataFrame(
-        [(1000 + i, float(x), float(y))
-         for i, (x, y) in enumerate(rng.uniform(60, 90, (12, 2)))],
-        schema,
-    )
-    inputs = [(df, df), (lattice.unionByName(far), lattice)]
-
-    def knn_rows(left, right):
-        return sorted(
-            (r["l_id"], r["r_id"], r["rn"], round(r["dist"], 12))
-            for r in knn_spatial_join(left, right, k=4, cell_size=2.0).collect()
-        )
-
-    def db_rows(right):
-        return sorted(
-            (r["id"], r["cluster_id"], r["role"])
-            for r in dbscan(right, "id", "x", "y", eps=1.0, min_pts=4).collect()
-        )
-
-    pairs = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in rng.integers(0, 80, (150, 2)) if a != b],
-        "a_id long, b_id long",
-    )
-    ids = spark.createDataFrame([(i,) for i in range(80)], "doc_id long")
-
-    def cc_rows():
-        from geoarrow_rs_spark.datapipe.dedup import dedup_clusters
-
-        return sorted(map(tuple, dedup_clusters(ids, pairs).collect()))
-
-    def all_rows():
-        return ([knn_rows(lf, rt) for lf, rt in inputs],
-                [db_rows(rt) for _, rt in inputs], cc_rows())
-
-    local = all_rows()
-    SP.LOCAL_KNN_DISABLED = True
-    DB.LOCAL_DBSCAN_DISABLED = True
-    D.LOCAL_CC_DISABLED = True
-    try:
-        dist = all_rows()
-    finally:
-        SP.LOCAL_KNN_DISABLED = False
-        DB.LOCAL_DBSCAN_DISABLED = False
-        D.LOCAL_CC_DISABLED = False
-    # the far queries get all k neighbors, ranked 1..k
-    assert sum(1 for r in local[0][1] if r[0] >= 1000) == 12 * 4
-    assert local[0] == dist[0]
-    assert local[1] == dist[1]
-    assert local[2] == dist[2]
-
-
-def test_adaptive_knn_cell_results_invariant(spark):
+def test_adaptive_knn_cell_results_invariant(spark, monkeypatch):
     """The distributed grid kNN's density-adaptive cell sizing (r8) must
     not change results: the probe square + kdist <= R*cs resolution rule
     are exact for ANY cell size. Dense cluster + sparse outliers so both
@@ -266,13 +192,9 @@ def test_adaptive_knn_cell_results_invariant(spark):
             ).collect()
         )
 
-    SP.LOCAL_KNN_DISABLED = True
-    try:
-        adaptive = knn_rows()
-        SP.ADAPTIVE_KNN_CELL_DISABLED = True
-        pinned = knn_rows()
-    finally:
-        SP.LOCAL_KNN_DISABLED = False
-        SP.ADAPTIVE_KNN_CELL_DISABLED = False
+    monkeypatch.setattr(CK, "_FORCE_DISTRIBUTED", True)
+    adaptive = knn_rows()
+    monkeypatch.setattr(SP, "ADAPTIVE_KNN_CELL_DISABLED", True)
+    pinned = knn_rows()
     assert len(adaptive) == 420 * 3
     assert adaptive == pinned

@@ -854,29 +854,6 @@ def test_ppm_roundtrip_and_pipeline(spark):
     assert decode_ppm(bytes(rz)).shape == (5, 3, 3)
 
 
-def test_local_trainer_bit_identical_to_distributed(spark, sf_dir):
-    """The driver-local k-means / PQ trainer (small-corpus fast path) must
-    reproduce the distributed decimal pipeline EXACTLY — same centroid ids,
-    same float centroid values — or the SQL oracles that mirror the
-    distributed arithmetic would silently break."""
-    from geoarrow_rs_spark.datapipe import similarity as S
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").where("vec_id >= 8")
-    rows = S._collect_if_small(e, "vec_id", "embedding")
-    assert rows is not None, "size estimate should dispatch tiny fixtures local"
-    km_local = S._kmeans_train_local(rows, 8, 2)
-    pq_local = S._pq_train_local(rows, 4, 8, 2, 16)
-    old = S.LOCAL_TRAIN_DISABLED
-    S.LOCAL_TRAIN_DISABLED = True
-    try:
-        km_dist = S.kmeans_train(e, k=8, iters=2)
-        pq_dist = S.pq_train(e, m=4, k_codes=8, iters=2, dim=64)
-    finally:
-        S.LOCAL_TRAIN_DISABLED = old
-    assert km_local == km_dist
-    assert pq_local == pq_dist
-
-
 def test_tiff_roundtrip_and_boundaries():
     import struct
 

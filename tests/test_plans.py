@@ -530,7 +530,7 @@ def test_funnel_counts_is_one_exchange_and_builds_without_jobs(spark):
     assert len(out.collect()) == 3
 
 
-def test_mmr_and_mixture_and_budget_fill_plans(spark, sf_dir):
+def test_mmr_and_mixture_and_budget_fill_plans(spark, sf_dir, monkeypatch):
     """Round-4 pipeline operators stay native and scale-shaped:
     mmr_rerank plans no Python eval and no CartesianProduct (its joins
     are all query-key equi-joins); mixture_plan and budget_fill broadcast
@@ -541,7 +541,7 @@ def test_mmr_and_mixture_and_budget_fill_plans(spark, sf_dir):
     from geoarrow_rs_spark.datapipe.similarity import cosine_topk, mmr_rerank
     from geoarrow_rs_spark.datapipe.text import quality_score, token_count
 
-    import geoarrow_rs_spark.datapipe.similarity as S
+    from geoarrow_rs_spark import checkpoint as CK
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = e.where(F.col("vec_id") < 4)
@@ -554,12 +554,9 @@ def test_mmr_and_mixture_and_budget_fill_plans(spark, sf_dir):
     ).select("query_id", "neighbor_id", F.col("cosine").alias("rel"), "vec")
     # assert the DISTRIBUTED plan (the local fast path would show only a
     # LocalTableScan)
-    saved = S.LOCAL_MMR_DISABLED
-    S.LOCAL_MMR_DISABLED = True
-    try:
-        plan = _plan(mmr_rerank(cands, k=3, lam=0.7))
-    finally:
-        S.LOCAL_MMR_DISABLED = saved
+    monkeypatch.setattr(CK, "_FORCE_DISTRIBUTED", True)
+    plan = _plan(mmr_rerank(cands, k=3, lam=0.7))
+    monkeypatch.undo()
     assert "CartesianProduct" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 

@@ -119,80 +119,6 @@ def test_quantized_topk_empty_corpus(spark):
     assert quantized_topk(e, empty, k=3).count() == 0
 
 
-def test_k_core_local_path_matches_distributed(spark):
-    """The size-gated local peel must be row-identical to the distributed
-    rounds, for both the fixed-round and early-stop modes, including an
-    empty result."""
-    import geoarrow_rs_spark.datapipe.graph as G
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 3), (6, 7), (2, 1)],
-        "a_id long, b_id long",
-    )
-    lone = spark.createDataFrame([(1, 2), (3, 4)], "a_id long, b_id long")
-    for df, kw in [
-        (pairs, dict(k=2, rounds=4, early_stop=False)),
-        (pairs, dict(k=2)),
-        (pairs, dict(k=3, rounds=4, early_stop=False)),  # empty 3-core
-        (lone, dict(k=2, rounds=2, early_stop=False)),   # empty result
-    ]:
-        local = _rows(G.k_core(df, **kw))
-        saved = G.LOCAL_KCORE_DISABLED
-        G.LOCAL_KCORE_DISABLED = True
-        try:
-            dist = _rows(G.k_core(df, **kw))
-        finally:
-            G.LOCAL_KCORE_DISABLED = saved
-        assert local == dist
-
-
-def test_pagerank_local_path_matches_distributed(spark):
-    """The size-gated local pagerank replica must be bit-identical to the
-    distributed rounds — including isolated nodes (teleport mass only),
-    edges referencing unknown nodes, and self-loops."""
-    import geoarrow_rs_spark.datapipe.graph as G
-
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(1, 9)], "doc_id long"
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 3), (2, 1), (6, 6),
-         (7, 99)],  # 99 is not in nodes; 6-6 is a self-loop (dropped)
-        "a_id long, b_id long",
-    )
-    for iters in (1, 3):
-        local = _rows(G.pagerank(nodes, pairs, id_col="doc_id", iters=iters))
-        saved = G.LOCAL_PAGERANK_DISABLED
-        G.LOCAL_PAGERANK_DISABLED = True
-        try:
-            dist = _rows(G.pagerank(nodes, pairs, id_col="doc_id", iters=iters))
-        finally:
-            G.LOCAL_PAGERANK_DISABLED = saved
-        assert local == dist
-
-
-def test_neighborhood_function_local_path_matches_distributed(spark):
-    """The size-gated local KMV sketch replica must be bit-identical to
-    the distributed HyperBall rounds — connected component, isolated
-    pair, star hub, self-loop dropped."""
-    import geoarrow_rs_spark.datapipe.graph as G
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 3), (6, 7), (8, 8),
-         (10, 11), (10, 12), (10, 13), (10, 14)],
-        "a_id long, b_id long",
-    )
-    for k, hops in ((4, 2), (32, 3)):
-        local = _rows(G.neighborhood_function(pairs, k=k, hops=hops))
-        saved = G.LOCAL_ANF_DISABLED
-        G.LOCAL_ANF_DISABLED = True
-        try:
-            dist = _rows(G.neighborhood_function(pairs, k=k, hops=hops))
-        finally:
-            G.LOCAL_ANF_DISABLED = saved
-        assert local == dist and len(local) > 0
-
-
 def test_budget_fill_checkpointed_rows_keep_broadcast_hint(spark, sf_dir):
     from geoarrow_rs_spark.datapipe.sampling import budget_fill
     from geoarrow_rs_spark.datapipe.text import quality_score, token_count
