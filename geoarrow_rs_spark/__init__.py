@@ -10,6 +10,12 @@ the runtime has no shapely/GEOS. All relational capability is native Spark.
 
 __version__ = "0.1.0"
 
+from ._pyworker import install_in_worker as _install_in_worker
+
+# unpickling any package UDF imports this package, so a Python worker's
+# tasks after its first skip the eager zip re-reads (see _pyworker)
+_install_in_worker()
+
 
 def register_all(spark):
     """Register every ST_* / pipeline function for SQL + Column use, plus

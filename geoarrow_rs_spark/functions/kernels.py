@@ -9,7 +9,10 @@ which is the distributed analogue of the reference's chunked-kernel dispatch
 
 Hot-path note: Point columns get a fully vectorized numpy fast path (fixed
 21/29-byte WKB records decoded with ``np.frombuffer`` — no per-row Python).
-Other types parse per row but do all coordinate math in numpy.
+Batches of XY little-endian values of every other type, in any mix, decode
+whole-batch through ``batchdecode`` into one coordinate table plus offset
+arrays, and the kernels run numpy over it. Only batches with big-endian,
+Z/M or EWKB SRID values fall back to per-row ``Geom`` parsing.
 """
 
 from __future__ import annotations

@@ -460,6 +460,53 @@ def _parquet_parts(root: str):
     return [root]
 
 
+# SQL confs that change what schema Spark infers from parquet footers and
+# partition directories
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+_SCHEMA_CACHE_MAX = 64
+_schema_cache: dict = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job on a
+    repeat read of an unchanged local dataset.
+
+    The schema Spark inferred is kept per path, part files' (path, size,
+    mtime_ns) and schema confs; a hit reads with ``spark.read.schema``.
+    Only the schema is cached, never the DataFrame, so two reads of one
+    path never share attribute ids. Remote paths infer on every read."""
+    local = _local_path(path)
+    if local is None:
+        return spark.read.parquet(path)
+    try:
+        parts = tuple(
+            (p, st.st_size, st.st_mtime_ns)
+            for p in _parquet_parts(local)
+            for st in (os.stat(p),)
+        )
+    except OSError:
+        parts = ()
+    if not parts:
+        return spark.read.parquet(path)
+    key = (path, parts, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    schema = _schema_cache.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if len(_schema_cache) >= _SCHEMA_CACHE_MAX:
+        _schema_cache.pop(next(iter(_schema_cache)))
+    _schema_cache[key] = df.schema
+    return df
+
+
 def _native_stat_leaves(md, gcol: str):
     """Locate the parquet leaf columns carrying the native coordinates of
     ``gcol`` in a file's footer metadata. Returns ("separated", x_idx, y_idx)
@@ -776,7 +823,7 @@ def read_geoparquet(
         and _local_path(path) is not None
     ):
         tasks, _total = native_rowgroup_plan(spark, path, bbox, gcol)
-        base = spark.read.parquet(path)
+        base = _read_parquet(spark, path)
         from pyspark.sql.types import BinaryType, StructField, StructType
 
         out_schema = StructType([
@@ -787,7 +834,7 @@ def read_geoparquet(
         df = _read_native_rowgroups(spark, path, tasks, gcol, enc, out_schema)
     native_filtered = False
     if df is None:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         if meta and enc != "WKB":
             if bbox is not None and covering is None and gcol is not None:
                 # exact bbox predicate on the STORED layout, before any

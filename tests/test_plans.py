@@ -3,6 +3,7 @@ cartesian), codegen — the scale properties that make these operators viable
 at 100 TB, checked explicitly."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -528,6 +529,42 @@ def test_funnel_counts_is_one_exchange_and_builds_without_jobs(spark):
     assert plan.count("Exchange hashpartitioning(user_id") == 1, plan
     assert "ExistingRDD" not in plan, plan  # no checkpoint scan
     assert len(out.collect()) == 3
+
+
+def test_repeat_geoparquet_read_builds_without_jobs(spark, tmp_path):
+    """A second read_geoparquet(bbox=...) of an unchanged local dataset
+    reuses the inferred schema, so building it launches no job; rewriting
+    the dataset (new part files, new column) is read with its new schema."""
+    from geoarrow_rs_spark.io import read_geoparquet, write_geoparquet
+
+    def points(extra):
+        df = spark.range(200).selectExpr(
+            "id", "ST_Point(CAST(id AS DOUBLE), CAST(id AS DOUBLE)) AS geometry")
+        return df.withColumn("tag", F.lit("t")) if extra else df
+
+    path = os.path.join(str(tmp_path), "window")
+    write_geoparquet(points(False), path, "geometry")
+    bbox = (10.0, 10.0, 20.0, 20.0)
+    first = read_geoparquet(spark, path, bbox=bbox)
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = len(tracker.getJobIdsForGroup() or [])
+    again = read_geoparquet(spark, path, bbox=bbox)
+    jobs_after = len(tracker.getJobIdsForGroup() or [])
+    assert jobs_after == jobs_before, "a repeat read launched a job at build time"
+    assert again.schema == first.schema
+    assert sorted(r.id for r in again.collect()) == list(range(10, 21))
+    # the schema is shared, the relation is not: no attribute id in common
+    out_ids = [
+        set(re.findall(r"#\d+", df._jdf.queryExecution().analyzed().output().toString()))
+        for df in (first, again)
+    ]
+    assert out_ids[0] and not out_ids[0] & out_ids[1], out_ids
+
+    write_geoparquet(points(True), path, "geometry")
+    rewritten = read_geoparquet(spark, path, bbox=bbox)
+    assert "tag" in rewritten.columns
+    assert sorted((r.id, r.tag) for r in rewritten.collect()) == [
+        (i, "t") for i in range(10, 21)]
 
 
 def test_mmr_and_mixture_and_budget_fill_plans(spark, sf_dir, monkeypatch):
