@@ -23,8 +23,6 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..checkpoint import checkpoint_df
@@ -388,16 +386,9 @@ def tfidf_topk(
     # attach the same count; df(t) = tf rows with word = t is exact since
     # (doc, word) is unique post-groupBy. The vocabulary of a real corpus
     # is bounded (Heaps' law) and dfreq is 2 small columns, so the
-    # broadcast is dimension-sized; for a vocabulary too big to broadcast
-    # set SPARK_GRAFT_TFIDF_DF_BROADCAST=0 to restore the word-window
-    # formulation (same values — the window IS the shuffle-join plan).
-    if os.environ.get("SPARK_GRAFT_TFIDF_DF_BROADCAST", "1") != "0":
-        dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("__df"))
-        dfw = tf.join(F.broadcast(dfreq), on="word").crossJoin(F.broadcast(nn))
-    else:
-        dfw = tf.withColumn(
-            "__df", F.count(F.lit(1)).over(Window.partitionBy("word"))
-        ).crossJoin(F.broadcast(nn))
+    # broadcast is dimension-sized.
+    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("__df"))
+    dfw = tf.join(F.broadcast(dfreq), on="word").crossJoin(F.broadcast(nn))
     idf = F.round(
         F.log(
             (F.col("__N").cast("double") + F.lit(1.0))

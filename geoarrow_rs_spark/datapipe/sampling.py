@@ -12,7 +12,6 @@ with md5, which is how the oracle checks it exactly.
 from __future__ import annotations
 
 import logging as _logging
-import os as _os
 
 try:
     from py4j.protocol import Py4JError as _Py4JError
@@ -24,9 +23,6 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..checkpoint import checkpoint_df
 
-PLAN_BROADCAST_DISABLED = (
-    _os.environ.get("SPARK_GRAFT_DISABLE_PLAN_BROADCAST", "") == "1"
-)
 _PLAN_BROADCAST_MAX_BYTES = 64 << 20
 
 
@@ -41,9 +37,7 @@ def _broadcast_if_small(
     equi-join is left to AQE, which still broadcasts at runtime when the
     built side turns out small. ``stats_proxy`` supplies an equivalent
     lineage to probe when ``plan`` itself reads a checkpoint (whose stats
-    are unknown). Kill switch: SPARK_GRAFT_DISABLE_PLAN_BROADCAST=1."""
-    if PLAN_BROADCAST_DISABLED:
-        return plan
+    are unknown)."""
     probe = stats_proxy if stats_proxy is not None else plan
     try:
         if plan.isStreaming:

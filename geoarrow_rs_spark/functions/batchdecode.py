@@ -1,25 +1,36 @@
 """Vectorized mixed-type WKB batch decode for the kernel hot path.
 
-Decodes a whole Arrow batch of XY little-endian WKB values — Point,
-LineString, Polygon (any ring count), MultiPoint, MultiLineString,
-MultiPolygon, in any per-row mix — into ONE flat coordinate table plus
-ring/part/row offset arrays.  Kernels then run whole-batch numpy
-(reduceat / bincount over the offset structure) instead of building a
-per-row Geom object tree, which is the slow path's dominant cost.
+``decode_batch`` is the one WKB batch decoder: every batch-decoded kernel
+reaches it through ``kernels.decoded_of``. It decodes a whole Arrow batch
+of XY little-endian WKB values — Point, LineString, Polygon (any ring
+count), MultiPoint, MultiLineString, MultiPolygon, in any per-row mix —
+into ONE flat coordinate table plus ring/part/row offset arrays. Kernels
+then run whole-batch numpy (reduceat / bincount over the offset
+structure) instead of building a per-row Geom object tree, which is the
+slow path's dominant cost.
 
 This mirrors the decode the reference performs once per array when
 materializing WKB into typed offset buffers
 (/root/reference/rust/geoarrow-array/src/array/wkb.rs): coordinates land
 in a single contiguous buffer and structure lands in offset arrays.
 
-The per-row Python work here is only the fixed-size header walk (a few
-``int.from_bytes`` per ring); every coordinate byte is moved by exactly
-one numpy fancy-gather.  Batches containing big-endian values, Z/M
-dimensions, or EWKB SRID flags bail (return None) and the caller falls
-back to the per-row Geom path.  GeometryCollections decode recursively
-and set ``has_gc``; only consumers whose math is coordinate-set or
-structure-preserving (bounds, hulls, affine splice) accept such batches
-— see ``kernels.decoded_of(allow_gc=...)``.
+Two routes fill the same ``DecodedBatch``:
+
+- a fixed-layout shortcut (``_decode_fixed_layout``) for batches whose
+  every non-null value is a LineString, or every one a one-ring Polygon:
+  those values are a fixed-size header plus coordinates, so headers and
+  counts are checked with numpy and the tables are built without a walk;
+- the header walk (``_parse_structure``) for every other batch. Its
+  per-row Python work is only the fixed-size header walk (a few
+  ``int.from_bytes`` per ring); every coordinate byte is moved by one
+  join.
+
+Batches containing big-endian values, Z/M dimensions, or EWKB SRID flags
+bail (return None) and the caller falls back to the per-row Geom path.
+GeometryCollections decode recursively and set ``has_gc``; only consumers
+whose math is coordinate-set or structure-preserving (bounds, hulls,
+affine splice) accept such batches — see
+``kernels.decoded_of(allow_gc=...)``.
 
 A small content-keyed cache lets chained ST_ calls inside one
 ArrowEvalPython node (e.g. ``ST_Area(g), ST_Centroid(g), ST_ConvexHull(g)``
@@ -30,14 +41,9 @@ false sharing is possible.
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 
 import numpy as np
-
-# diagnostic kill switch: set before the SparkSession starts so python
-# workers inherit it; forces every kernel back to the per-row Geom path
-DISABLED = os.environ.get("SPARK_GRAFT_DISABLE_BATCHDECODE", "") == "1"
 
 _WKB_POINT = 1
 _WKB_LINESTRING = 2
@@ -50,6 +56,7 @@ _WKB_GEOMETRYCOLLECTION = 7
 _PT_HDR5 = b"\x01\x01\x00\x00\x00"
 _LS_HDR5 = b"\x01\x02\x00\x00\x00"
 _PG_HDR5 = b"\x01\x03\x00\x00\x00"
+_PG1_HDR9 = _PG_HDR5 + b"\x01\x00\x00\x00"  # polygon with exactly one ring
 
 
 class DecodedBatch:
@@ -274,8 +281,68 @@ def _parse_structure(vals):
             r_part, row_parts, row_top, has_gc)
 
 
+def _decode_fixed_layout(vals):
+    """DecodedBatch for a batch whose every non-null value is an XY LE
+    LineString, or every one a one-ring Polygon; None for any other batch.
+
+    Such values are a fixed header (9 or 13 bytes, ending in the point
+    count) followed by the coordinates, so one row's structure is known
+    from its length alone: the headers and counts are checked with numpy
+    and the ring and row tables are built without a per-ring walk. The
+    result equals _parse_structure's decode slot for slot."""
+    idx = [i for i, v in enumerate(vals) if v is not None]
+    if not idx:
+        return None
+    first = vals[idx[0]]
+    if first[:5] == _LS_HDR5:
+        kind, dim, hdr = _WKB_LINESTRING, 1, _LS_HDR5
+    elif first[:9] == _PG1_HDR9:
+        kind, dim, hdr = _WKB_POLYGON, 2, _PG1_HDR9
+    else:
+        return None
+    hlen = len(hdr) + 4
+    nn = [vals[i] for i in idx]
+    nd = len(nn)
+    body = np.fromiter(map(len, nn), dtype=np.int64, count=nd) - hlen
+    if (body < 0).any() or (body & 15).any():
+        return None
+    npt = body >> 4
+    heads = np.frombuffer(b"".join([v[:hlen] for v in nn]), dtype=np.uint8)
+    heads = heads.reshape(nd, hlen)
+    if not (heads[:, :-4] == np.frombuffer(hdr, dtype=np.uint8)).all():
+        return None
+    if (heads[:, -4:].copy().view("<u4")[:, 0] != npt).any():
+        return None
+    db = DecodedBatch()
+    db.n = len(vals)
+    db.has_gc = False
+    db.idx = np.asarray(idx, dtype=np.int64)
+    db.kind = np.full(nd, kind, dtype=np.uint8)
+    db.coords = np.frombuffer(
+        b"".join([memoryview(v)[hlen:] for v in nn]), dtype="<f8"
+    ).reshape(-1, 2)
+    # each row is one part; a row with no points records no ring
+    db.ring_drow = np.flatnonzero(npt).astype(np.int64)
+    nr = len(db.ring_drow)
+    db.ring_npt = npt[db.ring_drow]
+    db.ring_off = np.full(nr, hlen, dtype=np.int64)
+    db.ring_dim = np.full(nr, dim, dtype=np.uint8)
+    db.ring_role = np.zeros(nr, dtype=np.uint8)
+    db.ring_part = db.ring_drow.copy()
+    db.row_npt = npt
+    db.row_start = np.cumsum(npt) - npt
+    db.row_nparts = np.ones(nd, dtype=np.int64)
+    db.row_topcount = (
+        npt.copy() if kind == _WKB_LINESTRING else np.ones(nd, dtype=np.int64)
+    )
+    return db
+
+
 def decode_batch(vals):
     """Decode a list of WKB bytes/None into a DecodedBatch, or None."""
+    db = _decode_fixed_layout(vals)
+    if db is not None:
+        return db
     parsed = _parse_structure(vals)
     if parsed is None:
         return None
@@ -314,8 +381,6 @@ _CACHE_MAX = 4
 
 def decode_batch_cached(vals):
     """decode_batch with a small content-equality cache (see module doc)."""
-    if DISABLED:
-        return None
     key = tuple(vals)
     hit = _CACHE.get(key)
     if hit is not None:
@@ -491,7 +556,6 @@ def batch_centroid(db):
     null or the centroid is empty."""
     nd = len(db.idx)
     ssum, sx, sy = _ring_cross_sums(db)
-    rl = _ring_seg_lengths(db)
 
     # areal: rings with >=3 points and nonzero shoelace sum
     poly = (db.ring_dim == 2) & (db.ring_npt >= 3) & (ssum != 0.0)
@@ -502,6 +566,33 @@ def batch_centroid(db):
     asum = np.bincount(db.ring_drow[poly], weights=w[poly], minlength=nd)
     acx = np.bincount(db.ring_drow[poly], weights=(rcx * w)[poly], minlength=nd)
     acy = np.bincount(db.ring_drow[poly], weights=(rcy * w)[poly], minlength=nd)
+
+    # a batch of polygon rings only has no linear or puntal terms
+    lsum = lcx = lcy = pn = pcx = pcy = np.zeros(nd)
+    if (db.ring_dim < 2).any():
+        lsum, lcx, lcy, pn, pcx, pcy = _centroid_low_dim_terms(db)
+
+    cx = np.full(db.n, np.nan)
+    cy = np.full(db.n, np.nan)
+    ok = np.zeros(db.n, dtype=bool)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        use_a = asum != 0.0
+        use_l = ~use_a & (lsum > 0.0)
+        use_p = ~use_a & ~use_l & (pn > 0.0)
+        dcx = np.where(use_a, acx / asum, np.where(use_l, lcx / lsum, pcx / np.where(pn, pn, 1.0)))
+        dcy = np.where(use_a, acy / asum, np.where(use_l, lcy / lsum, pcy / np.where(pn, pn, 1.0)))
+    dok = use_a | use_l | use_p
+    cx[db.idx] = np.where(dok, dcx, np.nan)
+    cy[db.idx] = np.where(dok, dcy, np.nan)
+    ok[db.idx] = dok
+    return cx, cy, ok
+
+
+def _centroid_low_dim_terms(db):
+    """batch_centroid's per-row linear (length sum, weighted midpoint sums)
+    and puntal (count, coordinate sums) terms."""
+    nd = len(db.idx)
+    rl = _ring_seg_lengths(db)
 
     # linear: length-weighted segment midpoints; zero-length lines (npt>=2)
     # degrade to a point contribution at their first coordinate
@@ -547,21 +638,7 @@ def batch_centroid(db):
     pn = np.bincount(db.ring_drow[ptsel], minlength=nd).astype(np.float64)
     pcx = np.bincount(db.ring_drow[ptsel], weights=ring_x0[ptsel], minlength=nd)
     pcy = np.bincount(db.ring_drow[ptsel], weights=ring_y0[ptsel], minlength=nd)
-
-    cx = np.full(db.n, np.nan)
-    cy = np.full(db.n, np.nan)
-    ok = np.zeros(db.n, dtype=bool)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        use_a = asum != 0.0
-        use_l = ~use_a & (lsum > 0.0)
-        use_p = ~use_a & ~use_l & (pn > 0.0)
-        dcx = np.where(use_a, acx / asum, np.where(use_l, lcx / lsum, pcx / np.where(pn, pn, 1.0)))
-        dcy = np.where(use_a, acy / asum, np.where(use_l, lcy / lsum, pcy / np.where(pn, pn, 1.0)))
-    dok = use_a | use_l | use_p
-    cx[db.idx] = np.where(dok, dcx, np.nan)
-    cy[db.idx] = np.where(dok, dcy, np.nan)
-    ok[db.idx] = dok
-    return cx, cy, ok
+    return lsum, lcx, lcy, pn, pcx, pcy
 
 
 def batch_hulls(db):

@@ -30,12 +30,6 @@ from ..wkb import spherical as sph
 from ..wkb.core import Geom, from_wkb, from_wkt, to_ewkb, to_wkb, to_wkt
 from . import batchdecode as bd
 
-import os as _os
-
-# shared diagnostic kill switch with registry._dedup_wrap (inherited by
-# python workers when set before the session starts)
-_UNIQ_DISABLED = _os.environ.get("SPARK_GRAFT_DISABLE_UDF_DEDUP", "") == "1"
-
 # ---------------------------------------------------------------------------
 # point fast-path codecs
 # ---------------------------------------------------------------------------
@@ -85,45 +79,6 @@ def try_unpack_points_xy(vals):
 
 _LS_HDR = b"\x01\x02\x00\x00\x00"
 _PG_HDR = b"\x01\x03\x00\x00\x00"
-_PG1_HDR = _PG_HDR + b"\x01\x00\x00\x00"  # polygon with exactly one ring
-_PT_HDR = b"\x01\x01\x00\x00\x00"
-
-
-def _flat_simple_decode(vals, hdr, hdr_len):
-    """Uniform simple-geometry WKB column (XY little-endian LineString
-    hdr_len=9, single-ring Polygon hdr_len=13) -> (flat (N, 2) coords,
-    per-row point counts, non-null row index), or None on any deviation.
-
-    Per-row Python work is only the fixed-layout header check; all
-    coordinates land via one join + one np.frombuffer (a single sequential
-    memcpy). Feeds the vectorized kernel fast paths below."""
-    n_hdr = len(hdr)
-    counts, idx, chunks = [], [], []
-    for i, v in enumerate(vals):
-        if v is None:
-            continue
-        lv = len(v)
-        if lv <= hdr_len or v[:n_hdr] != hdr or (lv - hdr_len) % 16:
-            return None
-        npt = (lv - hdr_len) >> 4
-        if int.from_bytes(v[hdr_len - 4:hdr_len], "little") != npt:
-            return None
-        idx.append(i)
-        counts.append(npt)
-        chunks.append(memoryview(v)[hdr_len:])
-    if not idx:
-        return np.empty((0, 2)), np.empty(0, dtype=np.int64), idx
-    flat = np.frombuffer(b"".join(chunks), dtype="<f8").reshape(-1, 2)
-    return flat, np.asarray(counts, dtype=np.int64), idx
-
-
-def _reduceat_ring_sums(d, counts):
-    """Per-ring sums of a per-point quantity d (len == total points), where
-    the LAST point of each ring must not contribute (junk/wrap term)."""
-    ends = np.cumsum(counts)
-    d = d.copy()
-    d[ends - 1] = 0.0
-    return np.add.reduceat(d, ends - counts)
 
 
 from collections import OrderedDict
@@ -181,21 +136,6 @@ def _f64(vals):
 
 def k_area(s):
     vals = list(s)
-    first = next((v for v in vals if v is not None), None)
-    if first is not None and len(first) > 13 and bytes(first[:9]) == _PG1_HDR:
-        dec = _flat_simple_decode(vals, _PG1_HDR, 13)
-        if dec is not None:
-            flat, counts, idx = dec
-            x, y = flat[:, 0], flat[:, 1]
-            # shoelace, whole batch at once: cross terms between consecutive
-            # points, ring-wrap junk removed by the reduceat helper
-            d = np.empty(len(flat))
-            d[:-1] = x[:-1] * y[1:] - x[1:] * y[:-1]
-            d[-1] = 0.0
-            sums = _reduceat_ring_sums(d, counts)
-            out = np.full(len(vals), np.nan)
-            out[idx] = 0.5 * np.abs(sums)
-            return _f64(out)
     db = decoded_of(vals)
     if db is not None:
         return _f64(bd.batch_area(db))
@@ -217,18 +157,6 @@ def k_area_spherical(s):
 
 def k_length(s):
     vals = list(s)
-    first = next((v for v in vals if v is not None), None)
-    if first is not None and len(first) > 9 and bytes(first[:5]) == _LS_HDR:
-        dec = _flat_simple_decode(vals, _LS_HDR, 9)
-        if dec is not None:
-            flat, counts, idx = dec
-            d = np.empty(len(flat))
-            d[:-1] = np.hypot(np.diff(flat[:, 0]), np.diff(flat[:, 1]))
-            d[-1] = 0.0
-            sums = _reduceat_ring_sums(d, counts)
-            out = np.full(len(vals), np.nan)
-            out[idx] = sums
-            return _f64(out)
     db = decoded_of(vals)
     if db is not None:
         return _f64(bd.batch_length(db))
@@ -243,18 +171,6 @@ def k_length_spherical(s):
 
 def k_perimeter(s):
     vals = list(s)
-    first = next((v for v in vals if v is not None), None)
-    if first is not None and len(first) > 13 and bytes(first[:9]) == _PG1_HDR:
-        dec = _flat_simple_decode(vals, _PG1_HDR, 13)
-        if dec is not None:
-            flat, counts, idx = dec
-            d = np.empty(len(flat))
-            d[:-1] = np.hypot(np.diff(flat[:, 0]), np.diff(flat[:, 1]))
-            d[-1] = 0.0
-            sums = _reduceat_ring_sums(d, counts)
-            out = np.full(len(vals), np.nan)
-            out[idx] = sums
-            return _f64(out)
     db = decoded_of(vals)
     if db is not None:
         return _f64(bd.batch_perimeter(db))
@@ -285,33 +201,6 @@ def k_centroid(s):
     if fast is not None:
         # centroid of a point is the point: pass the input records through
         return pd.Series(vals, dtype=object)
-    first = next((v for v in vals if v is not None), None)
-    if first is not None and len(first) > 13 and bytes(first[:9]) == _PG1_HDR:
-        dec = _flat_simple_decode(vals, _PG1_HDR, 13)
-        if dec is not None:
-            flat, counts, idx = dec
-            x, y = flat[:, 0], flat[:, 1]
-            x2 = np.empty_like(x)
-            y2 = np.empty_like(y)
-            x2[:-1], x2[-1] = x[1:], x[-1]
-            y2[:-1], y2[-1] = y[1:], y[-1]
-            cross = x * y2 - x2 * y
-            ssum = _reduceat_ring_sums(cross.copy(), counts)
-            sx = _reduceat_ring_sums(((x + x2) * cross).copy(), counts)
-            sy = _reduceat_ring_sums(((y + y2) * cross).copy(), counts)
-            out = [None] * len(vals)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cx = sx / (3 * ssum)
-                cy = sy / (3 * ssum)
-            pts = pack_points_xy(cx, cy)
-            ok = ssum != 0
-            for j, i in enumerate(idx):
-                if ok[j]:
-                    out[i] = pts[j]
-                else:
-                    g = from_wkb(vals[i])
-                    out[i] = to_wkb(alg.centroid(g))
-            return pd.Series(out, dtype=object)
     db = decoded_of(vals)
     if db is not None:
         cx, cy, ok = bd.batch_centroid(db)
@@ -374,11 +263,7 @@ def _uniq_apply(s, fn):
     dominates; computing per distinct value and scattering back is
     byte-identical per row. Returns None when the batch is mostly unique
     so the caller runs its normal path with zero overhead beyond one
-    dict build over the value bytes. Honors the same
-    SPARK_GRAFT_DISABLE_UDF_DEDUP kill switch as the registry wrapper so
-    the diagnostic escape hatch fully restores raw-kernel behavior."""
-    if _UNIQ_DISABLED:
-        return None
+    dict build over the value bytes."""
     vals = list(s)
     uniq = dict.fromkeys(v for v in vals if v is not None)
     n_nonnull = sum(v is not None for v in vals)
@@ -471,25 +356,6 @@ def k_bbox_struct(s):
             "ymax": np.where(null, np.nan, ys),
         })
     vals = list(s)
-    first = next((v for v in vals if v is not None), None)
-    for hdr, hlen in ((_LS_HDR, 9), (_PG1_HDR, 13)):
-        if first is not None and len(first) > hlen and bytes(first[: len(hdr)]) == hdr:
-            dec = _flat_simple_decode(vals, hdr, hlen)
-            if dec is not None:
-                flat, counts, idx = dec
-                starts = np.cumsum(counts) - counts
-                xmin = np.minimum.reduceat(flat[:, 0], starts)
-                xmax = np.maximum.reduceat(flat[:, 0], starts)
-                ymin = np.minimum.reduceat(flat[:, 1], starts)
-                ymax = np.maximum.reduceat(flat[:, 1], starts)
-                n = len(vals)
-                cols = {k: np.full(n, np.nan) for k in ("xmin", "ymin", "xmax", "ymax")}
-                ia = np.asarray(idx)
-                cols["xmin"][ia] = xmin
-                cols["ymin"][ia] = ymin
-                cols["xmax"][ia] = xmax
-                cols["ymax"][ia] = ymax
-                return pd.DataFrame(cols)
     db = decoded_of(vals, allow_gc=True)
     if db is not None:
         xmin, ymin, xmax, ymax = bd.batch_bounds(db)
@@ -902,7 +768,7 @@ def k_collection_extract(s, kind):
     3=polygons) as a Multi* geometry (PostGIS ST_CollectionExtract)."""
     n = len(s)
     kk = list(kind) if hasattr(kind, "__iter__") else [kind] * n
-    if not bd.DISABLED and all(k == 3 for k in kk if k is not None):
+    if all(k == 3 for k in kk if k is not None):
         vals = list(s)
         fast = [
             None if v is None or k is None else _collection_of_polygons_to_mp(v)
@@ -1312,7 +1178,7 @@ def k_buffer(s, w, q):
                 m = nv + 1
                 size = 13 + 16 * m
                 arr = np.empty((len(sel), size), np.uint8)
-                arr[:, :9] = np.frombuffer(_PG1_HDR, np.uint8)
+                arr[:, :9] = np.frombuffer(bd._PG1_HDR9, np.uint8)
                 arr[:, 9:13] = np.frombuffer(
                     np.uint32(m).tobytes(), np.uint8
                 )
@@ -2199,7 +2065,7 @@ def _plain_xy_wkb(v):
 def k_collect_two(s1, s2):
     v1 = list(s1)
     v2 = list(s2)
-    if not bd.DISABLED and all(v is None or _plain_xy_wkb(v) for v in v1) and all(
+    if all(v is None or _plain_xy_wkb(v) for v in v1) and all(
         v is None or _plain_xy_wkb(v) for v in v2
     ):
         # GEOMETRYCOLLECTION(a, b) body is exactly the two input WKBs
@@ -2260,15 +2126,6 @@ def k_make_envelope(x0, y0, x1, y1):
     """Vectorized: a box polygon is a fixed 93-byte WKB record (header + one
     5-point CCW ring), so the whole batch packs with one structured-dtype
     fill — byte-identical to to_wkb(wc.box(...))."""
-    if bd.DISABLED:
-        return pd.Series(
-            [
-                None if pd.isna(a) or pd.isna(b) or pd.isna(c) or pd.isna(d)
-                else to_wkb(wc.box(float(a), float(b), float(c), float(d)))
-                for a, b, c, d in zip(x0, y0, x1, y1)
-            ],
-            dtype=object,
-        )
     xa = np.asarray(x0, dtype=np.float64)
     ya = np.asarray(y0, dtype=np.float64)
     xb = np.asarray(x1, dtype=np.float64)
@@ -2492,14 +2349,6 @@ def k_envelope_areas_xy(x0, y0, x1, y1):
     sequence, 5-element axis reductions and (rows, 8) @ (8,) quadrature
     dot products the per-geometry path performs, minus the WKB pack/parse
     detour and the tiny-array numpy dispatch overhead per row."""
-    if bd.DISABLED:
-        env = k_make_envelope(x0, y0, x1, y1)
-        return pd.DataFrame(
-            {
-                "spheroid": k_area_spheroid(env),
-                "spherical": k_area_spherical(env),
-            }
-        )
     xa, ya, n0 = _nanmask_xy(x0, y0)
     xb, yb, n1 = _nanmask_xy(x1, y1)
     null = n0 | n1

@@ -242,11 +242,6 @@ _registered_sessions = set()
 # asNondeterministic note in register_functions
 _NONDETERMINISTIC_MARK = {"ST_SubdivideBoxStatsXY"}
 
-# diagnostic kill switch for the value-dedup wrapper below (inherited by
-# python workers when set before the session starts)
-import os as _os
-
-_DEDUP_DISABLED = _os.environ.get("SPARK_GRAFT_DISABLE_UDF_DEDUP", "") == "1"
 _DEDUP_MIN_ROWS = 256      # below this a dict build isn't worth it
 _DEDUP_PROBE = 512         # rows sampled to estimate repetition
 _DEDUP_PROBE_MAX_FRAC = 0.5  # probe must show >= 2x repetition to engage
@@ -268,8 +263,6 @@ def _dedup_wrap(fn):
     and -0.0 never merge (a WKB constructor writes the sign bit) and equal
     NaN payloads merge safely (same input bits -> same kernel output).
     """
-    if _DEDUP_DISABLED:
-        return fn
 
     def _keys_of(c, lo, hi):
         # float dtypes: bit-pattern keys (0.0 != -0.0, NaN == same-bits NaN)

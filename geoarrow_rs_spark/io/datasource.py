@@ -64,9 +64,7 @@ _BATCH_ROWS = 4096
 # footer-planning pool engages only when one footer fetch costs at least
 # this much (object-store latency); warm local page-cache parses are
 # GIL-bound and the pool measurably hurts them (see _GpqReader.partitions)
-_POOL_LATENCY_S = float(
-    __import__("os").environ.get("SPARK_GRAFT_FOOTER_POOL_LATENCY", "0.001")
-)
+_POOL_LATENCY_S = 0.001
 
 
 def _rows_to_batches(rows, schema):

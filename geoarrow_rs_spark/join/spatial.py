@@ -235,11 +235,9 @@ def _refine_expr(predicate: str, lg: str, rg: str):
     return F.expr(f"{fn}({lg}, {rg})")
 
 
-# diagnostic escape hatch: pin the distributed kNN grid to the caller's
-# cell_size instead of sizing it from the right side's measured density
-ADAPTIVE_KNN_CELL_DISABLED = __import__("os").environ.get(
-    "SPARK_GRAFT_DISABLE_ADAPTIVE_KNN_CELL", ""
-) == "1"
+# test hook: pin the distributed kNN grid to the caller's cell_size
+# instead of sizing it from the right side's measured density
+_ADAPTIVE_KNN_CELL_DISABLED = False
 _LOCAL_KNN_MAX = 50_000
 
 
@@ -485,7 +483,7 @@ def knn_spatial_join(
     # metadata-cheap aggregate over the already-checkpointed R pays for it.
     cs_eff, max_radius_eff = cs, max_radius_cells
     n_right_total = None
-    if not ADAPTIVE_KNN_CELL_DISABLED:
+    if not _ADAPTIVE_KNN_CELL_DISABLED:
         import math
 
         st = R.agg(

@@ -539,3 +539,152 @@ def test_gc_batch_safe_consumers_match_slow_path():
     ng = list(K.k_num_geometries(s))
     # iter_parts semantics: recursive single-part count (nested GC flattens)
     assert ng == [3, 3, 3]
+
+
+def test_degenerate_one_ring_polygons_do_not_depend_on_batch_mix():
+    """An unclosed ring and a 2-point ring get the same area, perimeter
+    and centroid in a batch of only one-ring polygons (the fixed-layout
+    decode) as in a mixed batch (the header walk), and as algorithms.*."""
+    geoms = [
+        Geom(wc.POLYGON, [np.array([[1.0, 1.0], [5.0, 1.0], [5.0, 4.0]])]),
+        Geom(wc.POLYGON, [np.array([[1.0, 1.0], [5.0, 1.0]])]),
+    ]
+    uniform = pd.Series([to_wkb(g) for g in geoms] + [None], dtype=object)
+    mixed = pd.Series(list(uniform) + [to_wkb(wc.point(0.0, 0.0))], dtype=object)
+    for kernel, ref in ((K.k_area, alg.area), (K.k_perimeter, alg.perimeter)):
+        want = [ref(g) for g in geoms]
+        assert list(kernel(uniform))[:2] == want
+        assert list(kernel(mixed))[:2] == want
+    want = [_pt_xy(to_wkb(alg.centroid(g))) for g in geoms]
+    assert want[1] == "empty"
+    for s in (uniform, mixed):
+        got = [_pt_xy(b) for b in K.k_centroid(s)]
+        assert got[1:] == ["empty", None, (0.0, 0.0)][:len(s) - 1]
+        assert math.isclose(got[0][0], want[0][0], rel_tol=1e-12)
+        assert math.isclose(got[0][1], want[0][1], rel_tol=1e-12)
+
+
+def _walk_decode(vals, monkeypatch):
+    with monkeypatch.context() as m:
+        m.setattr(bd, "_decode_fixed_layout", lambda v: None)
+        return bd.decode_batch(vals)
+
+
+def _assert_same_decode(a, b):
+    for name in bd.DecodedBatch.__slots__:
+        x, y = getattr(a, name), getattr(b, name)
+        if isinstance(y, np.ndarray):
+            assert x.dtype == y.dtype and x.shape == y.shape, name
+            assert np.array_equal(x, y, equal_nan=True), name
+        else:
+            assert x == y, name
+
+
+def _random_simple(rng, kind):
+    npt = int(rng.integers(0, 8))
+    if kind == wc.LINESTRING:
+        return Geom(wc.LINESTRING, rng.uniform(-50, 50, (npt, 2)))
+    return Geom(wc.POLYGON, [_ring(0, 0, 10, npt, rng, close=npt > 2)])
+
+
+@pytest.mark.parametrize("kind", [wc.LINESTRING, wc.POLYGON], ids=["linestring", "polygon"])
+def test_fixed_layout_decode_equals_header_walk(kind, monkeypatch):
+    """Random uniform LineString / one-ring Polygon batches with NULLs
+    (empty, 1-point, 2-point and unclosed rings included) decode through
+    the fixed-layout shortcut to the header walk's tables, slot for slot."""
+    rng = np.random.default_rng(11 + kind)
+    for _ in range(40):
+        vals = [
+            None if rng.random() < 0.2 else to_wkb(_random_simple(rng, kind))
+            for _ in range(int(rng.integers(1, 60)))
+        ]
+        want = _walk_decode(vals, monkeypatch)
+        assert want is not None
+        if any(v is not None for v in vals):
+            _assert_same_decode(bd._decode_fixed_layout(vals), want)
+        _assert_same_decode(bd.decode_batch(vals), want)
+
+
+def test_fixed_layout_decode_falls_through(monkeypatch):
+    """Batches outside the fixed layout skip the shortcut and return the
+    header walk's result (a decode or None)."""
+    rng = np.random.default_rng(5)
+    lines = [to_wkb(_random_simple(rng, wc.LINESTRING)) for _ in range(6)]
+    polys = [
+        to_wkb(Geom(wc.POLYGON, [_ring(0, 0, 10, 5, rng)])),
+        to_wkb(Geom(wc.POLYGON, [_ring(3, 3, 4, 6, rng)])),
+    ]
+    holed = to_wkb(Geom(wc.POLYGON, [_ring(0, 0, 10, 6, rng), _ring(0, 0, 2, 4, rng)]))
+    bad_count = bytearray(polys[0])
+    bad_count[9] += 1
+    big_endian = b"\x00\x00\x00\x00\x02" + (2).to_bytes(4, "big") + bytes(32)
+    cases = {
+        "multi_ring": polys + [None, holed],
+        "mixed_types": lines + polys,
+        "count_mismatch": [polys[1], bytes(bad_count)],
+        "trailing_bytes": [lines[0], lines[1] + b"\x00" * 16],
+        "big_endian_first": [big_endian, lines[0]],
+        "big_endian_later": [lines[0], big_endian],
+        "point_header": [to_wkb(wc.point(1.0, 2.0)), lines[0]],
+    }
+    for name, vals in cases.items():
+        assert bd._decode_fixed_layout(vals) is None, name
+        want = _walk_decode(vals, monkeypatch)
+        got = bd.decode_batch(vals)
+        if want is None:
+            assert got is None, name
+        else:
+            _assert_same_decode(got, want)
+    assert bd.decode_batch(cases["multi_ring"]) is not None
+    assert bd.decode_batch(cases["count_mismatch"]) is None
+
+
+def test_make_envelope_bytes_equal_per_row_box():
+    rng = np.random.default_rng(3)
+    cols = [pd.Series(rng.uniform(-180, 180, 64)) for _ in range(4)]
+    for c, i in zip(cols, (3, 10, 10, 40)):
+        c[i] = np.nan
+    got = list(K.k_make_envelope(*cols))
+    want = [
+        None if any(np.isnan(v) for v in r) else to_wkb(wc.box(*map(float, r)))
+        for r in zip(*cols)
+    ]
+    assert got == want
+    assert sum(v is None for v in got) == 3
+
+
+def test_collect_two_bytes_equal_per_row_collection(batch):
+    geoms, s = batch
+    rev = pd.Series(list(s)[::-1], dtype=object)
+    got = list(K.k_collect_two(s, rev))
+    want = [
+        None if a is None or b is None else to_wkb(wc.collection([a, b]))
+        for a, b in zip(geoms, geoms[::-1])
+    ]
+    assert got == want
+
+
+def test_collection_extract_polygons_bytes_equal_per_row_geom():
+    """The header-swap fast path for collections of polygons returns the
+    per-row Geom extraction's bytes; rows it cannot swap (an empty
+    polygon part, a point part) take the Geom path for the whole batch."""
+    rng = np.random.default_rng(9)
+
+    def polys(k):
+        return [Geom(wc.POLYGON, [_ring(i * 20, 0, 8, 5, rng)]) for i in range(k)]
+
+    def ref(g):
+        parts = [p for p in wc.iter_parts(g) if p.kind == wc.POLYGON and not p.is_empty()]
+        if not parts:
+            return to_wkb(wc.empty(wc.MULTIPOLYGON))
+        return to_wkb(Geom(wc.MULTIPOLYGON, [p.data for p in parts]))
+
+    swappable = [wc.collection(polys(k)) for k in (1, 2, 3)]
+    other = swappable + [
+        wc.collection(polys(1) + [wc.empty(wc.POLYGON)]),
+        wc.collection(polys(2) + [wc.point(1.0, 1.0)]),
+    ]
+    for geoms in (swappable, other):
+        s = pd.Series([to_wkb(g) for g in geoms] + [None], dtype=object)
+        got = list(K.k_collection_extract(s, 3))
+        assert got == [ref(g) for g in geoms] + [None]

@@ -194,7 +194,7 @@ def test_adaptive_knn_cell_results_invariant(spark, monkeypatch):
 
     monkeypatch.setattr(CK, "_FORCE_DISTRIBUTED", True)
     adaptive = knn_rows()
-    monkeypatch.setattr(SP, "ADAPTIVE_KNN_CELL_DISABLED", True)
+    monkeypatch.setattr(SP, "_ADAPTIVE_KNN_CELL_DISABLED", True)
     pinned = knn_rows()
     assert len(adaptive) == 420 * 3
     assert adaptive == pinned

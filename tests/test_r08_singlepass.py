@@ -1,14 +1,13 @@
 """Round-8 single-pass restructures: the optimized formulations must be
 value-identical to the formulations they replaced.
 
-- tfidf_topk: broadcast-dfreq path vs the word-window fallback path
-  (SPARK_GRAFT_TFIDF_DF_BROADCAST=0) — same rows, bit-exact scores.
+- tfidf_topk: the broadcast-dfreq plan vs the DuckDB tf-idf oracle —
+  same rows, bit-exact scores — and no word-partitioned window.
 - quantized_topk: literal-inlined quantization scales vs a reference
   broadcast-subtree replay, plus the empty-corpus edge.
 - budget_fill: the checkpointed per-doc table keeps the plan-table
   broadcast hint (stats probed on the un-checkpointed twin).
 """
-import os
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -31,22 +30,26 @@ def docs(spark):
     )
 
 
-def test_tfidf_broadcast_and_window_paths_identical(spark, docs):
+def test_tfidf_topk_matches_duckdb_oracle(spark, docs):
+    """tfidf_topk equals the catalog's DuckDB tf-idf oracle, run over the
+    same 60 documents with a query term absent from the corpus."""
+    import duckdb
+
     from geoarrow_rs_spark.datapipe.corpus import tfidf_topk
+    from geoarrow_rs_spark.queries.text import (
+        ORACLE_TEXT_TFIDF, TFIDF_QUERY_TERMS,
+    )
 
     terms = ["spark", "window", "nosuchterm"]
-    old = os.environ.get("SPARK_GRAFT_TFIDF_DF_BROADCAST")
-    try:
-        os.environ["SPARK_GRAFT_TFIDF_DF_BROADCAST"] = "1"
-        bcast = _rows(tfidf_topk(docs, terms, k=10))
-        os.environ["SPARK_GRAFT_TFIDF_DF_BROADCAST"] = "0"
-        window = _rows(tfidf_topk(docs, terms, k=10))
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_TFIDF_DF_BROADCAST", None)
-        else:
-            os.environ["SPARK_GRAFT_TFIDF_DF_BROADCAST"] = old
-    assert bcast == window and len(bcast) == 10
+    assert ORACLE_TEXT_TFIDF.count(repr(TFIDF_QUERY_TERMS)) == 1
+    assert ORACLE_TEXT_TFIDF.count("LIMIT 20") == 1
+    sql = ORACLE_TEXT_TFIDF.replace(repr(TFIDF_QUERY_TERMS), repr(terms))
+    sql = sql.replace("LIMIT 20", "LIMIT 10")
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    want = sorted(con.execute(sql).fetchall())
+    got = _rows(tfidf_topk(docs, terms, k=10))
+    assert got == want and len(got) == 10
 
 
 def test_tfidf_broadcast_path_has_no_word_window(spark, docs):

@@ -5,6 +5,7 @@ routes through ``checkpoint_df``, which swaps the executor-local
 different failure domain (see SCALE.md)."""
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -75,18 +76,33 @@ def test_no_gate_knobs_or_raw_local_checkpoints_in_package():
     """Every size gate goes through collect_small and every
     materialization through checkpoint_df (which honors
     SPARK_GRAFT_RELIABLE_CHECKPOINT): no per-op env knob and no raw
-    localCheckpoint call anywhere else in the package."""
+    localCheckpoint call anywhere else in the package. The only env reads
+    left are that checkpoint directory and SPARK_GRAFT_USE_PYPROJ (an
+    optional external dependency), and WKB batches have one decoder."""
     banned = (".localCheckpoint(", "SPARK_GRAFT_DISABLE_LOCAL_",
               "SPARK_GRAFT_LOCAL_")
+    allowed_env = {
+        "checkpoint.py": "SPARK_GRAFT_RELIABLE_CHECKPOINT",
+        os.path.join("wkb", "proj.py"): "SPARK_GRAFT_USE_PYPROJ",
+    }
+    env_read = re.compile(r"\b(environ|getenv)\b")
     root = os.path.dirname(geoarrow_rs_spark.__file__)
-    hits = []
+    hits, env_reads = [], set()
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
             path = os.path.join(dirpath, f)
-            if not f.endswith(".py") or path == CK.__file__:
+            if not f.endswith(".py"):
                 continue
+            rel = os.path.relpath(path, root)
             with open(path) as fh:
                 for n, line in enumerate(fh, 1):
-                    if any(b in line for b in banned):
-                        hits.append(f"{os.path.relpath(path, root)}:{n}")
+                    if "_flat_simple_decode" in line or (
+                        path != CK.__file__ and any(b in line for b in banned)
+                    ):
+                        hits.append(f"{rel}:{n}")
+                    if env_read.search(line):
+                        if allowed_env.get(rel, "\0") not in line:
+                            hits.append(f"{rel}:{n}")
+                        env_reads.add(rel)
     assert hits == []
+    assert env_reads == set(allowed_env)

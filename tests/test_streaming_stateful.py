@@ -1017,10 +1017,13 @@ def test_geofence_idle_timeout_stream_matches_batch(spark, tmp_path):
         out.writeStream.format("memory").queryName("geofence_idle")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(180)
-    got = {(r["entity"], r["ts"], r["fence_id"], r["transition"])
-           for r in spark.sql("SELECT * FROM geofence_idle").collect()}
-    assert got == EXPECT_TRANSITIONS
+    try:
+        q.awaitTermination(180)
+        got = {(r["entity"], r["ts"], r["fence_id"], r["transition"])
+               for r in spark.sql("SELECT * FROM geofence_idle").collect()}
+        assert got == EXPECT_TRANSITIONS
+    finally:
+        q.stop()
 
 
 def test_streaming_dedup_ttl_branches():
@@ -1081,6 +1084,9 @@ def test_streaming_dedup_ttl_stream_matches_untimed(spark, tmp_path):
         out.writeStream.format("memory").queryName("dedup_ttl")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(180)
-    got = spark.sql("SELECT text FROM dedup_ttl").collect()
-    assert sorted(r.text for r in got) == [f"t{i}" for i in range(7)]
+    try:
+        q.awaitTermination(180)
+        got = spark.sql("SELECT text FROM dedup_ttl").collect()
+        assert sorted(r.text for r in got) == [f"t{i}" for i in range(7)]
+    finally:
+        q.stop()
