@@ -13,7 +13,8 @@ __version__ = "0.1.0"
 from ._pyworker import install_in_worker as _install_in_worker
 
 # unpickling any package UDF imports this package, so a Python worker's
-# tasks after its first skip the eager zip re-reads (see _pyworker)
+# tasks after its first skip the eager zip re-reads and the full-heap
+# collection walk over import-time objects (see _pyworker)
 _install_in_worker()
 
 

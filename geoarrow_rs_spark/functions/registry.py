@@ -311,7 +311,7 @@ def _dedup_wrap(fn):
     return wrapped
 
 
-def _extent_agg(s: pd.Series):
+def _extent_agg(s: pd.Series) -> list:
     """Grouped-agg: union of bboxes -> [xmin,ymin,xmax,ymax]."""
     from ..wkb import algorithms as alg
     from ..wkb.core import from_wkb
@@ -331,7 +331,7 @@ def _extent_agg(s: pd.Series):
     return [xmin, ymin, xmax, ymax]
 
 
-def _union_agg(s: pd.Series):
+def _union_agg(s: pd.Series) -> bytes:
     """Grouped-agg: combine geometries into one Multi*/Collection (merge-only
     union — no dissolve; matches collecting semantics, and is exact for
     disjoint inputs)."""
@@ -371,14 +371,9 @@ def register_functions(spark):
             # ARE deterministic — this only constrains the optimizer)
             udf = udf.asNondeterministic()
         spark.udf.register(name, udf)
-    spark.udf.register(
-        "ST_Extent_Agg",
-        F.pandas_udf(_extent_agg, ArrayType(DoubleType()), F.PandasUDFType.GROUPED_AGG),
-    )
-    spark.udf.register(
-        "ST_Union_Agg",
-        F.pandas_udf(_union_agg, BinaryType(), F.PandasUDFType.GROUPED_AGG),
-    )
+    # Series -> scalar type hints make these grouped-agg pandas UDFs
+    spark.udf.register("ST_Extent_Agg", F.pandas_udf(_extent_agg, ArrayType(DoubleType())))
+    spark.udf.register("ST_Union_Agg", F.pandas_udf(_union_agg, BinaryType()))
     _registered_sessions.add(key)
     return spark
 

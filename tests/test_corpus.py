@@ -259,7 +259,7 @@ def test_streaming_decontamination(spark, tmp_path, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     got = {
         r.doc_id: (r.n_grams, r.n_hits, r.overlap_ppm, r.contaminated)
         for r in spark.sql("SELECT * FROM decontam_out").collect()
@@ -303,7 +303,7 @@ def test_corpus_cleaning_composes_with_streaming(spark, tmp_path, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     got = spark.sql("SELECT * FROM corpus_clean_out").collect()
     want = clean(batch).collect()
     assert len(got) == len(want) > 0

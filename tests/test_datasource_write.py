@@ -160,7 +160,7 @@ def test_stream_sink_roundtrip(tmp_path, spark):
             .option("checkpointLocation", chk)
             .trigger(availableNow=True).start(out)
         )
-        q.awaitTermination()
+        assert q.awaitTermination(120) is True
 
     run_once()
     back = spark.read.format("geoparquet").load(out)

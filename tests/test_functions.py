@@ -1,6 +1,7 @@
 """ST_* registry tests through real Spark SQL + Column API."""
 
 import math
+import warnings
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -135,6 +136,17 @@ def test_extent_union_agg(spark):
     assert rows[1]["ext"] == [1.0, -1.0, 5.0, 2.0]
     assert rows[1]["n"] == 2
     assert rows[2]["n"] == 1
+
+
+def test_register_functions_warns_nothing(spark):
+    """Every pandas UDF is declared by type hints, not by the deprecated
+    PandasUDFType (SPARK-28264), so registering raises no UserWarning."""
+    from geoarrow_rs_spark.functions.registry import register_functions
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        register_functions(spark.newSession())
+    assert [w for w in caught if issubclass(w.category, UserWarning)] == []
 
 
 def test_geohash(spark):

@@ -92,7 +92,7 @@ def test_stream_equals_batch_on_events(spark, tmp_path):
         out.writeStream.format("memory").queryName("geofence_events_scale")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    qs.awaitTermination(300)
+    assert qs.awaitTermination(300) is True
     got = {(r["entity"], r["ts"], r["fence_id"], r["transition"])
            for r in spark.sql("SELECT * FROM geofence_events_scale").collect()}
     assert got == expect
@@ -204,7 +204,7 @@ def test_geofence_skewed_entity_state_bounded(spark, tmp_path):
         out.writeStream.format("memory").queryName("geofence_skew")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    qs.awaitTermination(300)
+    assert qs.awaitTermination(300) is True
     state_rows = [
         op["numRowsTotal"]
         for p in qs.recentProgress

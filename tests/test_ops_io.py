@@ -233,7 +233,7 @@ def test_streaming_real_stream(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     out = spark.sql("SELECT * FROM win_counts")
     assert out.count() > 0
 

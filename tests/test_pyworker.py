@@ -1,8 +1,10 @@
-"""Lazy zipimport invalidation in Python workers (``geoarrow_rs_spark._pyworker``).
+"""Per-task fixed costs of Python workers (``geoarrow_rs_spark._pyworker``):
+lazy zipimport invalidation and the one-shot freeze of the import-time heap.
 
-The patch is process-wide and permanent, so its install path runs in a
+Both are process-wide and permanent, so their install paths run in a
 fresh interpreter; the driver process itself must never be patched."""
 
+import gc
 import json
 import os
 import subprocess
@@ -144,3 +146,94 @@ def test_worker_invalidation_reads_no_zip_directory(spark):
     assert all(r.reads == 0 and r.lazy for r in rows), rows
     assert "geoarrow_rs_spark" not in zipimport.zipimporter.invalidate_caches.__module__
     assert not isinstance(zipimport.zipimporter.__dict__.get("_files"), property)
+
+
+_FREEZE_SCRIPT = textwrap.dedent(r"""
+    import gc, json, weakref
+
+    gc.disable()  # only the explicit collections below run
+    before = list(gc.callbacks)
+    import pyspark
+    from geoarrow_rs_spark import _pyworker
+
+    out = {}
+    _pyworker.install_in_worker()  # outside a worker: no TaskContext
+    out["outside_new_callbacks"] = len(gc.callbacks) - len(before)
+    out["outside_frozen"] = gc.get_freeze_count()
+
+    pyspark.TaskContext.get = staticmethod(lambda: object())
+    freezes = []
+    real_freeze = gc.freeze
+
+    def counting_freeze():
+        freezes.append(1)
+        real_freeze()
+
+    gc.freeze = counting_freeze
+    _pyworker.install_in_worker()
+    _pyworker.install_in_worker()
+    out["worker_new_callbacks"] = len(gc.callbacks) - len(before)
+    gc.collect(0)
+    gc.collect(1)
+    out["frozen_after_young"] = gc.get_freeze_count()
+    gc.collect()
+    out["frozen_after_full"] = gc.get_freeze_count()
+    out["callbacks_after_full"] = len(gc.callbacks) - len(before)
+
+    class Node:
+        pass
+
+    node = Node()
+    node.self = node
+    ref = weakref.ref(node)
+    del node
+    gc.collect()
+    out["cycle_collected"] = ref() is None
+    out["freezes"] = len(freezes)
+    print(json.dumps(out))
+""")
+
+
+def test_worker_freezes_heap_once_at_first_full_collection():
+    env = dict(os.environ, PYTHONPATH=REPO)
+    proc = subprocess.run(
+        [sys.executable, "-c", _FREEZE_SCRIPT],
+        capture_output=True, text=True, env=env, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["outside_new_callbacks"] == 0, out
+    assert out["outside_frozen"] == 0, out
+    assert out["worker_new_callbacks"] == 1, out
+    assert out["frozen_after_young"] == 0, out
+    assert out["frozen_after_full"] > 0, out
+    assert out["callbacks_after_full"] == 0, out
+    assert out["cycle_collected"] is True, out
+    assert out["freezes"] == 1, out
+
+
+def test_worker_heap_is_frozen_after_first_task(spark):
+    """A worker that has run a task importing the package has frozen its
+    import-time heap, so the daemon's per-task full collection walks only a
+    few thousand objects; the driver's heap is never frozen."""
+
+    def probe(batches):
+        import gc
+        import sys
+
+        seen = "geoarrow_rs_spark" in sys.modules
+        import geoarrow_rs_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"seen": [seen], "frozen": [gc.get_freeze_count()],
+                            "objects": [len(gc.get_objects())]})
+
+    df = spark.range(0, 32, 1, 16).mapInPandas(
+        probe, "seen boolean, frozen long, objects long")
+    df.collect()  # every worker's first task imports the package
+    rows = df.collect()
+    after_first = [r for r in rows if r.seen]
+    assert len(rows) == 16 and after_first, rows
+    assert all(r.frozen > 0 and r.objects < 10_000 for r in after_first), rows
+    assert gc.get_freeze_count() == 0

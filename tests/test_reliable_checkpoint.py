@@ -78,7 +78,8 @@ def test_no_gate_knobs_or_raw_local_checkpoints_in_package():
     SPARK_GRAFT_RELIABLE_CHECKPOINT): no per-op env knob and no raw
     localCheckpoint call anywhere else in the package. The only env reads
     left are that checkpoint directory and SPARK_GRAFT_USE_PYPROJ (an
-    optional external dependency), and WKB batches have one decoder."""
+    optional external dependency), and WKB batches have one decoder. Only
+    _pyworker freezes the heap or hooks the garbage collector."""
     banned = (".localCheckpoint(", "SPARK_GRAFT_DISABLE_LOCAL_",
               "SPARK_GRAFT_LOCAL_")
     allowed_env = {
@@ -86,8 +87,9 @@ def test_no_gate_knobs_or_raw_local_checkpoints_in_package():
         os.path.join("wkb", "proj.py"): "SPARK_GRAFT_USE_PYPROJ",
     }
     env_read = re.compile(r"\b(environ|getenv)\b")
+    gc_hook = re.compile(r"\bgc\.(freeze|callbacks)\b")
     root = os.path.dirname(geoarrow_rs_spark.__file__)
-    hits, env_reads = [], set()
+    hits, env_reads, gc_hooks = [], set(), set()
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
             path = os.path.join(dirpath, f)
@@ -104,5 +106,8 @@ def test_no_gate_knobs_or_raw_local_checkpoints_in_package():
                         if allowed_env.get(rel, "\0") not in line:
                             hits.append(f"{rel}:{n}")
                         env_reads.add(rel)
+                    if gc_hook.search(line):
+                        gc_hooks.add(rel)
     assert hits == []
     assert env_reads == set(allowed_env)
+    assert gc_hooks == {"_pyworker.py"}

@@ -45,7 +45,7 @@ def test_streaming_dedup_real_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     texts = sorted(r["text"] for r in spark.sql("SELECT * FROM dedup_out").collect())
     assert texts == ["alpha", "beta", "gamma"]
 
@@ -207,7 +207,7 @@ def test_windowed_counts_drops_late_data(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180) is True
     h1 = [
         r["n_events"]
         for r in spark.sql("SELECT * FROM late_out").collect()
@@ -240,7 +240,7 @@ def test_streaming_st_functions_compose(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     got = sorted(r["id"] for r in spark.sql("SELECT * FROM geo_stream_out").collect())
     exp = sorted(i for i in range(100) if 2.5 <= i % 10 <= 5.5 and 2.5 <= i // 10 <= 5.5)
     assert got == exp
@@ -274,7 +274,7 @@ def test_streaming_geofence_native(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     got = sorted(r.id for r in spark.sql("SELECT * FROM geofence_out").collect())
     want = sorted(
         r.id
@@ -360,7 +360,7 @@ def test_streaming_asof_join_real_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180) is True
     rows = spark.sql("SELECT * FROM asof_out").collect()
     got = {r["qty"]: r["price_r"] for r in rows}
     # trades at :03 (-> quote :00 = 1.0) and :07 (-> quote :05 = 2.0) are
@@ -409,7 +409,7 @@ def test_streaming_minhash_pairs_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180) is True
     got = {
         (r.a_id, r.b_id)
         for r in spark.sql("SELECT * FROM mh_pairs").collect()
@@ -452,7 +452,7 @@ def test_streaming_windowed_extent(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     got = {
         (r["window_start"], r["xmin"], r["ymin"], r["xmax"], r["ymax"], r["n_events"])
         for r in spark.sql("SELECT * FROM ext_out").collect()
@@ -519,7 +519,7 @@ def test_streaming_spatial_join_matches_batch(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        assert q.awaitTermination(180) is True
         got = sorted(
             (r["pt_id"], r["zone_id"])
             for r in spark.sql(f"SELECT * FROM sj_out_{name}").collect()
@@ -573,7 +573,7 @@ def test_streaming_hex_heatmap(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    qq.awaitTermination(180)
+    assert qq.awaitTermination(180) is True
     got = sorted(
         (row["hq"], row["hr"], row["n"])
         for row in spark.sql("SELECT * FROM hex_heat").collect()
@@ -610,7 +610,7 @@ def test_streaming_running_counts_state_carry(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     rows = spark.sql("SELECT * FROM hh_out").collect()
     final = {}
     seen_increasing = True
@@ -669,7 +669,7 @@ def test_streaming_binned_histogram_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     got = {
         (r.window_start, r.bin, r.cnt)
         for r in spark.sql("SELECT * FROM hist_out").collect()
@@ -712,7 +712,7 @@ def test_streaming_interval_join_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     got = {(r.lid, r.rid) for r in spark.sql("SELECT * FROM ivl_out").collect()}
     assert got == want and len(got) > 0
 
@@ -749,7 +749,7 @@ def test_streaming_expectations_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     got = {
         (r.window_start, r.rule): (r.n_rows, r.n_violations)
         for r in spark.sql("SELECT * FROM exp_out").collect()
@@ -798,7 +798,7 @@ def test_streaming_heavy_hitters_real_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     emitted = spark.sql("SELECT * FROM hh_out").toPandas()
     assert len(emitted)
     # keep only each shard's final snapshot, then global top-5
@@ -905,7 +905,7 @@ def test_streaming_geofence_transitions_real_stream(spark, tmp_path):
         out.writeStream.format("memory").queryName("geofence_out")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180) is True
     got = {(r["entity"], r["ts"], r["fence_id"], r["transition"])
            for r in spark.sql("SELECT * FROM geofence_out").collect()}
     assert got == EXPECT_TRANSITIONS
