@@ -41,6 +41,7 @@ false sharing is possible.
 
 from __future__ import annotations
 
+import functools
 from collections import OrderedDict
 
 import numpy as np
@@ -374,23 +375,35 @@ def decode_batch(vals):
     return db
 
 
-_BAIL = object()
-_CACHE: "OrderedDict[tuple, object]" = OrderedDict()
-_CACHE_MAX = 4
+_MISS = object()
 
 
+def content_lru(build, maxsize=4):
+    """Wrap ``build(vals)`` in a small LRU keyed on the batch content: the
+    key is ``tuple(vals)``, so a hit requires equal values (equal bytes),
+    never mere identity, and no false sharing is possible. Each wrapped
+    function keeps its own ``maxsize`` entries."""
+    cache = OrderedDict()
+
+    @functools.wraps(build)
+    def cached(vals):
+        key = tuple(vals)
+        hit = cache.get(key, _MISS)
+        if hit is not _MISS:
+            cache.move_to_end(key)
+            return hit
+        out = cache[key] = build(vals)
+        if len(cache) > maxsize:
+            cache.popitem(last=False)
+        return out
+
+    return cached
+
+
+@content_lru
 def decode_batch_cached(vals):
     """decode_batch with a small content-equality cache (see module doc)."""
-    key = tuple(vals)
-    hit = _CACHE.get(key)
-    if hit is not None:
-        _CACHE.move_to_end(key)
-        return None if hit is _BAIL else hit
-    db = decode_batch(vals)
-    _CACHE[key] = _BAIL if db is None else db
-    if len(_CACHE) > _CACHE_MAX:
-        _CACHE.popitem(last=False)
-    return db
+    return decode_batch(vals)
 
 
 # ---------------------------------------------------------------------------

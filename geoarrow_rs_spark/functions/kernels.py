@@ -13,6 +13,13 @@ Batches of XY little-endian values of every other type, in any mix, decode
 whole-batch through ``batchdecode`` into one coordinate table plus offset
 arrays, and the kernels run numpy over it. Only batches with big-endian,
 Z/M or EWKB SRID values fall back to per-row ``Geom`` parsing.
+
+Kernels keep no memo of their own: repeated argument values are folded
+once per batch by ``registry._dedup_wrap`` before a kernel runs. The
+per-row parse (``geoms_of``) and the batch decode (``decoded_of``) each
+sit behind a small content-keyed LRU (``batchdecode.content_lru``), so
+chained ST_ calls on one column inside one ArrowEvalPython node parse or
+decode it once.
 """
 
 from __future__ import annotations
@@ -28,6 +35,7 @@ from ..wkb import algorithms as alg
 from ..wkb import core as wc
 from ..wkb import spherical as sph
 from ..wkb.core import Geom, from_wkb, from_wkt, to_ewkb, to_wkb, to_wkt
+from ..wkb.relate import relate
 from . import batchdecode as bd
 
 # ---------------------------------------------------------------------------
@@ -81,30 +89,20 @@ _LS_HDR = b"\x01\x02\x00\x00\x00"
 _PG_HDR = b"\x01\x03\x00\x00\x00"
 
 
-from collections import OrderedDict
-
-_GEOMS_CACHE: "OrderedDict[tuple, list]" = OrderedDict()
-_GEOMS_CACHE_MAX = 4
+@bd.content_lru
+def _parse_batch(vals):
+    return [from_wkb(v) if v is not None else None for v in vals]
 
 
 def geoms_of(s: pd.Series):
-    """Parse a WKB batch to Geoms, with the same content-keyed cache as
-    decode_batch_cached: chained slow-path kernels on one column inside an
-    ArrowEvalPython node (Simplify + SimplifyVW, a predicate stack on the
-    same pair, ...) parse the batch once. INVARIANT: callers must treat
-    the returned Geoms as immutable — every mutating kernel (k_set_srid)
-    parses privately, and algorithms copy before writing."""
-    vals = list(s)
-    key = tuple(vals)
-    hit = _GEOMS_CACHE.get(key)
-    if hit is not None:
-        _GEOMS_CACHE.move_to_end(key)
-        return hit
-    geoms = [from_wkb(v) if v is not None else None for v in vals]
-    _GEOMS_CACHE[key] = geoms
-    if len(_GEOMS_CACHE) > _GEOMS_CACHE_MAX:
-        _GEOMS_CACHE.popitem(last=False)
-    return geoms
+    """Parse a WKB batch to Geoms through the same kind of content-keyed
+    cache as decode_batch_cached (``bd.content_lru``, its own 4 entries):
+    chained slow-path kernels on one column inside an ArrowEvalPython
+    node (Simplify + SimplifyVW, a predicate stack on the same pair, ...)
+    parse the batch once. INVARIANT: callers must treat the returned
+    Geoms as immutable — every mutating kernel (k_set_srid) parses
+    privately, and algorithms copy before writing."""
+    return _parse_batch(list(s))
 
 
 def decoded_of(vals, allow_gc=False):
@@ -255,83 +253,42 @@ def k_envelope(s):
     return _geom_out([alg.envelope(g) if g is not None else None for g in geoms_of(s)])
 
 
-def _uniq_apply(s, fn):
-    """Apply a pure WKB->result kernel once per DISTINCT value when the
-    batch repeats geometries (2x+ repetition). Real batches are highly
-    repetitive (tiled envelopes, admin boundaries, grid cells), and the
-    per-row python work of chain-style kernels (convex hull, calipers)
-    dominates; computing per distinct value and scattering back is
-    byte-identical per row. Returns None when the batch is mostly unique
-    so the caller runs its normal path with zero overhead beyond one
-    dict build over the value bytes."""
-    vals = list(s)
-    uniq = dict.fromkeys(v for v in vals if v is not None)
-    n_nonnull = sum(v is not None for v in vals)
-    if n_nonnull == 0 or len(uniq) * 2 > n_nonnull:
-        return None
-    u_vals = list(uniq)
-    res = list(fn(pd.Series(u_vals, dtype=object)))
-    m = dict(zip(u_vals, res))
-    return pd.Series(
-        [m[v] if v is not None else None for v in vals], dtype=object
-    )
-
-
-def k_convex_hull(s):
-    dd = _uniq_apply(s, k_convex_hull)
-    if dd is not None:
-        return dd
-    vals = list(s)
+def _hull_geom_out(vals, mk):
+    """Shared decode path for hull-derived geometry kernels: mk(hull) maps
+    each row's batch-computed convex hull Geom to the output Geom. None
+    when the batch does not decode."""
     db = decoded_of(vals, allow_gc=True)
-    if db is not None:
-        out = [None] * len(vals)
-        for (kind, data), i in zip(bd.batch_hulls(db), db.idx):
-            if kind == "empty":
-                g = wc.empty(wc.POLYGON)
-            elif kind == "point":
-                g = wc.point(data[0], data[1])
-            elif kind == "line":
-                g = Geom(wc.LINESTRING, np.asarray(data, dtype=np.float64))
-            else:
-                g = Geom(wc.POLYGON, [np.asarray(data, dtype=np.float64)])
-            out[i] = to_wkb(g)
-        return pd.Series(out, dtype=object)
-    cache = {}
-    out = []
-    for raw, g in zip(vals, geoms_of(s)):
-        key = _pair_key(raw, None)
-        v = cache.get(key, _KMISS)
-        if v is _KMISS:
-            h = alg.convex_hull(g)
-            v = to_wkb(h) if h is not None else None
-            cache[key] = v
-        out.append(v)
+    if db is None:
+        return None
+    out = [None] * len(vals)
+    for (kind, data), i in zip(bd.batch_hulls(db), db.idx):
+        if kind == "empty":
+            g = wc.empty(wc.POLYGON)
+        elif kind == "point":
+            g = wc.point(data[0], data[1])
+        elif kind == "line":
+            g = Geom(wc.LINESTRING, np.asarray(data, dtype=np.float64))
+        else:
+            g = Geom(wc.POLYGON, [np.asarray(data, dtype=np.float64)])
+        out[i] = to_wkb(mk(g))
     return pd.Series(out, dtype=object)
 
 
+def k_convex_hull(s):
+    fast = _hull_geom_out(list(s), lambda h: h)
+    if fast is not None:
+        return fast
+    return _geom_out([alg.convex_hull(g) if g is not None else None for g in geoms_of(s)])
+
+
 def k_min_rotated_rect(s):
-    dd = _uniq_apply(s, k_min_rotated_rect)
-    if dd is not None:
-        return dd
-    vals = list(s)
-    db = decoded_of(vals, allow_gc=True)
-    if db is not None:
-        # calipers run on the batch-computed hull; convex_hull is
-        # deterministic in the point SET (unique+lexsort), so re-hulling
-        # the hull inside minimum_rotated_rect reproduces the same ring
-        # and the same tie-breaking as the slow path
-        out = [None] * len(vals)
-        for (kind, data), i in zip(bd.batch_hulls(db), db.idx):
-            if kind == "empty":
-                g = wc.empty(wc.POLYGON)
-            elif kind == "point":
-                g = wc.point(data[0], data[1])
-            elif kind == "line":
-                g = Geom(wc.LINESTRING, np.asarray(data, dtype=np.float64))
-            else:
-                g = Geom(wc.POLYGON, [np.asarray(data, dtype=np.float64)])
-            out[i] = to_wkb(alg.minimum_rotated_rect(g))
-        return pd.Series(out, dtype=object)
+    # calipers run on the batch-computed hull; convex_hull is
+    # deterministic in the point SET (unique+lexsort), so re-hulling
+    # the hull inside minimum_rotated_rect reproduces the same ring
+    # and the same tie-breaking as the slow path
+    fast = _hull_geom_out(list(s), alg.minimum_rotated_rect)
+    if fast is not None:
+        return fast
     return _geom_out([
         alg.minimum_rotated_rect(g) if g is not None else None for g in geoms_of(s)
     ])
@@ -956,22 +913,12 @@ def k_to_native(s, enc: str):
 
 
 def k_geom_from_wkt(s):
-    # memoize per distinct string: WKT columns are usually CASE literals or
-    # templated shapes with few distinct values per batch
-    cache = {}
     out = []
     for v in s:
-        if v is None:
+        try:
+            out.append(to_wkb(from_wkt(v)) if v is not None else None)
+        except ValueError:
             out.append(None)
-            continue
-        b = cache.get(v)
-        if b is None and v not in cache:
-            try:
-                b = to_wkb(from_wkt(v))
-            except ValueError:
-                b = None
-            cache[v] = b
-        out.append(b)
     return pd.Series(out, dtype=object)
 
 
@@ -1107,27 +1054,13 @@ def _param_geom_kernel(fn):
                 cols.append(list(a))
             else:
                 cols.append([a] * n)
-        raws = list(s)
-        cache = {}
         out = []
         for i, g in enumerate(geoms_of(s)):
             vals = [c[i] for c in cols]
             if g is None or any(v is None for v in vals):
                 out.append(None)
-                continue
-            # memoize on (input bytes, params): batches with a small input
-            # domain (envelope/line families, constant params) collapse to
-            # one evaluation per distinct pair — unhashable params skip
-            try:
-                key = (_pair_key(raws[i], None)[0], tuple(vals))
-            except TypeError:
+            else:
                 out.append(to_wkb(fn(g, *vals)))
-                continue
-            v = cache.get(key, _KMISS)
-            if v is _KMISS:
-                v = to_wkb(fn(g, *vals))
-                cache[key] = v
-            out.append(v)
         return pd.Series(out, dtype=object)
 
     return k
@@ -1436,36 +1369,14 @@ def k_geom_from_ewkb(s):
 # lit() WKB arrives as a constant series (relate.rs:15-18 zip semantics)
 # ---------------------------------------------------------------------------
 
-_KMISS = object()
-
-
-def _pair_key(ab, bb):
-    # non-bytes values (None, pandas NaN) all decode to a null geometry in
-    # geoms_of, so one shared key slot is correct for them
-    ka = bytes(ab) if isinstance(ab, (bytes, bytearray, memoryview)) else None
-    kb = bytes(bb) if isinstance(bb, (bytes, bytearray, memoryview)) else None
-    return (ka, kb)
-
-
 def _binary_kernel(fn, out_dtype=object):
-    """Binary kernel with per-batch memoization on the raw WKB byte pair:
-    real workloads repeat geometry pairs constantly (constant geofence
-    lit(), envelope families, dimension-table geometries), and any Python
-    geometry op dwarfs the bytes-hash cost. Pure-function requirement
-    holds: output depends only on the two inputs."""
+    """Binary kernel: fn over each parsed geometry pair (None for a NULL
+    side; fn decides what a NULL pair yields)."""
     def k(s1, s2):
-        g1s = geoms_of(s1)
-        g2s = geoms_of(s2)
-        cache = {}
-        out = []
-        for ab, bb, a, b in zip(s1, s2, g1s, g2s):
-            key = _pair_key(ab, bb)
-            v = cache.get(key, _KMISS)
-            if v is _KMISS:
-                v = fn(a, b)
-                cache[key] = v
-            out.append(v)
-        return pd.Series(out, dtype=out_dtype)
+        return pd.Series(
+            [fn(a, b) for a, b in zip(geoms_of(s1), geoms_of(s2))],
+            dtype=out_dtype,
+        )
 
     return k
 
@@ -1924,29 +1835,11 @@ k_hausdorff = _binary_kernel(alg.hausdorff_distance, out_dtype=np.float64)
 
 
 def _binary_geom_kernel(fn):
-    """Geometry-output binary kernel, memoized per batch on the input byte
-    pair (see _binary_kernel) — overlays are the most expensive per-row
-    ops in the engine, and batches with repeated operand pairs (envelope
-    families, broadcast scalars) collapse to one evaluation per distinct
-    pair."""
-    def k(s1, s2):
-        g1s = geoms_of(s1)
-        g2s = geoms_of(s2)
-        cache = {}
-        out = []
-        for ab, bb, a, b in zip(s1, s2, g1s, g2s):
-            if a is None or b is None:
-                out.append(None)
-                continue
-            key = _pair_key(ab, bb)
-            v = cache.get(key, _KMISS)
-            if v is _KMISS:
-                v = to_wkb(fn(a, b))
-                cache[key] = v
-            out.append(v)
-        return pd.Series(out, dtype=object)
-
-    return k
+    """Geometry-output binary kernel: NULL if either side is NULL, else
+    the WKB of fn over the parsed pair."""
+    return _binary_kernel(
+        lambda a, b: to_wkb(fn(a, b)) if a is not None and b is not None else None
+    )
 
 
 def _overlay(name):
@@ -1955,21 +1848,7 @@ def _overlay(name):
     return _binary_geom_kernel(getattr(bo, name))
 
 
-def k_relate(s1, s2):
-    from ..wkb.relate import relate
-
-    g1s = geoms_of(s1)
-    g2s = geoms_of(s2)
-    cache = {}
-    out = []
-    for ab, bb, a, b in zip(s1, s2, g1s, g2s):
-        key = _pair_key(ab, bb)
-        v = cache.get(key, _KMISS)
-        if v is _KMISS:
-            v = relate(a, b)
-            cache[key] = v
-        out.append(v)
-    return pd.Series(out, dtype=object)
+k_relate = _binary_kernel(relate)
 
 
 def k_relate_pattern(s1, s2, pat):
@@ -2074,19 +1953,10 @@ def k_collect_two(s1, s2):
              for a, b in zip(v1, v2)],
             dtype=object,
         )
-    cache = {}
-    out = []
-    for ab, bb, a, b in zip(v1, v2, geoms_of(s1), geoms_of(s2)):
-        if a is None or b is None:
-            out.append(None)
-            continue
-        key = _pair_key(ab, bb)
-        v = cache.get(key, _KMISS)
-        if v is _KMISS:
-            v = to_wkb(wc.collection([a, b]))
-            cache[key] = v
-        out.append(v)
-    return pd.Series(out, dtype=object)
+    return _k_collect_two_slow(s1, s2)
+
+
+_k_collect_two_slow = _binary_geom_kernel(lambda a, b: wc.collection([a, b]))
 
 
 # constructors from plain numeric columns ----------------------------------

@@ -242,57 +242,54 @@ _registered_sessions = set()
 # asNondeterministic note in register_functions
 _NONDETERMINISTIC_MARK = {"ST_SubdivideBoxStatsXY"}
 
-_DEDUP_MIN_ROWS = 256      # below this a dict build isn't worth it
-_DEDUP_PROBE = 512         # rows sampled to estimate repetition
-_DEDUP_PROBE_MAX_FRAC = 0.5  # probe must show >= 2x repetition to engage
+_DEDUP_PROBE = 512  # strided sample rows screened for a repeated key
 
 
 def _dedup_wrap(fn):
-    """Batch-level value dedup for a pure kernel: every ST_* scalar kernel
-    is a deterministic function of its argument VALUES, and real batches
-    are often highly repetitive (tiled envelopes, admin polygons, grid
-    cells, modular synthetic coordinates). When a cheap probe of the
-    first rows shows 2x+ repetition, the kernel runs once per distinct
-    argument tuple and results scatter back positionally — byte-identical
-    output, chain/decode cost paid per distinct value instead of per row.
-    Unique batches fall through to the raw kernel after a ~0.1 ms probe.
+    """Batch-level value dedup for a pure kernel, the one value dedup of
+    the ST_* kernels: every ST_* scalar kernel is a deterministic function
+    of its argument VALUES, and real batches are often highly repetitive
+    (tiled envelopes, admin polygons, grid cells, CASE literals, constant
+    parameters). When at most half of the batch's argument tuples are
+    distinct, the kernel runs once per distinct tuple and the results
+    scatter back positionally — byte-identical output, decode and kernel
+    cost paid per distinct value instead of per row. The rule looks at
+    the whole batch, at any batch size; a strided sample of at most 512
+    rows with no repeated key first sends unique batches straight to the
+    kernel, so they pay ~0.2 ms per 8k rows instead of a full key build.
 
-    Bails (returns the raw kernel) on: struct args (DataFrame), unhashable
-    args (arrays), tiny batches, and low repetition. Float columns key on
-    their IEEE-754 bit pattern (8-byte slices of the raw buffer), so 0.0
-    and -0.0 never merge (a WKB constructor writes the sign bit) and equal
-    NaN payloads merge safely (same input bits -> same kernel output).
+    Calls the raw kernel on: struct args (DataFrame), unhashable args
+    (arrays), and batches with more than n/2 distinct tuples. Float
+    columns key on their IEEE-754 bit pattern (8-byte slices of the raw
+    buffer), so 0.0 and -0.0 never merge (a WKB constructor writes the
+    sign bit) and equal NaN payloads merge safely (same input bits ->
+    same kernel output).
     """
 
-    def _keys_of(c, lo, hi):
+    def _keys_of(c, rows):
         # float dtypes: bit-pattern keys (0.0 != -0.0, NaN == same-bits NaN)
-        if getattr(c.dtype, "kind", "") == "f":
-            a = np.ascontiguousarray(c.to_numpy()[lo:hi])
-            raw = a.tobytes()
+        a = c.to_numpy()[rows]
+        if a.dtype.kind == "f":
+            raw = np.ascontiguousarray(a).tobytes()
             w = a.dtype.itemsize
             return [raw[i * w:(i + 1) * w] for i in range(len(a))]
-        return list(c.iloc[lo:hi])
+        return list(a)
+
+    def _tuples(cols, rows):
+        if len(cols) == 1:
+            return _keys_of(cols[0], rows)
+        return list(zip(*(_keys_of(c, rows) for c in cols)))
 
     def wrapped(*cols):
         n = len(cols[0]) if cols else 0
-        if n < _DEDUP_MIN_ROWS or any(
-            isinstance(c, pd.DataFrame) for c in cols
-        ):
+        if n == 0 or any(isinstance(c, pd.DataFrame) for c in cols):
             return fn(*cols)
+        step = -(-n // _DEDUP_PROBE)
         try:
-            if len(cols) == 1:
-                probe = set(_keys_of(cols[0], 0, _DEDUP_PROBE))
-            else:
-                probe = set(
-                    zip(*(_keys_of(c, 0, _DEDUP_PROBE) for c in cols))
-                )
-            probe_n = min(n, _DEDUP_PROBE)
-            if len(probe) > probe_n * _DEDUP_PROBE_MAX_FRAC:
+            sample = _tuples(cols, slice(None, None, step))
+            if len(set(sample)) == len(sample):
                 return fn(*cols)
-            if len(cols) == 1:
-                keys = _keys_of(cols[0], 0, n)
-            else:
-                keys = list(zip(*(_keys_of(c, 0, n) for c in cols)))
+            keys = sample if step == 1 else _tuples(cols, slice(None))
             uniq = {}
             order = []  # first-occurrence row index per distinct key
             for i, k in enumerate(keys):

@@ -989,6 +989,27 @@ def test_geofence_idle_eviction_branch():
     assert st3.timeout_set is None
 
 
+def _await_input_consumed(q, n_rows, timeout_s=120):
+    """Poll ``q.recentProgress`` until the query's micro-batches have read
+    ``n_rows`` input rows; True if that happens within ``timeout_s``.
+
+    Queries on the ProcessingTimeTimeout path never finish under
+    ``availableNow``: the timeout makes Spark run empty micro-batches
+    forever, and neither ``awaitTermination`` nor ``processAllAvailable``
+    returns. Tests of that path wait for their input here, then stop."""
+    import time
+
+    deadline = time.monotonic() + timeout_s
+    rows_by_batch = {}
+    while time.monotonic() < deadline:
+        for p in q.recentProgress:
+            rows_by_batch[p.batchId] = p.numInputRows
+        if sum(rows_by_batch.values()) >= n_rows:
+            return True
+        time.sleep(0.2)
+    return False
+
+
 def test_geofence_idle_timeout_stream_matches_batch(spark, tmp_path):
     """With a generous idle_timeout_ms (never reached inside one
     availableNow run) the streamed transitions equal the batch twin —
@@ -1018,7 +1039,8 @@ def test_geofence_idle_timeout_stream_matches_batch(spark, tmp_path):
         .outputMode("append").trigger(availableNow=True).start()
     )
     try:
-        q.awaitTermination(180)
+        assert _await_input_consumed(q, len(rows))
+        q.stop()
         got = {(r["entity"], r["ts"], r["fence_id"], r["transition"])
                for r in spark.sql("SELECT * FROM geofence_idle").collect()}
         assert got == EXPECT_TRANSITIONS
@@ -1085,7 +1107,8 @@ def test_streaming_dedup_ttl_stream_matches_untimed(spark, tmp_path):
         .outputMode("append").trigger(availableNow=True).start()
     )
     try:
-        q.awaitTermination(180)
+        assert _await_input_consumed(q, len(rows))
+        q.stop()
         got = spark.sql("SELECT text FROM dedup_ttl").collect()
         assert sorted(r.text for r in got) == [f"t{i}" for i in range(7)]
     finally:
