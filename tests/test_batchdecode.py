@@ -9,6 +9,7 @@ answers to tight tolerance (identical term sets, summation order differs).
 """
 
 import math
+import os
 import random
 
 import numpy as np
@@ -275,13 +276,19 @@ def test_flip_and_transform_batch_parity(batch):
     assert got_t == want_t
 
 
+COUNTRIES_FGB = "/root/reference/fixtures/flatgeobuf/countries.fgb"
+
+
+@pytest.mark.skipif(
+    not os.path.exists(COUNTRIES_FGB), reason=f"needs {COUNTRIES_FGB}"
+)
 def test_real_world_countries_batch(spark):
     """179 real country multipolygons (holes, many rings, mixed Polygon/
     MultiPolygon) through the batch decode path — results must match the
     per-row Geom path exactly."""
     from geoarrow_rs_spark.io import read_flatgeobuf
 
-    df = read_flatgeobuf(spark, "/root/reference/fixtures/flatgeobuf/countries.fgb")
+    df = read_flatgeobuf(spark, COUNTRIES_FGB)
     wkb_vals = [r["geometry"] for r in df.select("geometry").collect()]
     assert len(wkb_vals) == 179
     s = pd.Series(wkb_vals, dtype=object)

@@ -46,8 +46,18 @@ def test_shapefile_roundtrip(spark, tmp_path):
 
 
 FGB_DIR = "/root/reference/fixtures/flatgeobuf"
+COUNTRIES_FGB = f"{FGB_DIR}/countries.fgb"
 
 
+def _needs(*paths):
+    """Skip unless every reference fixture the test reads is on this host."""
+    missing = [p for p in paths if not os.path.exists(p)]
+    return pytest.mark.skipif(
+        bool(missing), reason=f"reference fixture absent: {', '.join(missing)}"
+    )
+
+
+@_needs(COUNTRIES_FGB)
 def test_flatgeobuf_countries(spark):
     from geoarrow_rs_spark.io import read_flatgeobuf
 
@@ -74,6 +84,7 @@ def test_flatgeobuf_countries(spark):
     assert "France" in names_pruned and "Brazil" not in names_pruned
 
 
+@_needs(COUNTRIES_FGB)
 def test_flatgeobuf_column_projection(spark):
     from geoarrow_rs_spark.io import read_flatgeobuf
 
@@ -81,6 +92,7 @@ def test_flatgeobuf_column_projection(spark):
     assert df.columns == ["name", "geometry"]
 
 
+@_needs(f"{FGB_DIR}/ns-water_water-line_small.fgb", f"{FGB_DIR}/poly00.fgb")
 def test_flatgeobuf_lines_and_polys(spark):
     from geoarrow_rs_spark.io import read_flatgeobuf
 
@@ -125,6 +137,7 @@ def test_flatgeobuf_write_roundtrip(spark, tmp_path):
     assert rows["mpoly"]["a"] == 8.0 and rows["mpoly"]["t"] == "ST_MultiPolygon"
 
 
+@_needs(COUNTRIES_FGB)
 def test_flatgeobuf_rewrite_countries(spark, tmp_path):
     """Read the reference fixture, write with our writer, read back — full
     fidelity on 179 real multipolygons."""
@@ -146,6 +159,11 @@ def test_flatgeobuf_rewrite_countries(spark, tmp_path):
 GP_DIR = "/root/reference/fixtures/geoparquet"
 
 
+@_needs(
+    f"{GP_DIR}/nybb_wkb.parquet",
+    f"{GP_DIR}/nybb_wkb_covering.parquet",
+    f"{GP_DIR}/nybb_geoarrow.parquet",
+)
 def test_geoparquet_reference_fixtures_all_encodings(spark):
     """nybb in WKB / WKB+covering / native-multipolygon encodings must yield
     identical geometry (round(area) match across encodings)."""
@@ -166,6 +184,7 @@ def test_geoparquet_reference_fixtures_all_encodings(spark):
     assert "Brooklyn" in names and "Manhattan" in names
 
 
+@_needs(f"{GP_DIR}/overture_buildings.parquet")
 def test_geoparquet_overture_real_world(spark):
     from geoarrow_rs_spark.io import read_geoparquet
 
@@ -181,6 +200,7 @@ def test_geoparquet_overture_real_world(spark):
     assert valid >= n * 0.95
 
 
+@_needs("/root/reference/fixtures/roads.geojson")
 def test_geojson_wholefile_roads(spark):
     from geoarrow_rs_spark.io import read_geojson
 
@@ -394,6 +414,7 @@ def test_geoparquet_footer_geo_metadata_all_parts(spark, tmp_path):
     assert read_geoparquet(spark, ppath).count() == 400
 
 
+@_needs(COUNTRIES_FGB)
 def test_flatgeobuf_python_datasource(spark):
     """spark.read.format('flatgeobuf') — the Python Data Source wrapper
     must return exactly what the function API returns: full scan, Hilbert
@@ -459,6 +480,7 @@ def test_coalesce_ranges_merges_and_splits():
     assert len(capped) == 2
 
 
+@_needs(COUNTRIES_FGB)
 def test_fgb_file_url_through_generic_range_path(spark):
     """file:// URLs route through the generic RangeSource machinery (the
     sandbox stand-in for remote object stores): planning and feature
@@ -485,6 +507,7 @@ def test_fgb_file_url_through_generic_range_path(spark):
     assert pl == pu and 0 < len(pl) < 179
 
 
+@_needs(COUNTRIES_FGB)
 def test_fgb_http_range_read(spark):
     """End-to-end object-store read: a localhost HTTP server that honors
     Range headers serves countries.fgb; read_flatgeobuf plans the scan
@@ -583,6 +606,7 @@ def test_geoparquet_native_nested_encodings_roundtrip(spark, tmp_path):
         assert got == exp, enc
 
 
+@_needs(f"{GP_DIR}/nybb_geoarrow.parquet")
 def test_geoparquet_nybb_native_rewrite_identical(spark, tmp_path):
     """The reference's native-multipolygon nybb fixture, re-written by this
     repo's native multipolygon encoder and read back: identical WKB per
@@ -672,6 +696,7 @@ def test_geoparquet_info_accessors(spark, tmp_path):
         assert b[0] >= fb[0] and b[1] >= fb[1] and b[2] <= fb[2] and b[3] <= fb[3]
 
 
+@_needs(COUNTRIES_FGB)
 def test_fgb_read_geometry_false(spark):
     """read_geometry=False omits the geometry column (properties-only
     scan); with bbox it still filters exactly, then drops geometry."""

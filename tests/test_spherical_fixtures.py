@@ -13,11 +13,13 @@ by calling the kernel twice.
 """
 
 import math
+import os
 
 import numpy as np
 import pytest
 
 FGB = "/root/reference/fixtures/flatgeobuf/countries.fgb"
+pytestmark = pytest.mark.skipif(not os.path.exists(FGB), reason=f"needs {FGB}")
 EARTH_R = 6371008.8
 
 
