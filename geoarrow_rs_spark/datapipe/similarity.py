@@ -1,19 +1,23 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk``: brute-force baseline — broadcast the (small) query set,
-  native dot products, window top-k. Exact; scales linearly in corpus size.
+- ``cosine_topk``: brute-force baseline — collect the (small) query set,
+  score corpus batches with numpy under ``mapInArrow`` (only per-batch
+  top-k candidates leave the scorer), window top-k. Exact; scales linearly
+  in corpus size.
 - ``ivf_topk``: scale path — coarse quantizer (deterministic grid/LSH
   centroids) partitions the corpus; queries probe only matching partitions.
 - ``srp_bucket_expr``: sign-random-projection bucket for LSH blocking.
 
-Dot products use ``F.zip_with`` + ``F.aggregate`` (native, no UDF). For
+Other dot products use ``F.zip_with`` + ``F.aggregate`` (native, no UDF). For
 cross-engine oracle determinism the decimal variant ``dot_decimal_expr``
 accumulates per-term products as DECIMAL(30,12) — exact, order-independent.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+import numpy as _np
+import pyarrow as _pa
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..checkpoint import checkpoint_df, collect_small
 
@@ -93,6 +97,85 @@ def cosine_fast_expr(v1, v2, dim_hint: int | None = None):
     return F.when(den > 0, num / den).otherwise(F.lit(0.0))
 
 
+# round(., 8) can give one value only to doubles less than 1e-8 apart, give
+# or take the error of the decimal string it rounds (an ulp); a row more than
+# 2e-8 below a batch's k-th best cosine is behind k rows whatever its id
+_TIE_SLACK = 2e-8
+
+
+def _fold(X, Y):
+    """Left fold ``0.0 + x1*y1 + x2*y2 + ...`` over the last axis — the IEEE
+    op sequence of ``dot_inorder_expr`` (numpy's ``sum`` is pairwise)."""
+    acc = _np.zeros(_np.broadcast_shapes(X.shape[:-1], Y.shape[:-1]))
+    for d in range(X.shape[-1]):
+        acc = acc + X[..., d] * Y[..., d]
+    return acc
+
+
+def _unpack_vectors(arr):
+    """(usable, starts, lengths, values) of an ``array<double>`` Arrow
+    array. A row is usable when neither it nor any element is NULL; either
+    makes ``zip_with``/``aggregate``, and so the row's norm, NULL."""
+    offs = arr.offsets.to_numpy()
+    vals = arr.values
+    nulls = _np.concatenate(
+        [[0], _np.cumsum(vals.is_null().to_numpy(zero_copy_only=False))])
+    usable = arr.is_valid().to_numpy(zero_copy_only=False) & (
+        nulls[offs[1:]] == nulls[offs[:-1]])
+    return usable, offs[:-1], _np.diff(offs), vals.to_numpy(zero_copy_only=False)
+
+
+def _gather(vals, starts, rows, L):
+    return vals[starts[rows, None] + _np.arange(L)].reshape(len(rows), L)
+
+
+def _cosines(cv, q_ok, q_norm, q_groups):
+    """Unrounded cosine of every (corpus row, query) pair and its NULL mask,
+    as ``when(qn * cn > 0, dot / (qn * cn)).otherwise(0.0)`` computes it: a
+    NULL norm gives 0.0, a NaN ``den`` counts as > 0 (Spark orders NaN above
+    every number), and vectors of different lengths give a NULL dot."""
+    usable, starts, lens, vals = _unpack_vectors(cv)
+    cos = _np.zeros((len(cv), len(q_ok)))
+    null = _np.zeros(cos.shape, bool)
+    for L in _np.unique(lens[usable]):
+        rows = _np.flatnonzero(usable & (lens == L))
+        X = _gather(vals, starts, rows, L)
+        den = _np.sqrt(_fold(X, X))[:, None] * q_norm[None, :]
+        live = q_ok & ((den > 0) | _np.isnan(den))
+        sub_cos = _np.zeros(den.shape)
+        sub_null = live.copy()
+        if L in q_groups:
+            cols, Q = q_groups[L]
+            with _np.errstate(all="ignore"):
+                r = _fold(X[:, None, :], Q[None, :, :]) / den[:, cols]
+            sub_cos[:, cols] = _np.where(live[:, cols], r, 0.0)
+            sub_null[:, cols] = False
+        cos[rows] = sub_cos
+        null[rows] = sub_null
+    return cos, null
+
+
+def _topk_candidates(batches, q_ids, q_ok, q_norm, q_groups, k):
+    """Per corpus batch and query, the rows that can still reach the top k
+    of ``(round(cosine, 8) desc, neighbor_id asc)``: every row within
+    ``_TIE_SLACK`` of the batch's k-th best, every NaN (it ranks first),
+    and every row when fewer than k cosines are non-NULL (NULL ranks
+    last)."""
+    for b in batches:
+        cos, null = _cosines(b.column(1), q_ok, q_norm, q_groups)
+        keep = ~null
+        if 0 < k <= len(cos):
+            key = _np.where(null, -_np.inf, _np.where(_np.isnan(cos), _np.inf, cos))
+            kth = _np.partition(key, len(key) - k, axis=0)[len(key) - k]
+            keep &= key >= kth - _TIE_SLACK
+        keep |= (~null).sum(axis=0) < k
+        rows, cols = _np.nonzero(keep)
+        yield _pa.RecordBatch.from_arrays(
+            [q_ids.take(cols), b.column(0).take(rows),
+             _pa.array(cos[rows, cols], mask=null[rows, cols])],
+            ["query_id", "neighbor_id", "cosine"])
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -102,33 +185,51 @@ def cosine_topk(
     corpus_vec: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
-    """Exact brute-force top-k: broadcast queries x corpus, rank by
-    (cosine desc, corpus id) for determinism. Output: query_id, neighbor_id,
-    cosine, rank."""
-    # precompute per-side norms once (recomputing them per pair would
-    # multiply the decimal-accumulation work by the other side's cardinality)
+    """Exact brute-force top-k, ranked by (cosine desc, corpus id).
+    Output: query_id, neighbor_id, cosine, rank.
+
+    The (small) query set is collected once as Arrow, which is the one
+    job this call launches; ``queries`` must be a batch frame. A numpy
+    scorer under ``mapInArrow`` folds each corpus batch against every
+    query with the IEEE op sequence of ``cosine_fast_expr`` and keeps per
+    query only the rows that can still reach the top k. Spark rounds those
+    candidates to 8 dp and ranks them with a window; rounding is monotone,
+    so the candidates hold the exact top k."""
+    if queries.isStreaming:
+        raise ValueError("cosine_topk: `queries` must be a batch DataFrame "
+                         "(it is collected when the plan is built)")
     q = queries.select(
         F.col(query_id).alias("query_id"),
-        F.col(query_vec).alias("__qv"),
-        F.sqrt(dot_inorder_expr(F.col(query_vec), F.col(query_vec))).alias("__qn"),
+        F.col(query_vec).cast("array<double>").alias("qv"),
     )
+    qt = q.toArrow()
+    q_ids = qt.column(0).combine_chunks()
+    q_ok, starts, lens, vals = _unpack_vectors(qt.column(1).combine_chunks())
+    q_norm = _np.zeros(len(q_ok))
+    q_groups = {}
+    for L in _np.unique(lens[q_ok]):
+        cols = _np.flatnonzero(q_ok & (lens == L))
+        Q = _gather(vals, starts, cols, L)
+        q_norm[cols] = _np.sqrt(_fold(Q, Q))
+        q_groups[L] = (cols, Q)
+
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
-        F.col(corpus_vec).alias("__cv"),
-        F.sqrt(dot_inorder_expr(F.col(corpus_vec), F.col(corpus_vec))).alias("__cn"),
+        F.col(corpus_vec).cast("array<double>").alias("cv"),
     )
-    den = F.col("__qn") * F.col("__cn")
-    num = dot_inorder_expr(F.col("__qv"), F.col("__cv"))
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.when(den > 0, num / den).otherwise(F.lit(0.0)), 8).alias("cosine"),
-    )
+    schema = T.StructType([
+        T.StructField("query_id", q.schema["query_id"].dataType),
+        T.StructField("neighbor_id", c.schema["neighbor_id"].dataType),
+        T.StructField("cosine", T.DoubleType()),
+    ])
+    cands = c.mapInArrow(
+        lambda it: _topk_candidates(it, q_ids, q_ok, q_norm, q_groups, k), schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        cands.withColumn("cosine", F.round("cosine", 8))
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
 
@@ -424,8 +525,6 @@ def assign_clusters(
 # ---------------------------------------------------------------------------
 
 from decimal import ROUND_HALF_UP as _HALF_UP, Decimal as _Dec
-
-import numpy as _np
 
 _E12 = _Dec("1e-12")
 _E11 = _Dec("1e-11")
@@ -1351,8 +1450,6 @@ def mmr_rerank(
             )
         ]
         out = _mmr_local(rows, k, lam_i, scale, f"1E-{round_to}")
-        from pyspark.sql import types as T
-
         in_schema = {f.name: f.dataType for f in base.schema.fields}
         schema = T.StructType([
             T.StructField(qid, in_schema[qid]),

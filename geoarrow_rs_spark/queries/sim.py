@@ -111,7 +111,7 @@ FROM embeddings
 
 
 def sim_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-k baseline: broadcast queries, in-order fold dots, window rank."""
+    """Brute-force cosine top-k baseline: collected queries, in-order fold dots over corpus batches, window rank."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 8)
     corpus = e.where(F.col("vec_id") >= 8)

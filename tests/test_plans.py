@@ -377,6 +377,24 @@ def test_knn_join_broadcasts_neither_side(spark, sf_dir):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_cosine_topk_scores_under_map_in_arrow(spark, sf_dir):
+    """cosine_topk collects the query set while it is built (its one job),
+    scores the corpus in one Python map-in-Arrow node and ranks the
+    candidates in one window: no broadcast nested loop, no cartesian."""
+    from geoarrow_rs_spark.datapipe.similarity import cosine_topk
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = len(tracker.getJobIdsForGroup() or [])
+    out = cosine_topk(e.where(F.col("vec_id") < 4), e, k=3)
+    jobs_after = len(tracker.getJobIdsForGroup() or [])
+    assert jobs_after - jobs_before == 1, "cosine_topk build must be one collect"
+    plan = _plan(out)
+    assert len(re.findall(r"\bMapInArrow ", plan)) == 1, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan, plan
+
+
 def test_multipolygon_stats_plan_shape(spark, sf_dir):
     """geo_multipolygon_stats must (a) run the whole fused construction->
     stats chain as ONE ArrowEvalPython node with a single ST_BoxPairStats
@@ -407,7 +425,6 @@ def test_catalog_wide_no_unintended_cartesian(spark, sf_dir):
     allowed = {
         "q11_important_values",      # scalar threshold row
         "q22_idle_customers",        # scalar avg balance row
-        "sim_cosine_topk",           # broadcast query set (deliberate baseline)
         "sim_near_dup_pairs",        # broadcast query set, exact refine
         "sim_kmeans_ivf_topk",       # broadcast centroid set
         "text_bm25_topk",            # single-row corpus stats
