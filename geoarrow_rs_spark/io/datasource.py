@@ -1,13 +1,14 @@
-"""Python Data Source API (Spark 4) wrappers — idiomatic
-``spark.read.format(...)`` access to the custom readers.
+"""Python Data Source API (Spark 4) readers and the GeoParquet writer —
+the one scan per file format.
 
-``spark.read.format("flatgeobuf").load(path)`` plans partitions through
-the same driver-side header/Hilbert-index logic as
-``io.flatgeobuf.read_flatgeobuf`` (reference parity:
-rust/geoarrow-flatgeobuf/src/reader/sync.rs:38), but surfaces it as a
-first-class Spark source: the planner sees real InputPartitions (one per
-feature-offset chunk), executors open the file themselves, and options
-ride the standard reader API:
+Each reader class here is the package's only code that decodes a
+partition of its format (Spark's own parquet scan serves the other
+GeoParquet reads). ``read_flatgeobuf`` and ``read_shapefile`` are thin wrappers that
+load through these sources (passing the schema they want), and
+``read_geoparquet``'s native-encoding bbox path loads through the
+``geoparquet`` source. The planner sees real InputPartitions (feature-
+offset chunks, .shx record ranges, surviving row groups), executors open
+the files themselves, and options ride the standard reader API:
 
     spark.read.format("flatgeobuf")
         .option("bbox", "-20,30,40,70")      # Hilbert R-tree pruned
@@ -15,14 +16,15 @@ ride the standard reader API:
         .load("countries.fgb")
 
 Register once per session with ``register_datasources(spark)`` (done by
-``geoarrow_rs_spark.register_all``). The DataFrame-function reader stays
-the primary API; this wrapper exists so format-string pipelines and SQL
-``CREATE TABLE ... USING flatgeobuf`` work unchanged.
+``geoarrow_rs_spark.register_all`` and by the wrapping functions), so
+format-string pipelines and SQL ``CREATE TABLE ... USING flatgeobuf``
+work as well.
 """
 
 from __future__ import annotations
 
 import struct
+from contextlib import nullcontext
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -39,7 +41,7 @@ except ImportError:  # pragma: no cover - env ships 4.1
         pass                            # never plans a Python stream sink
 from pyspark.sql.types import BinaryType, StructField, StructType
 
-_CHUNK = 20000  # feature offsets per partition (matches read_flatgeobuf)
+_CHUNK = 20000  # feature offsets per partition
 
 # SQL catalog tables (CREATE TABLE ... USING <source>) reach schema()
 # with the full option map but reach reader() with an EMPTY one in this
@@ -245,19 +247,15 @@ class FlatGeobufDataSource(DataSource):
         return p
 
     def schema(self):
-        from .flatgeobuf import _fgb_spark_type, _plan_fgb
+        from .flatgeobuf import _fgb_header, _fgb_schema
 
-        header, _ = _plan_fgb(self._path())
         want = None
         if self.options.get("columns"):
-            want = {c.strip() for c in self.options["columns"].split(",")}
-        geometry_col = self.options.get("geometry_col", "geometry")
-        fields = [
-            StructField(c["name"], _fgb_spark_type(c["type"]))
-            for c in header["columns"]
-            if want is None or c["name"] in want
-        ]
-        out = StructType(fields + [StructField(geometry_col, BinaryType())])
+            want = [c.strip() for c in self.options["columns"].split(",")]
+        out = _fgb_schema(
+            _fgb_header(self._path()), want,
+            self.options.get("geometry_col", "geometry"),
+        )
         return _stamp_options(
             out, self.options, ("path", "bbox", "columns", "geometry_col")
         )
@@ -268,11 +266,17 @@ class FlatGeobufDataSource(DataSource):
 
 
 class _FgbReader(_AttrFilterMixin, DataSourceReader):
+    """Emits the schema's fields by name: header properties, and WKB for
+    the ``geometry_col`` field. A schema without that field (a
+    properties-only read) never encodes geometry, and decodes it only for
+    the bbox refine."""
+
     def __init__(self, path, options, schema):
         from .flatgeobuf import _plan_fgb
 
         self.path = path
         self.schema = schema
+        self.gcol = options.get("geometry_col", "geometry")
         self.pushed = []
         self.bbox = None
         if options.get("bbox"):
@@ -282,7 +286,7 @@ class _FgbReader(_AttrFilterMixin, DataSourceReader):
         self._header, self._extents = _plan_fgb(path, self.bbox)
 
     def _filterable_names(self):
-        return {f.name for f in self.schema.fields[:-1]}  # props only
+        return {f.name for f in self.schema.fields} - {self.gcol}
 
     def partitions(self):
         extents = self._extents
@@ -304,8 +308,10 @@ class _FgbReader(_AttrFilterMixin, DataSourceReader):
         cols_meta = header["columns"]
         gtype_hint = header["geometry_type"]
         has_z = header["has_z"]
-        prop_names = [f.name for f in self.schema.fields[:-1]]
+        names = [f.name for f in self.schema.fields]
+        emit_geom = self.gcol in names
         bbox = self.bbox
+        geom = None
         with open_range_source(self.path) as src:
             for roff, rend, members in coalesce_ranges(partition.extents):
                 blob = src.read_at(roff, rend - roff)
@@ -314,12 +320,13 @@ class _FgbReader(_AttrFilterMixin, DataSourceReader):
                     (sz,) = struct.unpack_from("<I", blob, rel)
                     buf = blob[rel + 4 : rel + 4 + sz]
                     feat = _root(buf)
-                    geom_t = feat.table(0)
-                    geom = _geometry_to_geom(geom_t, gtype_hint, has_z) if geom_t else None
-                    if bbox is not None and geom is not None:
-                        # exact refine after the conservative index prune —
-                        # identical semantics to read_flatgeobuf's post-filter
-                        b = alg.bounds(geom)
+                    if emit_geom or bbox is not None:
+                        geom_t = feat.table(0)
+                        geom = _geometry_to_geom(geom_t, gtype_hint, has_z) if geom_t else None
+                    if bbox is not None:
+                        # exact refine after the conservative index prune;
+                        # NULL and empty geometries never intersect
+                        b = alg.bounds(geom) if geom is not None else None
                         if b is None or (
                             b[2] < bbox[0] or b[0] > bbox[2]
                             or b[3] < bbox[1] or b[1] > bbox[3]
@@ -328,10 +335,11 @@ class _FgbReader(_AttrFilterMixin, DataSourceReader):
                     props = _decode_properties(feat.vector_bytes(1), cols_meta)
                     if self.pushed and not self._props_pass(props.get):
                         continue  # dropped before WKB encode + transfer
-                    yield tuple(
-                        [props.get(n) for n in prop_names]
-                        + [wc.to_wkb(geom) if geom is not None else None]
-                    )
+                    if emit_geom:
+                        props[self.gcol] = (
+                            wc.to_wkb(geom) if geom is not None else None
+                        )
+                    yield tuple(props.get(n) for n in names)
 
 
 class _ShpPartition(InputPartition):
@@ -341,8 +349,9 @@ class _ShpPartition(InputPartition):
 
 class ShapefileDataSource(DataSource):
     """``format("shapefile")``: .shx record index drives the partitions,
-    .dbf supplies property columns (``read_shapefile`` parity). Pass the
-    .shp path to ``.load``; the .shx/.dbf siblings are found next to it."""
+    .dbf supplies property columns. Pass the .shp path to ``.load``; the
+    .shx/.dbf siblings are found next to it (option ``dbf`` names another
+    .dbf)."""
 
     @classmethod
     def name(cls):
@@ -362,28 +371,12 @@ class ShapefileDataSource(DataSource):
         return p, (dbf if os.path.exists(dbf) else None)
 
     def schema(self):
-        from pyspark.sql.types import (
-            BooleanType, DoubleType, LongType, StringType,
-        )
-
-        from .shapefile import _read_dbf_header
+        from .shapefile import _read_dbf_header, _shp_schema
 
         _, dbf = self._paths()
-        fields = []
-        if dbf:
-            _, _, _, fields = _read_dbf_header(dbf)
-
-        def sp(ftype, fdec):
-            if ftype in ("N", "F"):
-                return DoubleType() if fdec > 0 else LongType()
-            if ftype == "L":
-                return BooleanType()
-            return StringType()
-
-        geometry_col = self.options.get("geometry_col", "geometry")
-        out = StructType(
-            [StructField(n, sp(t, d)) for (n, t, _l, d) in fields]
-            + [StructField(geometry_col, BinaryType())]
+        out = _shp_schema(
+            _read_dbf_header(dbf)[3] if dbf else [],
+            self.options.get("geometry_col", "geometry"),
         )
         return _stamp_options(
             out, self.options, ("path", "dbf", "geometry_col")
@@ -391,29 +384,41 @@ class ShapefileDataSource(DataSource):
 
     def reader(self, schema):
         self.options = _recover_options(self.options, schema)
-        return _ShpReader(*self._paths(), schema)
+        return _ShpReader(
+            *self._paths(), schema, self.options.get("geometry_col", "geometry")
+        )
 
 
 class _ShpReader(_AttrFilterMixin, DataSourceReader):
-    def __init__(self, shp_path, dbf_path, schema):
+    """Emits the schema's fields by name: .dbf fields, and WKB for the
+    ``geometry_col`` field. The .dbf is opened only when the schema names
+    one of its fields."""
+
+    def __init__(self, shp_path, dbf_path, schema, geometry_col):
+        import os
+
         from .shapefile import _read_dbf_header, _read_shx
 
         self.shp_path = shp_path
-        self.dbf_path = dbf_path
         self.schema = schema
+        self.gcol = geometry_col
         self.pushed = []
-        import os
-
         self._index = _read_shx(os.path.splitext(shp_path)[0] + ".shx")
+        self._fields = []  # (name, type, byte offset, length, decimals)
         self._dbf_meta = None
-        self._fields = []
         if dbf_path:
+            names = set(schema.names)
             _, hsize, rsize, fields = _read_dbf_header(dbf_path)
+            pos = 0
+            for (n, t, l, d) in fields:
+                if n in names:
+                    self._fields.append((n, t, pos, l, d))
+                pos += l
             self._dbf_meta = (hsize, rsize)
-            self._fields = fields
+        self.dbf_path = dbf_path if self._fields else None
 
     def _filterable_names(self):
-        return {n for (n, _t, _l, _d) in self._fields}
+        return {f[0] for f in self._fields}
 
     def partitions(self):
         recs = [
@@ -429,38 +434,37 @@ class _ShpReader(_AttrFilterMixin, DataSourceReader):
         from ..wkb import core as wc
         from .shapefile import _decode_record, _parse_dbf_value
 
-        dbf = open(self.dbf_path, "rb") if self.dbf_path else None
-        names = [n for (n, _t, _l, _d) in self._fields]
-        with open(self.shp_path, "rb") as shp:
+        names = self.schema.names
+        emit_geom = self.gcol in names
+        row = {}
+        with open(self.shp_path, "rb") as shp, (
+            open(self.dbf_path, "rb") if self.dbf_path else nullcontext()
+        ) as dbf:
             for rid, off, length in partition.records:
-                vals = []
                 if dbf is not None:
                     hsize, rsize = self._dbf_meta
-                    dbf.seek(hsize + rid * rsize + 1)
+                    dbf.seek(hsize + rid * rsize + 1)  # +1 deletion flag
                     raw = dbf.read(rsize - 1)
-                    pos = 0
-                    for (n, t, l, d) in self._fields:
-                        vals.append(_parse_dbf_value(raw[pos : pos + l], t, d))
-                        pos += l
+                    row = {
+                        n: _parse_dbf_value(raw[p : p + l], t, d)
+                        for (n, t, p, l, d) in self._fields
+                    }
                 # dbf attributes filter BEFORE the geometry record is even
                 # read — pushed predicates skip the .shp seek entirely
-                if self.pushed:
-                    row = dict(zip(names, vals))
-                    if not self._props_pass(row.get):
-                        continue
-                shp.seek(off + 8)
-                geom = _decode_record(shp.read(length))
-                vals.append(wc.to_wkb(geom) if geom is not None else None)
-                yield tuple(vals)
-        if dbf is not None:
-            dbf.close()
+                if self.pushed and not self._props_pass(row.get):
+                    continue
+                if emit_geom:
+                    shp.seek(off + 8)  # skip the record header
+                    geom = _decode_record(shp.read(length))
+                    row[self.gcol] = wc.to_wkb(geom) if geom is not None else None
+                yield tuple(row.get(n) for n in names)
 
 
 class _GpqPartition(InputPartition):
     def __init__(self, file, rg, part_vals):
         self.file = file
         self.rg = rg
-        self.part_vals = part_vals  # hive key=value dirs, as strings
+        self.part_vals = part_vals  # hive key=value dirs: str, None = NULL
 
 
 class GeoParquetDataSource(DataSource):
@@ -475,12 +479,14 @@ class GeoParquetDataSource(DataSource):
     test. Geometry comes back as canonical WKB whatever the stored
     encoding. Options: ``bbox`` ("xmin,ymin,xmax,ymax"), ``columns``
     (top-level projection, pushed into the row-group read), ``geometry_col``.
-    Hive ``key=value`` directory levels surface as string columns.
+    Hive ``key=value`` directory levels surface as string columns, decoded
+    as Spark decodes them (``%XX`` escapes undone, the default partition
+    as NULL).
 
-    The DataFrame-function reader (``io.geoparquet.read_geoparquet``)
-    stays the primary API; this wrapper makes format-string pipelines and
-    ``CREATE TABLE ... USING geoparquet`` work, with the pruning visible
-    to Spark as real InputPartitions."""
+    ``read_geoparquet`` reads through this source when a bbox meets a
+    native encoding with no covering column; its other paths are Spark's
+    own parquet scan. The pruning is visible to Spark as real
+    InputPartitions."""
 
     @classmethod
     def name(cls):
@@ -686,24 +692,15 @@ class _GpqReader(_AttrFilterMixin, DataSourceReader):
         return True
 
     def _hive_prunes(self, part_vals):
-        """True when an accepted filter on a hive partition column proves
-        the whole file can't match (values surface as strings)."""
-        from pyspark.sql.datasource import EqualTo, In, IsNull
-
-        for f in self.pushed:
-            if len(f.attribute) != 1:
-                continue  # hive columns are scalar
-            col = f.attribute[0]
-            if col not in part_vals:
-                continue
-            v = part_vals[col]
-            if isinstance(f, EqualTo) and v != str(f.value):
-                return True
-            if isinstance(f, In) and v not in {str(x) for x in f.value}:
-                return True
-            if isinstance(f, IsNull):
-                return True  # hive values are never null here
-        return False
+        """True when an accepted filter on a hive partition column rejects
+        the file's directory value (a constant for every row; None for
+        the default partition). Exact, so read() never re-checks it."""
+        return any(
+            len(f.attribute) == 1
+            and f.attribute[0] in part_vals
+            and not self._row_matches(part_vals[f.attribute[0]], f)
+            for f in self.pushed
+        )
 
     def partitions(self):
         import os
@@ -883,16 +880,6 @@ class _GpqReader(_AttrFilterMixin, DataSourceReader):
                 tbl.schema.get_field_index(gcol), gcol, arr
             )
 
-        # hive-constant filters decide the whole row group at once
-        for flt in self.pushed:
-            col = flt.attribute[0]
-            if (
-                len(flt.attribute) == 1
-                and col in partition.part_vals
-                and not self._row_matches(partition.part_vals[col], flt)
-            ):
-                return
-
         mask = None
 
         def and_mask(m):
@@ -928,7 +915,7 @@ class _GpqReader(_AttrFilterMixin, DataSourceReader):
             attr = flt.attribute
             root = attr[0]
             if len(attr) == 1 and root in partition.part_vals:
-                continue  # decided above
+                continue  # decided for the whole file by _hive_prunes
             if root not in tbl.schema.names:
                 # column absent in this part -> all-null: IsNull matches
                 # every row, everything else matches none
@@ -1492,7 +1479,8 @@ class _GpqStreamWriter(_GpqWriter, DataSourceStreamArrowWriter):
 
 
 def register_datasources(spark):
-    """Register the Python data sources on this session (idempotent).
+    """Register the Python data sources on this session (idempotent;
+    sources the session already has are left as they are).
 
     Only the two expected benign cases are swallowed — the API not
     existing (Spark < 4) and re-registration of the same source. Any
@@ -1528,7 +1516,15 @@ def register_datasources(spark):
             spark.conf.set(flag, "true")
         except Exception:
             pass  # conf doesn't exist on this build: nothing to enable
+    try:  # the readers call this on every read: skip sources already
+        # registered, which Spark would replace with a warning each time
+        exists = spark._jsparkSession.sessionState().dataSourceManager(
+        ).dataSourceExists
+    except Exception:
+        exists = None  # no JVM handle (Spark Connect): always register
     for src in (FlatGeobufDataSource, ShapefileDataSource, GeoParquetDataSource):
+        if exists is not None and exists(src.name()):
+            continue
         try:
             registry.register(src)
         except Exception as exc:

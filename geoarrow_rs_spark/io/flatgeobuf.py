@@ -10,9 +10,12 @@ Distribution model (the reference's byte-range planning re-expressed for
 Spark): the driver parses the header and the R-tree **leaf level** — which
 stores each feature's byte offset — optionally filters leaves by bbox
 (/root/reference/python/geoarrow-io/src/flatgeobuf/sync.rs:122-123
-``select_bbox`` semantics), then ships (offset, approx-length) ranges to
-executors; each executor decodes its features inside ``mapInPandas``.
-Exact-bbox refinement happens post-decode with the native covering filter.
+``select_bbox`` semantics), and the ``flatgeobuf`` Python data source
+(``io/datasource.py``) turns the surviving [off, end) extents into its
+InputPartitions. Each task reads its extents in coalesced range requests
+and decodes and exactly refines its features there. ``read_flatgeobuf``
+is a thin wrapper over that source; this module holds the format itself
+(flatbuffers decode, header, index, writer).
 """
 
 from __future__ import annotations
@@ -21,7 +24,6 @@ import math
 import struct
 
 import numpy as np
-import pandas as pd
 
 from ..wkb import core as wc
 
@@ -629,12 +631,29 @@ class _SeekAdapter:
         return data
 
 
+def _read_header(src, path):
+    """(header, header byte size) from an open range source."""
+    head = src.read_at(0, 12)
+    if head[:7] != MAGIC:
+        raise ValueError(f"{path} is not a FlatGeobuf file")
+    (hsize,) = struct.unpack("<I", head[8:12])
+    return _parse_header(src.read_at(12, hsize)), hsize
+
+
+def _fgb_header(path: str):
+    """The parsed header alone: two range reads, no index."""
+    from .ranges import open_range_source
+
+    with open_range_source(path) as src:
+        return _read_header(src, path)[0]
+
+
 def _plan_fgb(path: str, bbox=None):
-    """Driver-side scan planning shared by read_flatgeobuf and the
-    'flatgeobuf' Python DataSource: parse the header and compute per-
-    feature [off, end) byte extents — bbox-pruned through the packed
-    Hilbert R-tree leaf boxes when the file carries an index, sequential
-    size-prefix scan otherwise. Returns (header, extents).
+    """Driver-side scan planning of the 'flatgeobuf' Python DataSource:
+    parse the header and compute per-feature [off, end) byte extents —
+    bbox-pruned through the packed Hilbert R-tree leaf boxes when the file
+    carries an index, sequential size-prefix scan otherwise. Returns
+    (header, extents).
 
     Everything goes through :mod:`..ranges` byte-range requests, so the
     same planner serves local paths, file:// URLs, http(s):// objects and
@@ -645,11 +664,7 @@ def _plan_fgb(path: str, bbox=None):
     from .ranges import open_range_source
 
     with open_range_source(path) as src:
-        head = src.read_at(0, 12)
-        if head[:7] != MAGIC:
-            raise ValueError(f"{path} is not a FlatGeobuf file")
-        (hsize,) = struct.unpack("<I", head[8:12])
-        header = _parse_header(src.read_at(12, hsize))
+        header, hsize = _read_header(src, path)
         fc = header["features_count"]
         node_size = header["index_node_size"]
         index_pos = 12 + hsize
@@ -716,6 +731,24 @@ def _fgb_spark_type(t):
     return StringType()
 
 
+def _fgb_schema(header, columns=None, geometry_col="geometry",
+                read_geometry=True):
+    """Spark schema of a FlatGeobuf scan: the header's property columns in
+    header order (only those named in ``columns`` when given), then the
+    WKB geometry column unless ``read_geometry`` is False."""
+    from pyspark.sql.types import BinaryType, StructField, StructType
+
+    want = None if columns is None else set(columns)
+    fields = [
+        StructField(c["name"], _fgb_spark_type(c["type"]))
+        for c in header["columns"]
+        if want is None or c["name"] in want
+    ]
+    if read_geometry:
+        fields.append(StructField(geometry_col, BinaryType()))
+    return StructType(fields)
+
+
 def read_flatgeobuf(
     spark,
     path: str,
@@ -723,103 +756,31 @@ def read_flatgeobuf(
     columns=None,
     geometry_col: str = "geometry",
     read_geometry: bool = True,
-    range_batch_bytes: int = 8 << 20,
 ):
-    """Read a FlatGeobuf file into a DataFrame (WKB geometry + properties).
+    """Read a FlatGeobuf file into a DataFrame (WKB geometry + properties)
+    through the ``flatgeobuf`` Python data source
+    (:class:`..datasource.FlatGeobufDataSource`), which owns the scan.
 
     ``bbox=(xmin,ymin,xmax,ymax)`` prunes features via the file's Hilbert
-    R-tree leaf boxes before any feature bytes are read.
+    R-tree leaf boxes before any feature bytes are read, then refines
+    each decoded feature exactly (NULL and empty geometries drop).
+    ``columns`` projects the property columns (header order kept).
     ``read_geometry=False`` omits the geometry column entirely
     (properties-only scans skip WKB construction — reference parity with
-    read_flatgeobuf's read_geometry flag). Combined with ``bbox`` the
-    exact refine still needs geometry, so it is decoded internally,
-    filtered, and dropped.
-    ``range_batch_bytes`` caps the size of each coalesced range request
-    (object_store.rs coalesce_ranges' max-size knob) — smaller values
-    trade request count for per-request memory/latency on remote
-    sources."""
-    if not read_geometry and bbox is not None:
-        df = read_flatgeobuf(
-            spark, path, bbox=bbox, columns=columns,
-            geometry_col=geometry_col, read_geometry=True,
-            range_batch_bytes=range_batch_bytes,
-        )
-        return df.drop(geometry_col)
-    from pyspark.sql.types import (
-        BinaryType,
-        BooleanType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    read_flatgeobuf's read_geometry flag); with ``bbox`` the geometry is
+    still decoded for the refine, but never encoded or returned.
+    ``path`` may be local, file://, http(s):// or an fsspec URL; each task
+    reads its features in coalesced range requests of at most 8 MB."""
+    from .datasource import register_datasources
+
+    register_datasources(spark)
+    schema = _fgb_schema(
+        _fgb_header(path), columns, geometry_col, read_geometry
     )
-
-    header, extents = _plan_fgb(path, bbox)
-    cols_meta = header["columns"]
-    if columns is not None:
-        want = set(columns)
-    else:
-        want = {c["name"] for c in cols_meta}
-
-    prop_fields = [
-        StructField(c["name"], _fgb_spark_type(c["type"]))
-        for c in cols_meta
-        if c["name"] in want
-    ]
-    out_fields = prop_fields + (
-        [StructField(geometry_col, BinaryType())] if read_geometry else []
-    )
-    out_schema = StructType(out_fields)
-    gtype_hint = header["geometry_type"]
-    has_z = header["has_z"]
-
-    ranges = spark.createDataFrame(
-        [(o, e) for o, e in extents], schema="off long, end long"
-    )
-
-    def decode(batches):
-        # executors open their own range source (local file, http(s)
-        # Range requests, or fsspec) and coalesce adjacent feature
-        # extents into one request per contiguous run — dense scans of a
-        # Hilbert-ordered file cost a handful of large reads, sparse
-        # bbox results only fetch the matching bytes
-        from .ranges import coalesce_ranges, open_range_source
-
-        with open_range_source(path) as src:
-            for pdf in batches:
-                rows = []
-                feature_extents = list(zip(pdf["off"], pdf["end"]))
-                for roff, rend, members in coalesce_ranges(
-                    feature_extents, max_size=range_batch_bytes
-                ):
-                    blob = src.read_at(roff, rend - roff)
-                    for off, _end in members:
-                        rel = int(off) - roff
-                        (sz,) = struct.unpack_from("<I", blob, rel)
-                        buf = blob[rel + 4 : rel + 4 + sz]
-                        feat = _root(buf)
-                        props = _decode_properties(feat.vector_bytes(1), cols_meta)
-                        row = {name: props.get(name) for name in (f.name for f in prop_fields)}
-                        if read_geometry:
-                            geom_t = feat.table(0)
-                            geom = _geometry_to_geom(geom_t, gtype_hint, has_z) if geom_t else None
-                            row[geometry_col] = wc.to_wkb(geom) if geom is not None else None
-                        rows.append(row)
-                yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    df = ranges.repartition(max(1, len(extents) // 20000 + 1)).mapInPandas(
-        decode, schema=out_schema
+    reader = (
+        spark.read.format("flatgeobuf").schema(schema)
+        .option("geometry_col", geometry_col)
     )
     if bbox is not None:
-        from pyspark.sql import functions as F
-
-        from ..functions.registry import bbox_intersects_expr
-
-        xmin, ymin, xmax, ymax = bbox
-        df = (
-            df.withColumn("__b", F.expr(f"ST_BBox({geometry_col})"))
-            .filter(bbox_intersects_expr("__b", xmin, ymin, xmax, ymax))
-            .drop("__b")
-        )
-    return df
+        reader = reader.option("bbox", ",".join(str(float(v)) for v in bbox))
+    return reader.load(path)

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -412,7 +413,7 @@ def _native_coords_to_arrays(df, gcol, enc):
 
 
 # ---------------------------------------------------------------------------
-# Native-encoding row-group pruning (no covering column needed)
+# Row-group pruning from footer statistics (no Spark predicate needed)
 #
 # The Spark translation of the reference's native-stats path
 # (/root/reference/rust/geoparquet/src/reader/spatial_filter.rs:57-135
@@ -421,11 +422,9 @@ def _native_coords_to_arrays(df, gcol, enc):
 # parquet column statistics of the x / y coordinate leaves ARE per-row-group
 # bbox bounds, so a bbox query can skip row groups from footer metadata
 # alone. Spark's built-in parquet source cannot express a pushed predicate
-# over list-nested leaves, so the pruned scan runs as one Spark task per
-# surviving row group (mapInPandas over a (file, row_group) task table) —
-# distributed, and at 100 TB the task count equals surviving row groups,
-# not files. Footer scans themselves distribute as a Spark job when the
-# dataset has many part files.
+# over list-nested leaves, so the pruned scan is the ``geoparquet`` Python
+# data source (io/datasource.py): one InputPartition per surviving row
+# group, planned by _file_rowgroup_tasks below.
 # ---------------------------------------------------------------------------
 
 
@@ -628,51 +627,18 @@ def _file_rowgroup_tasks(
     return out
 
 
-def native_rowgroup_plan(spark, path: str, bbox, geometry_col: str = None):
-    """Plan a native-stats pruned scan: (kept_tasks, total_row_groups) where
-    kept_tasks is [(file, row_group_index), ...] intersecting ``bbox``.
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
-    Footer scanning distributes as a Spark job when the dataset has more
-    than 32 part files (each footer read is one ~KB-scale range read); the
-    returned task list is metadata-sized."""
-    local = _local_path(path)
-    if local is None:
-        raise ValueError("native row-group pruning requires a local/file:// path")
-    meta = read_geo_metadata(local)
-    gcol = geometry_col or (meta or {}).get("primary_column", "geometry")
-    parts = _parquet_parts(local)
-    if len(parts) > 32 and spark is not None:
-        import pandas as pd
 
-        def scan(iters):
-            for pdf in iters:
-                rows = []
-                for f in pdf["file"]:
-                    for rg, keep in _file_rowgroup_tasks(f, gcol, bbox):
-                        rows.append((f, rg, keep))
-                yield pd.DataFrame(rows, columns=["file", "rg", "keep"])
-
-        tasks_df = spark.createDataFrame(
-            [(p,) for p in parts], "file string"
-        ).repartition(min(len(parts), 64))
-        planned = tasks_df.mapInPandas(
-            scan, "file string, rg int, keep boolean"
-        ).collect()
-        total = len(planned)
-        kept = [(r.file, r.rg) for r in planned if r.keep]
-        kept.sort()
-        return kept, total
-    kept, total = [], 0
-    for f in parts:
-        for rg, keep in _file_rowgroup_tasks(f, gcol, bbox):
-            total += 1
-            if keep:
-                kept.append((f, rg))
-    return kept, total
+def _unescape_path_name(s: str) -> str:
+    """Spark's ``unescapePathName``: each ``%XX`` becomes ``chr(0xXX)``."""
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), s)
 
 
 def _hive_partition_values(file_path: str, root: str):
-    """key=value directory segments between dataset root and the part file."""
+    """key=value directory segments between dataset root and the part
+    file, decoded as Spark decodes them: escapes undone in keys and
+    values, and the default partition read as None (NULL)."""
     rel = os.path.relpath(os.path.dirname(file_path), root)
     out = {}
     if rel in (".", ""):
@@ -680,65 +646,10 @@ def _hive_partition_values(file_path: str, root: str):
     for seg in rel.split(os.sep):
         if "=" in seg:
             k, _, v = seg.partition("=")
-            out[k] = v
+            out[_unescape_path_name(k)] = (
+                None if v == _HIVE_NULL else _unescape_path_name(v)
+            )
     return out
-
-
-def _read_native_rowgroups(spark, path, tasks, gcol, enc, out_schema):
-    """Distributed scan of the surviving (file, row_group) tasks: one Spark
-    task per row group, geometry decoded native->WKB inside the scan (so no
-    nested-struct column ever crosses the Arrow->pandas UDF boundary)."""
-    import datetime as _dt
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, ByteType, DateType, DoubleType, FloatType, IntegerType,
-        LongType, ShortType, StringType, TimestampNTZType, TimestampType,
-    )
-
-    root = _local_path(path)
-    names = [f.name for f in out_schema.fields]
-    part_casts = {}
-    for f in out_schema.fields:
-        if isinstance(f.dataType, (ByteType, ShortType, IntegerType, LongType)):
-            part_casts[f.name] = int
-        elif isinstance(f.dataType, (FloatType, DoubleType)):
-            part_casts[f.name] = float
-        elif isinstance(f.dataType, StringType):
-            part_casts[f.name] = str
-        elif isinstance(f.dataType, BooleanType):
-            part_casts[f.name] = lambda v: v.lower() == "true"
-        elif isinstance(f.dataType, DateType):
-            # Spark types date-like hive directory values as DateType;
-            # a raw string here would crash the Arrow conversion
-            part_casts[f.name] = _dt.date.fromisoformat
-        elif isinstance(f.dataType, (TimestampType, TimestampNTZType)):
-            part_casts[f.name] = lambda v: pd.Timestamp(
-                v.replace("%3A", ":")
-            ).to_pydatetime()
-
-    if not tasks:
-        return spark.createDataFrame([], out_schema)
-
-    def scan(iters):
-        import pyarrow.parquet as pq
-
-        from ..functions import kernels as K
-
-        for pdf in iters:
-            for file, rg in zip(pdf["file"], pdf["rg"]):
-                tbl = pq.ParquetFile(file).read_row_group(int(rg))
-                out = tbl.to_pandas()
-                out[gcol] = K.k_from_native(out[gcol], enc)
-                for k, v in _hive_partition_values(file, root).items():
-                    if k not in out.columns:
-                        out[k] = part_casts.get(k, str)(v)
-                yield out[names]
-
-    tasks_df = spark.createDataFrame(tasks, "file string, rg int").repartition(
-        min(len(tasks), spark.sparkContext.defaultParallelism)
-    )
-    return tasks_df.mapInPandas(scan, out_schema)
 
 
 def _native_bbox_filter_expr(df, gcol, enc, bbox):
@@ -796,11 +707,13 @@ def read_geoparquet(
     for a given file set, but only single-file (or coalesced) datasets
     reproduce the reference reader's byte order exactly.
 
-    bbox + a native encoding WITHOUT a covering column takes the
-    native-stats pruned path (spatial_filter.rs:167-181 parity): row groups
-    are skipped from the coordinate leaves' own footer statistics and only
-    the survivors are scanned (one Spark task each), before the exact
-    per-row filter runs."""
+    bbox + a native encoding WITHOUT a covering column on a local dataset
+    reads through the ``geoparquet`` Python data source
+    (spatial_filter.rs:167-181 parity): row groups are skipped from the
+    coordinate leaves' own footer statistics, each survivor is one task
+    that decodes to WKB and applies the exact per-row bbox test, and the
+    columns are cast to the types ``spark.read.parquet`` infers (hive
+    partition columns included)."""
     meta = read_geo_metadata(path)
     gcol = geometry_col
     covering = None
@@ -813,36 +726,47 @@ def read_geoparquet(
             covering = cov["xmin"][0]
         enc = col_meta.get("encoding", "WKB")
 
-    df = None
+    bbox_exact = False  # set once an exact bbox test is in the plan
+    local = _local_path(path)
     if (
         bbox is not None
         and enc != "WKB"
         and parse_to_native
         and covering is None
         and gcol is not None
-        and _local_path(path) is not None
+        and local is not None
     ):
-        tasks, _total = native_rowgroup_plan(spark, path, bbox, gcol)
-        base = _read_parquet(spark, path)
-        from pyspark.sql.types import BinaryType, StructField, StructType
+        # the geoparquet source prunes row groups from the coordinate
+        # leaves' footer stats, decodes native -> WKB and refines exactly;
+        # the cast restores the types Spark infers (typed hive columns)
+        from pyspark.sql.types import BinaryType
 
-        out_schema = StructType([
-            StructField(f.name, BinaryType() if f.name == gcol else f.dataType,
-                        True)
-            for f in base.schema.fields
+        from .datasource import register_datasources
+
+        register_datasources(spark)
+        src = (
+            spark.read.format("geoparquet")
+            .option("geometry_col", gcol)
+            .option("bbox", ",".join(str(float(v)) for v in bbox))
+            .load(local)
+        )
+        df = src.select([
+            src[f.name].cast(
+                BinaryType() if f.name == gcol else f.dataType
+            ).alias(f.name)
+            for f in _read_parquet(spark, path).schema.fields
         ])
-        df = _read_native_rowgroups(spark, path, tasks, gcol, enc, out_schema)
-    native_filtered = False
-    if df is None:
+        bbox_exact = True
+    else:
         df = _read_parquet(spark, path)
         if meta and enc != "WKB":
             if bbox is not None and covering is None and gcol is not None:
                 # exact bbox predicate on the STORED layout, before any
                 # decode: point-struct comparisons reach the parquet scan
-                # as PushedFilters (remote datasets too, where the footer
-                # pruning path above doesn't apply)
+                # as PushedFilters (remote datasets too, where the
+                # footer-pruning source above doesn't apply)
                 df = df.filter(_native_bbox_filter_expr(df, gcol, enc, bbox))
-                native_filtered = True
+                bbox_exact = True
             if parse_to_native:
                 # native GeoArrow nested layout -> canonical WKB (the
                 # reference's parse_record_batch path, reader/parse.rs:
@@ -866,8 +790,8 @@ def read_geoparquet(
                 # (PartitionFilters): only matching cell directories are
                 # listed/opened, before any row group is touched
                 df = df.filter(F.col(part["column"]).isin(cells))
-        if native_filtered:
-            pass  # exact native predicate already applied above
+        if bbox_exact:
+            pass  # the source's refine or the stored-layout predicate ran
         elif covering and covering in df.columns:
             df = df.filter(bbox_intersects_expr(covering, xmin, ymin, xmax, ymax))
         elif gcol is not None:
@@ -902,21 +826,9 @@ def geoparquet_info(path: str) -> dict:
     Returns: dict(num_rows, num_row_groups, primary_column, crs,
     encoding, file_bbox, row_group_bounds, files).
     """
-    import glob
-
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        parts = sorted(
-            p for p in glob.glob(
-                os.path.join(glob.escape(path), "**", "*.parquet"),
-                recursive=True,
-            )
-            if not os.path.basename(p).startswith("_")
-        )
-    else:
-        parts = [path]
-
+    parts = _parquet_parts(path)
     metas = [pq.read_metadata(p) for p in parts]
 
     meta = read_geo_metadata(path)

@@ -4,12 +4,14 @@ read_shapefile(shp, dbf) surface,
 
 Pure-python parsing of the public ESRI shapefile spec (no external libs):
 
-- **Read (distributed)**: the driver reads the tiny ``.shx`` index (one
-  (offset, length) pair per record) and the ``.dbf`` header, then ships
-  record-range batches to executors; each executor opens the files locally
-  and decodes its slice inside ``mapInPandas`` (Arrow-batched). This is the
-  byte-range-planning pattern the reference uses for FlatGeobuf reads,
-  applied to the .shx index.
+- **Read (distributed)**: the ``shapefile`` Python data source
+  (``io/datasource.py``) reads the tiny ``.shx`` index (one (offset,
+  length) pair per record) on the driver and turns record ranges into its
+  InputPartitions; each task opens the files itself and decodes its slice
+  into Arrow batches. This is the byte-range-planning pattern the
+  reference uses for FlatGeobuf reads, applied to the .shx index.
+  ``read_shapefile`` is a thin wrapper over that source (plus the .prj CRS
+  tag); this module holds the format itself.
 - **Write (driver-side)**: collects to the driver and writes .shp/.shx/.dbf
   — shapefiles are a small-data interchange format; a 100 TB pipeline exports
   extracts, not full tables.
@@ -24,7 +26,6 @@ import math
 import struct
 
 import numpy as np
-import pandas as pd
 
 from ..wkb import core as wc
 from ..wkb.algorithms import _ring_signed_area, point_in_polygon
@@ -129,26 +130,14 @@ def _parse_dbf_value(raw: bytes, ftype: str, fdec: int):
     return s
 
 
-def read_shapefile(spark, shp_path: str, dbf_path: str = None, geometry_col="geometry"):
-    """Distributed shapefile read; returns DataFrame with WKB geometry +
-    dbf property columns."""
-    from pyspark.sql import functions as F
+def _shp_schema(dbf_fields, geometry_col="geometry"):
+    """Spark schema of a shapefile scan: the .dbf fields in file order
+    (N/F with decimals -> double, N/F without -> long, L -> boolean,
+    anything else -> string), then the WKB geometry column."""
     from pyspark.sql.types import (
-        BinaryType,
-        BooleanType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+        BinaryType, BooleanType, DoubleType, LongType, StringType,
+        StructField, StructType,
     )
-
-    index = _read_shx(shp_path.replace(".shp", ".shx"))
-    fields = []
-    dbf_meta = None
-    if dbf_path:
-        nrec, hsize, rsize, fields = _read_dbf_header(dbf_path)
-        dbf_meta = (hsize, rsize)
 
     def spark_type(ftype, fdec):
         if ftype in ("N", "F"):
@@ -157,52 +146,39 @@ def read_shapefile(spark, shp_path: str, dbf_path: str = None, geometry_col="geo
             return BooleanType()
         return StringType()
 
-    out_schema = StructType(
-        [StructField("__rid", LongType())]
-        + [StructField(n, spark_type(t, d)) for (n, t, _l, d) in fields]
+    return StructType(
+        [StructField(n, spark_type(t, d)) for (n, t, _l, d) in dbf_fields]
         + [StructField(geometry_col, BinaryType())]
     )
 
-    ranges = spark.createDataFrame(
-        [(i, off, length) for i, (off, length) in enumerate(index)],
-        schema="__rid long, off long, length long",
+
+def read_shapefile(spark, shp_path: str, dbf_path: str = None, geometry_col="geometry"):
+    """Read a shapefile into a DataFrame through the ``shapefile`` Python
+    data source (:class:`..datasource.ShapefileDataSource`), which owns
+    the scan: WKB geometry under ``geometry_col``, preceded by the
+    ``dbf_path`` property columns when one is given. With
+    ``dbf_path=None`` only the geometry column comes back and no .dbf is
+    read, even when one sits next to the .shp."""
+    import os
+
+    from .datasource import register_datasources
+
+    register_datasources(spark)
+    fields = _read_dbf_header(dbf_path)[3] if dbf_path else []
+    reader = (
+        spark.read.format("shapefile")
+        .schema(_shp_schema(fields, geometry_col))
+        .option("geometry_col", geometry_col)
     )
-
-    field_meta = [(n, t, l, d) for (n, t, l, d) in fields]
-
-    def decode(batches):
-        shp = open(shp_path, "rb")
-        dbf = open(dbf_path, "rb") if dbf_path else None
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                rid, off, length = int(r["__rid"]), int(r["off"]), int(r["length"])
-                shp.seek(off + 8)  # skip record header
-                geom = _decode_record(shp.read(length))
-                row = {"__rid": rid}
-                if dbf is not None:
-                    hsize, rsize = dbf_meta
-                    dbf.seek(hsize + rid * rsize + 1)  # +1 deletion flag
-                    raw = dbf.read(rsize - 1)
-                    pos = 0
-                    for (n, t, l, d) in field_meta:
-                        row[n] = _parse_dbf_value(raw[pos:pos + l], t, d)
-                        pos += l
-                row["geometry"] = wc.to_wkb(geom) if geom is not None else None
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    out = ranges.repartition(max(1, len(index) // 10000)).mapInPandas(
-        decode, schema=out_schema
-    ).drop("__rid")
+    if dbf_path:
+        reader = reader.option("dbf", dbf_path)
+    out = reader.load(shp_path)
 
     # .prj sidecar (WKT1 / ESRI WKT1 / WKT2): tag the geometry column so
     # ST_Transform and the edges-aware kernels see the source CRS. The
     # raw text is attached verbatim — parse_crs resolves all three
     # dialects lazily at use time — and an unreadable sidecar never
     # fails the read (the geometry column just stays untagged).
-    import os
-
     prj_path = shp_path[:-4] + ".prj" if shp_path.endswith(".shp") else None
     if prj_path and os.path.exists(prj_path):
         try:

@@ -1,14 +1,19 @@
 """Regenerate CATALOG.md from the query catalog's docstrings.
 
-Run from the repo root: ``python scripts/gen_catalog.py``. Groups entries
-by name-prefix family, one line per entry (first ~195 chars of the
-whitespace-flattened docstring). No Spark session needed.
+Run ``python scripts/gen_catalog.py`` (from any directory): it rewrites
+the CATALOG.md next to this script's parent directory. Groups entries by
+name-prefix family in ``queries()`` order, one line per entry (first ~195
+chars of the whitespace-flattened docstring). No Spark session needed;
+``tests/test_catalog_doc.py`` checks the committed file is its output.
 """
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CATALOG = os.path.join(ROOT, "CATALOG.md")
+sys.path.insert(0, ROOT)
 
 from geoarrow_rs_spark import queries as Q  # noqa: E402
 
@@ -33,7 +38,8 @@ def blurb(fn) -> str:
     return flat
 
 
-def main():
+def render() -> str:
+    """The CATALOG.md text for the current catalog."""
     qs = Q.queries()
     groups = {title: [] for title, _ in FAMILIES}
     for name, fn in qs.items():
@@ -61,9 +67,13 @@ def main():
         for name, fn in entries:
             out.append(f"- **{name}** — {blurb(fn)}")
         out.append("")
-    with open("/root/repo/CATALOG.md", "w") as f:
-        f.write("\n".join(out))
-    print(f"CATALOG.md regenerated: {total} entries")
+    return "\n".join(out)
+
+
+def main():
+    with open(CATALOG, "w") as f:
+        f.write(render())
+    print(f"{CATALOG} regenerated")
 
 
 if __name__ == "__main__":

@@ -445,8 +445,8 @@ def test_flatgeobuf_python_datasource(spark):
 
 
 def test_shapefile_python_datasource(spark, tmp_path):
-    """spark.read.format('shapefile') returns exactly what read_shapefile
-    returns on a repo-written shapefile (geometry + dbf columns)."""
+    """spark.read.format('shapefile') and read_shapefile both return the
+    written rows of a repo-written shapefile (geometry + dbf columns)."""
     import geoarrow_rs_spark as gs
     from geoarrow_rs_spark.io import read_shapefile, write_shapefile
 
@@ -461,11 +461,20 @@ def test_shapefile_python_datasource(spark, tmp_path):
     shp = os.path.join(str(tmp_path), "ds.shp")
     write_shapefile(df, shp)
 
+    # the writer stores the polygon's outer ring clockwise (shapefile
+    # convention), so geometries compare topologically, not byte for byte
+    written = df.selectExpr("name AS w_name", "geometry AS w_geom")
     ds = spark.read.format("shapefile").load(shp)
     fn = read_shapefile(spark, shp, shp.replace(".shp", ".dbf"))
-    got = sorted((r["name"], r["value"], bytes(r["geometry"])) for r in ds.collect())
-    want = sorted((r["name"], r["value"], bytes(r["geometry"])) for r in fn.collect())
-    assert got == want and len(got) == 3
+    for back in (ds, fn):
+        got = (
+            back.join(written, back["name"] == written["w_name"], "full")
+            .selectExpr("name", "value", "ST_Equals(geometry, w_geom) AS same")
+            .collect()
+        )
+        assert sorted((r.name, r.value, r.same) for r in got) == [
+            ("a", 1, True), ("b", 2, True), ("c", 3, True)
+        ]
 
 
 def test_coalesce_ranges_merges_and_splits():
@@ -824,3 +833,116 @@ def test_shapefile_prj_sidecar_roundtrip(spark, tmp_path):
     assert not os.path.exists(shp3[:-4] + ".prj")
     back3 = read_shapefile(spark, shp3, shp3.replace(".shp", ".dbf"))
     assert get_crs(back3, "geometry") is None
+
+
+# Rows whose geometries survive both writers byte for byte: the polygon's
+# outer ring is clockwise (the shapefile convention) and nothing is Multi
+# (write_flatgeobuf runs with promote_to_multi=False). Bounds are listed
+# for the bbox expectations; the NULL geometry has none.
+_WRITTEN = [
+    ("a", 1, 1.5, True, "POINT (1 2)", (1, 2, 1, 2)),
+    (None, 2, None, False, "POLYGON ((0 0, 0 4, 4 4, 4 0, 0 0))", (0, 0, 4, 4)),
+    ("c", 3, 2.5, None, "LINESTRING (10 10, 12 13)", (10, 10, 12, 13)),
+    ("d", None, -4.25, True, "POINT (-5 7)", (-5, 7, -5, 7)),
+    ("e", 5, 0.0, False, None, None),
+    ("f", 6, 9.5, True, "LINESTRING (3 -2, 6 -1, 8 -6)", (3, -6, 8, -1)),
+]
+_WRITTEN_TYPES = {"name": "string", "n": "bigint", "score": "double",
+                  "flag": "boolean", "geometry": "binary"}
+
+
+def _written_df(spark, with_null_geometry=True):
+    rows = [r[:5] for r in _WRITTEN if with_null_geometry or r[4] is not None]
+    return spark.createDataFrame(
+        rows, "name string, n long, score double, flag boolean, wkt string"
+    ).selectExpr("name", "n", "score", "flag", "ST_GeomFromWKT(wkt) AS geometry")
+
+
+def _intersects(b, bbox):
+    return b is not None and not (
+        b[2] < bbox[0] or b[0] > bbox[2] or b[3] < bbox[1] or b[1] > bbox[3]
+    )
+
+
+def _rows(df):
+    return sorted(
+        (tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+               for v in r) for r in df.collect()),
+        key=repr,
+    )
+
+
+@pytest.mark.parametrize("write_index", [True, False])
+def test_flatgeobuf_reader_matches_written_rows(spark, tmp_path, write_index):
+    """read_flatgeobuf over a write_flatgeobuf file, with and without the
+    packed R-tree, across bbox x columns x read_geometry: rows, names,
+    types and field metadata equal the written input's."""
+    from geoarrow_rs_spark.io import read_flatgeobuf, write_flatgeobuf
+
+    df = _written_df(spark)
+    p = str(tmp_path / "w.fgb")
+    write_flatgeobuf(df, p, write_index=write_index, promote_to_multi=False)
+    wkb = {r["name"]: bytes(r["geometry"]) if r["geometry"] else None
+           for r in df.collect()}
+    bbox = (0.5, -3.0, 11.0, 11.0)
+    for use_bbox in (False, True):
+        for columns in (None, ["score", "name"]):
+            for read_geometry in (True, False):
+                back = read_flatgeobuf(
+                    spark, p, bbox=bbox if use_bbox else None,
+                    columns=columns, read_geometry=read_geometry,
+                )
+                names = [c for c in ("name", "n", "score", "flag")
+                         if columns is None or c in columns]
+                if read_geometry:
+                    names.append("geometry")
+                case = (use_bbox, columns, read_geometry)
+                assert back.columns == names, case
+                assert dict(back.dtypes) == {
+                    c: _WRITTEN_TYPES[c] for c in names
+                }, case
+                assert all(f.metadata == {} for f in back.schema.fields), case
+                full = {"name": 0, "n": 1, "score": 2, "flag": 3}
+                want = sorted(
+                    (tuple(w[full[c]] if c != "geometry" else wkb[w[0]]
+                           for c in names)
+                     for w in _WRITTEN
+                     if not use_bbox or _intersects(w[5], bbox)),
+                    key=repr,
+                )
+                assert _rows(back) == want, case
+                assert len(want) == (4 if use_bbox else 6), case
+
+
+def test_shapefile_reader_matches_written_rows(spark, tmp_path):
+    """read_shapefile over a write_shapefile file: with dbf_path it returns
+    the written rows and types; without, the geometry column alone; a
+    custom geometry_col carries the geometries (all non-NULL)."""
+    from geoarrow_rs_spark.io import read_shapefile, write_shapefile
+
+    df = _written_df(spark, with_null_geometry=False)
+    shp = str(tmp_path / "w.shp")
+    write_shapefile(df, shp)
+    want = _rows(df)
+
+    back = read_shapefile(spark, shp, shp.replace(".shp", ".dbf"))
+    assert back.columns == ["name", "n", "score", "flag", "geometry"]
+    assert dict(back.dtypes) == _WRITTEN_TYPES
+    assert all(f.metadata == {} for f in back.schema.fields)
+    assert _rows(back) == want and len(want) == 5
+
+    geom_only = read_shapefile(spark, shp)
+    assert geom_only.columns == ["geometry"]
+    assert geom_only.dtypes == [("geometry", "binary")]
+    assert _rows(geom_only) == sorted(((w[4],) for w in want), key=repr)
+
+    custom = read_shapefile(spark, shp, geometry_col="geom")
+    assert custom.columns == ["geom"]
+    assert custom.where("geom IS NOT NULL").count() == 5
+    assert _rows(custom) == _rows(geom_only)
+
+    both = read_shapefile(
+        spark, shp, shp.replace(".shp", ".dbf"), geometry_col="geom"
+    )
+    assert both.columns == ["name", "n", "score", "flag", "geom"]
+    assert _rows(both) == want

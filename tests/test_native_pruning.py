@@ -13,10 +13,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from geoarrow_rs_spark.io.geoparquet import (
-    native_rowgroup_plan,
-    read_geoparquet,
-)
+from geoarrow_rs_spark.io.geoparquet import read_geoparquet
+from geoarrow_rs_spark.queries.geo_proj import COUNTRIES_FGB
 
 GEO_POINT = json.dumps({
     "version": "1.1.0",
@@ -52,10 +50,26 @@ def _write_interleaved_points(path, n=1000, row_group_size=100):
     pq.write_table(tbl, path, row_group_size=row_group_size)
 
 
+def _source_plan(path, bbox):
+    """(kept (file, row_group) partitions, total row groups) as the
+    geoparquet source plans them with and without ``bbox``."""
+    from geoarrow_rs_spark.io.datasource import GeoParquetDataSource
+
+    def plan(opts):
+        src = GeoParquetDataSource(dict(opts, path=path))
+        return [
+            (p.file, p.rg)
+            for p in src.reader(src.schema()).partitions()
+            if p.file is not None  # the empty-plan sentinel
+        ]
+
+    return plan({"bbox": ",".join(str(v) for v in bbox)}), len(plan({}))
+
+
 def test_separated_plan_prunes(tmp_path, spark):
     f = str(tmp_path / "pts.parquet")
     _write_separated_points(f)
-    kept, total = native_rowgroup_plan(spark, f, (0.0, 0.0, 250.0, 50.0))
+    kept, total = _source_plan(f, (0.0, 0.0, 250.0, 50.0))
     assert total == 10
     # x in [0, 250] -> row groups 0 (x 0-99), 1 (100-199), 2 (200-299)
     assert [rg for (_, rg) in kept] == [0, 1, 2]
@@ -65,7 +79,7 @@ def test_separated_plan_y_axis_prunes(tmp_path, spark):
     f = str(tmp_path / "pts.parquet")
     _write_separated_points(f)
     # every row group spans y 0..49, so a y-window above that prunes ALL
-    kept, total = native_rowgroup_plan(spark, f, (0.0, 60.0, 1000.0, 99.0))
+    kept, total = _source_plan(f, (0.0, 60.0, 1000.0, 99.0))
     assert total == 10 and kept == []
 
 
@@ -102,7 +116,7 @@ def test_interleaved_plan_conservative(tmp_path, spark):
     # [0..99] then [y-floor .. x-ceiling]; a window at x 700..800 cannot
     # prune via y (ys included in the same leaf) but prunes groups whose
     # COMBINED max < 700: groups 0-5 (max 599) go, later ones stay
-    kept, total = native_rowgroup_plan(spark, f, (700.0, 0.0, 800.0, 50.0))
+    kept, total = _source_plan(f, (700.0, 0.0, 800.0, 50.0))
     assert total == 10
     assert [rg for (_, rg) in kept] == [7, 8, 9]  # rg 6 max=699 < 700 pruned
 
@@ -128,7 +142,7 @@ def test_interleaved_pruned_read_matches(tmp_path, spark):
 def test_no_stats_keeps_everything(tmp_path, spark):
     f = str(tmp_path / "pts.parquet")
     _write_separated_points(f, stats=False)
-    kept, total = native_rowgroup_plan(spark, f, (0.0, 0.0, 50.0, 50.0))
+    kept, total = _source_plan(f, (0.0, 0.0, 50.0, 50.0))
     assert total == 10 and len(kept) == 10  # conservative: no stats, no prune
 
 
@@ -149,7 +163,7 @@ def test_multifile_hive_dataset(tmp_path, spark):
         tbl = tbl.replace_schema_metadata({b"geo": GEO_POINT})
         pq.write_table(tbl, str(d / "part.parquet"), row_group_size=100)
 
-    kept, total = native_rowgroup_plan(spark, str(root), (950.0, 0.0, 1150.0, 50.0))
+    kept, total = _source_plan(str(root), (950.0, 0.0, 1150.0, 50.0))
     assert total == 9
     # cell=1 holds x 1000-1299: groups 0 (1000-1099) and 1 (1100-1199) survive
     assert [(os.path.basename(os.path.dirname(f)), rg) for f, rg in kept] == [
@@ -382,30 +396,22 @@ def test_geoparquet_datasource_hive_filter_prunes_files(tmp_path, spark):
     assert all("region=west" in p.file for p in parts)
 
 
+needs_countries = pytest.mark.skipif(
+    not os.path.exists(COUNTRIES_FGB), reason=f"needs {COUNTRIES_FGB}"
+)
+
+
 def test_fgb_and_shapefile_datasource_filter_pushdown(tmp_path, spark):
-    """Attribute filters push into the FGB and Shapefile Python sources:
-    rows drop source-side (before WKB encode / geometry decode), the
-    filter leaves Spark's executed plan, and results equal the unpushed
-    baseline."""
+    """Attribute filters push into the Shapefile Python source: rows drop
+    source-side (before the geometry record is read), the filter leaves
+    Spark's executed plan, and results equal the unpushed baseline. The
+    FlatGeobuf half is test_fgb_datasource_filter_pushdown_countries."""
     import re
 
     import geoarrow_rs_spark as gs
     from pyspark.sql import Row
 
     gs.register_all(spark)
-
-    # FlatGeobuf: reference countries fixture (179 rows, 'id'/'name' props)
-    fgb = "/root/reference/fixtures/flatgeobuf/countries.fgb"
-    base = spark.read.format("flatgeobuf").load(fgb)
-    prop = [c for c in base.columns if c != "geometry"][0]
-    sample = [r[0] for r in base.select(prop).limit(3).collect()]
-    pushed = base.where(base[prop] == sample[0])
-    plan = pushed._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"Filter \(", plan) is None  # fully pushed
-    want = [r for r in base.collect() if r[prop] == sample[0]]
-    assert sorted(r[prop] for r in pushed.collect()) == sorted(
-        r[prop] for r in want
-    ) and len(want) > 0
 
     # Shapefile: repo-written file, numeric range + string equality
     from geoarrow_rs_spark.io import write_shapefile
@@ -424,10 +430,34 @@ def test_fgb_and_shapefile_datasource_filter_pushdown(tmp_path, spark):
     assert got == [v for v in range(50, 120) if v % 4 == 1]
 
 
+@needs_countries
+def test_fgb_datasource_filter_pushdown_countries(spark):
+    """Attribute filters push into the FlatGeobuf Python source: rows drop
+    before WKB encode, the filter leaves Spark's executed plan, and
+    results equal the unpushed baseline."""
+    import re
+
+    import geoarrow_rs_spark as gs
+
+    gs.register_all(spark)
+
+    # FlatGeobuf: reference countries fixture (179 rows, 'id'/'name' props)
+    base = spark.read.format("flatgeobuf").load(COUNTRIES_FGB)
+    prop = [c for c in base.columns if c != "geometry"][0]
+    sample = [r[0] for r in base.select(prop).limit(3).collect()]
+    pushed = base.where(base[prop] == sample[0])
+    plan = pushed._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"Filter \(", plan) is None  # fully pushed
+    want = [r for r in base.collect() if r[prop] == sample[0]]
+    assert sorted(r[prop] for r in pushed.collect()) == sorted(
+        r[prop] for r in want
+    ) and len(want) > 0
+
+
 def test_create_table_using_python_sources(tmp_path, spark):
     """The docstring-claimed SQL surface: CREATE TABLE ... USING
-    geoparquet / flatgeobuf, queried through plain spark.sql with a
-    pushed filter."""
+    geoparquet, queried through plain spark.sql with a pushed filter.
+    The flatgeobuf table is test_create_table_using_flatgeobuf_countries."""
     import geoarrow_rs_spark as gs
 
     gs.register_all(spark)
@@ -450,10 +480,17 @@ def test_create_table_using_python_sources(tmp_path, spark):
     finally:
         spark.sql("DROP TABLE IF EXISTS gpq_tbl")
 
-    fgb = "/root/reference/fixtures/flatgeobuf/countries.fgb"
+
+@needs_countries
+def test_create_table_using_flatgeobuf_countries(spark):
+    """CREATE TABLE ... USING flatgeobuf over the reference countries
+    fixture, counted through plain spark.sql."""
+    import geoarrow_rs_spark as gs
+
+    gs.register_all(spark)
     spark.sql("DROP TABLE IF EXISTS fgb_tbl")
     spark.sql(
-        f"CREATE TABLE fgb_tbl USING flatgeobuf OPTIONS (path '{fgb}')"
+        f"CREATE TABLE fgb_tbl USING flatgeobuf OPTIONS (path '{COUNTRIES_FGB}')"
     )
     try:
         assert spark.sql(
@@ -609,3 +646,45 @@ def test_multifile_footer_planning_parallel(tmp_path):
     # sub-linear: 200 x 5 ms serial floor is ~1 s; the pool must beat it
     # by a wide margin (measured ~3.8x; assert 2x for CI headroom)
     assert t_pool < t_serial / 2.0, (t_pool, t_serial)
+
+
+@pytest.mark.parametrize(
+    "values,pred",
+    [(["a:0", "a:1"], "k = 'a:1'"), ([None, "x"], "k IS NULL")],
+    ids=["escaped", "default-partition"],
+)
+def test_hive_directory_values_decoded_as_spark(tmp_path, spark, values, pred):
+    """Hive directory values read back as Spark decodes them: a Spark
+    partitionBy writes 'a:1' as k=a%3A1 and NULL as
+    k=__HIVE_DEFAULT_PARTITION__. format('geoparquet') and the native
+    read_geoparquet(bbox=...) path return the values spark.read.parquet
+    returns, and filters on them match the same rows."""
+    import geoarrow_rs_spark as gs
+
+    gs.register_all(spark)
+    root = str(tmp_path / "wkb")
+    (
+        spark.createDataFrame(
+            [(i, v) for v in values for i in range(5)], "id long, k string"
+        )
+        .selectExpr("id", "k", "ST_Point(CAST(id AS DOUBLE), 0D) AS geometry")
+        .write.partitionBy("k").parquet(root)
+    )
+    ref = spark.read.parquet(root)
+    want = sorted(((r.id, r.k) for r in ref.collect()), key=repr)
+    assert ref.where(pred).count() == 5
+
+    ds = spark.read.format("geoparquet").load(root)
+    assert sorted(((r.id, r.k) for r in ds.collect()), key=repr) == want
+    assert ds.where(pred).count() == 5
+
+    # the same directory names over native-encoded parts
+    native = tmp_path / "native"
+    for d in sorted(os.listdir(root)):
+        if d.startswith("k="):
+            os.makedirs(native / d)
+            _write_separated_points(str(native / d / "part.parquet"), n=5,
+                                    row_group_size=5)
+    got = read_geoparquet(spark, str(native), bbox=(0.0, 0.0, 10.0, 10.0))
+    assert sorted(((r.id, r.k) for r in got.collect()), key=repr) == want
+    assert got.where(pred).count() == 5
