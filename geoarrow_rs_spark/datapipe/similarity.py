@@ -7,6 +7,9 @@
 - ``ivf_topk``: scale path — coarse quantizer (deterministic grid/LSH
   centroids) partitions the corpus; queries probe only matching partitions.
 - ``srp_bucket_expr``: sign-random-projection bucket for LSH blocking.
+- ``assign_clusters`` / ``pq_encode``: nearest centroid (PQ code) per
+  vector by the exact decimal distance, a numpy argmin per corpus batch
+  under ``mapInArrow``; ``kmeans_train``/``pq_train`` iterate it.
 
 Other dot products use ``F.zip_with`` + ``F.aggregate`` (native, no UDF). For
 cross-engine oracle determinism the decimal variant ``dot_decimal_expr``
@@ -484,24 +487,153 @@ def _centroid_df(spark, cents):
     return spark.createDataFrame([(int(c), list(v)) for c, v in cents], schema)
 
 
+# ---------------------------------------------------------------------------
+# Exact nearest-centroid assignment
+#
+# One assigner serves assign_clusters, pq_encode and both k-means/PQ
+# trainers (driver-local and distributed). It picks what
+# ``min(struct(dist2_decimal_expr(v, c), cid))`` over the centroid table
+# picks (the SQL oracles spell it that way), bit-exactly, because every
+# decimal operation is replicated exactly:
+#   - CAST(double AS DECIMAL(38,12)) == Decimal(repr(x)) HALF_UP at 12 dp
+#     (JVM BigDecimal.valueOf uses the shortest round-trip repr, as repr());
+#     a NaN or infinite double casts to NULL, one of 1e26 or more does not
+#     fit and raises (ANSI mode, Spark's default)
+#   - dist2_decimal_expr's fold widens each (38,12)+(38,12) step to (38,11)
+#     == per-step HALF_UP quantize at 11 dp (verified against Spark); a
+#     NULL term makes the distance NULL, and NULL sorts first in min()
+# The argmin runs vectorized in float64. Rows with a near tie (float error
+# here is < 1e-9 relative) or with values that could overflow or are not
+# finite go to the exact decimal fold, so the hot loop is numpy while every
+# tie resolves exactly as Spark would.
+# ---------------------------------------------------------------------------
+
+from decimal import ROUND_HALF_UP as _HALF_UP, Context as _Context, Decimal as _Dec
+
+_E12 = _Dec("1e-12")
+_E11 = _Dec("1e-11")
+_E26 = _Dec("1e26")
+# DECIMAL(38, .) arithmetic needs 38 significant digits; the default
+# context's 28 would round large sums
+_DEC38 = _Context(prec=40, rounding=_HALF_UP)
+
+
+def _dec12(x) -> _Dec:
+    """Replica of Spark ``CAST(double AS DECIMAL(38,12))`` for finite
+    |x| < 1e26."""
+    return _Dec(repr(float(x))).quantize(_E12, context=_DEC38)
+
+
+def _fold_d2(a, b):
+    """Replica of ``dist2_decimal_expr`` over two equal-length float
+    vectors: 12 dp term cast, 11 dp per-step accumulate (Spark widens
+    (38,12)+(38,12) -> (38,11)). None (NULL) when a term is NaN or
+    infinite, as for a NULL element read as NaN; ArithmeticError when a
+    term or a partial sum does not fit DECIMAL(38,12)."""
+    terms = []
+    for x, y in zip(a, b):
+        d = float(x) - float(y)
+        t = d * d
+        if 1e26 <= t < _np.inf:
+            raise ArithmeticError(f"{t!r} cannot be represented as Decimal(38, 12)")
+        terms.append(_dec12(t) if t < _np.inf else None)
+    acc = _Dec(0)
+    for t in terms:
+        if t is None:
+            return None
+        acc = _DEC38.add(acc, t).quantize(_E11, context=_DEC38)
+        if acc >= _E26:
+            raise ArithmeticError(f"{acc} cannot be represented as Decimal(38, 12)")
+    return acc
+
+
+def _assign_local(X: _np.ndarray, cents: list) -> _np.ndarray:
+    """Per-row index into ``cents`` (sorted ascending by id, vector last)
+    of the centroid ``min(struct(dist2_decimal_expr(x, c), cid))`` picks:
+    the least exact decimal distance, ties by id, a NULL distance before
+    any number. ``X`` holds one float row per vector, NaN for a NULL
+    element; a centroid shorter than ``X.shape[1]`` is padded with NaN
+    (NULL terms)."""
+    n, D = X.shape
+    C = _np.full((len(cents), D), _np.nan)
+    for j, c in enumerate(cents):
+        C[j, : len(c[-1])] = c[-1]
+    with _np.errstate(all="ignore"):
+        # NaN-free rows too small to overflow DECIMAL(38,12) anywhere
+        bound = (_np.abs(X).max(axis=1, initial=0.0) + _np.abs(C).max(initial=0.0)) ** 2
+        clean = bound * D < 1e25
+        d2 = _np.zeros((n, len(C)))
+        for j in range(D):
+            d2 += (X[:, j, None] - C[None, :, j]) ** 2
+    best = _np.argmin(d2, axis=1)  # first minimum = lowest cid
+    mind = d2[_np.arange(n), best]
+    near = d2 <= (mind + 1e-6 + 1e-9 * mind)[:, None]
+    for i in _np.flatnonzero(~clean | (near.sum(axis=1) > 1)):
+        cand = _np.flatnonzero(near[i]) if clean[i] else range(len(C))
+        exact = [(_fold_d2(X[i], C[j]), j) for j in cand]
+        best[i] = min(exact, key=lambda e: (e[0] is not None, e[0] or 0, e[1]))[1]
+    return best
+
+
+def _nearest_ids(arr, books: list, w: int | None = None) -> _np.ndarray:
+    """(rows, len(books)) ids: for each row ``v`` of the ``array<double>``
+    Arrow array and each codebook ``books[s]`` ([(id, vector)] sorted by
+    id), the id ``_assign_local`` picks for ``slice(v, s * w + 1, w)``
+    (all of ``v`` when ``w`` is None)."""
+    _, starts, lens, vals = _unpack_vectors(arr)
+    valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    out = _np.empty((len(arr), len(books)), _np.int64)
+    for s, book in enumerate(books):
+        lo = s * w if w else 0
+        sub = _np.clip(lens - lo, 0, w)
+        c_lens = _np.asarray([len(v) for _, v in book])
+        D = c_lens.max()
+        X = _np.full((len(arr), D), _np.nan)
+        fit = valid & (sub == D)
+        X[fit] = _gather(vals, starts + lo, _np.flatnonzero(fit), D)
+        for r in _np.flatnonzero(valid & (sub != D)):
+            k = min(sub[r], D)
+            X[r, :k] = vals[starts[r] + lo: starts[r] + lo + k]
+        best = _assign_local(X, book)
+        # zip_with pads the shorter vector with NULL, so the distance to a
+        # centroid of another length is NULL: the first such id wins
+        mism = sub[:, None] != c_lens
+        best = _np.where(mism.any(axis=1), _np.argmax(mism, axis=1), best)
+        out[:, s] = _np.asarray([i for i, _ in book])[best]
+    return out
+
+
+def _map_nearest(src: DataFrame, books: list, w, field, column) -> DataFrame:
+    """``src`` (id, vector) with ``field`` appended: ``column`` builds it
+    from each batch's ``_nearest_ids``. No rows when a codebook is empty."""
+    schema = T.StructType(src.schema.fields + [field])
+    live = all(books)
+
+    def run(batches):
+        for b in batches:
+            if live:
+                vecs = b.column(1).cast(_pa.list_(_pa.float64()), safe=False)
+                yield b.append_column(field.name, column(_nearest_ids(vecs, books, w)))
+
+    return src.mapInArrow(run, schema)
+
+
 def assign_clusters(
     df: DataFrame,
-    cent_df: DataFrame,
+    cents: list,
     vec: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the (tiny) centroid table,
-    exact decimal distances, ties broken by centroid id. Output:
-    (id_col, vec, cid) — one row per input row."""
-    d2 = dist2_decimal_expr(F.col(vec), F.col("__cvec")).alias("__d2")
-    scored = df.crossJoin(F.broadcast(cent_df)).select(
-        F.col(id_col), F.col(vec), F.col("__cid"), d2
+    """Nearest-centroid assignment against ``cents`` ([(cid, centroid)],
+    as kmeans_train returns): a numpy argmin under ``mapInArrow``, exact
+    decimal distances, ties broken by centroid id (see
+    ``_assign_local``). Output: (id_col, vec, cid) — one row per input
+    row, ``vec`` unchanged."""
+    return _map_nearest(
+        df.select(id_col, vec), [sorted(cents, key=lambda c: c[0])], None,
+        T.StructField("cid", T.LongType(), False),
+        lambda ids: _pa.array(ids[:, 0]),
     )
-    best = scored.groupBy(id_col).agg(
-        F.min(F.struct(F.col("__d2"), F.col("__cid"))).alias("__m"),
-        F.first(vec).alias(vec),
-    )
-    return best.select(id_col, vec, F.col("__m.__cid").alias("cid"))
 
 
 # ---------------------------------------------------------------------------
@@ -512,39 +644,12 @@ def assign_clusters(
 # a bounded row probe (checkpoint.collect_small) says the training input
 # is small, we collect it and run the SAME algorithm locally —
 # bit-identical to the distributed pipeline (and therefore to the SQL
-# oracles) because every decimal operation is replicated exactly:
-#   - CAST(double AS DECIMAL(38,12)) == Decimal(repr(x)) HALF_UP at 12 dp
-#     (JVM BigDecimal.valueOf uses the shortest round-trip repr, as repr())
-#   - dist2_decimal_expr's fold widens each (38,12)+(38,12) step to (38,11)
-#     == per-step HALF_UP quantize at 11 dp (verified against Spark)
+# oracles): the assignment is the same _assign_local, and
 #   - SUM over DECIMAL(38,12) is an exact integer sum at scale 1e12
 #   - CAST(decimal AS DOUBLE) == float(Decimal) (nearest double)
-# Assignment argmins run vectorized in float64 with a 1e-6 near-tie escape
-# to the exact decimal fold (float error here is < 1e-9), so the hot loop
-# is numpy while every tie resolves exactly as Spark would.
 # ---------------------------------------------------------------------------
 
-from decimal import ROUND_HALF_UP as _HALF_UP, Decimal as _Dec
-
-_E12 = _Dec("1e-12")
-_E11 = _Dec("1e-11")
-
 _LOCAL_TRAIN_MAX_ROWS = 100_000
-
-
-def _dec12(x) -> _Dec:
-    """Replica of Spark ``CAST(double AS DECIMAL(38,12))``."""
-    return _Dec(repr(float(x))).quantize(_E12, rounding=_HALF_UP)
-
-
-def _fold_d2(a, b) -> _Dec:
-    """Replica of ``dist2_decimal_expr``: 12 dp term cast, 11 dp per-step
-    accumulate (Spark widens (38,12)+(38,12) -> (38,11))."""
-    acc = _Dec(0)
-    for x, y in zip(a, b):
-        d = float(x) - float(y)
-        acc = (acc + _dec12(d * d)).quantize(_E11, rounding=_HALF_UP)
-    return acc
 
 
 def _collect_if_small(corpus: DataFrame, id_col: str, vec: str):
@@ -562,84 +667,11 @@ def _collect_if_small(corpus: DataFrame, id_col: str, vec: str):
     return rows
 
 
-def _assigned_local_df(spark, corpus, id_col, vec, local_rows, cents,
-                       with_vec: bool):
-    """Driver-local replica of ``assign_clusters`` over an already-collected
-    corpus: (id[, vec], cid) DataFrame, bit-identical to the distributed
-    broadcast-cross-join + min(struct(d2, cid)) (see ``_assign_local`` for
-    the exact-decimal tie contract). Returns None when the collected rows
-    are not a clean 2-D matrix — caller uses the distributed path. Saves a
-    corpus re-scan AND the k_clusters x dim exact-decimal distance
-    evaluation per corpus row (guide §2.4: the corpus was already
-    collected for training; assignment is a pure function of it)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    X = _np.asarray([v for _, v in local_rows], dtype=_np.float64)
-    if X.ndim != 2 or X.shape[0] == 0:
-        return None
-    idx = _assign_local(X, cents)
-    cid_of = [int(cents[i][0]) for i in idx]
-    src = corpus.select(id_col, vec).schema
-    if with_vec:
-        fields = [src[0], src[1], StructField("cid", LongType(), False)]
-        rows = [(rid, v, c) for (rid, v), c in zip(local_rows, cid_of)]
-    else:
-        fields = [src[0], StructField("cid", LongType(), False)]
-        rows = [(rid, c) for (rid, _), c in zip(local_rows, cid_of)]
-    return spark.createDataFrame(rows, StructType(fields))
-
-
-def _codes_local_df(spark, corpus, id_col, local_rows, pcents, m: int, w: int):
-    """Driver-local replica of ``pq_encode`` over an already-collected
-    corpus: (vid, s, code) DataFrame. Same exact-decimal tie contract as
-    ``_assigned_local_df``; None -> caller uses the distributed path."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    X = _np.asarray([v for _, v in local_rows], dtype=_np.float64)
-    if X.ndim != 2 or X.shape[0] == 0 or X.shape[1] != m * w:
-        return None
-    id_field = corpus.select(id_col).schema[0]
-    rows = []
-    for s in range(m):
-        sub_cents = [(code, v) for (cs, code, v) in pcents if cs == s]
-        idx = _assign_local(X[:, s * w:(s + 1) * w], sub_cents)
-        rows += [
-            (rid, s, int(sub_cents[i][0]))
-            for (rid, _), i in zip(local_rows, idx)
-        ]
-    schema = StructType([
-        StructField("vid", id_field.dataType, id_field.nullable),
-        StructField("s", IntegerType(), False),
-        StructField("code", IntegerType(), False),
-    ])
-    return spark.createDataFrame(rows, schema)
-
-
 def _dec12_int_matrix(X: _np.ndarray) -> _np.ndarray:
     """(n, d) int64 of CAST(v AS DECIMAL(38,12)) scaled by 1e12 — the exact
     summands of the distributed centroid update, summable in numpy."""
     flat = [int(_dec12(x).scaleb(12)) for x in X.ravel().tolist()]
     return _np.asarray(flat, dtype=_np.int64).reshape(X.shape)
-
-
-def _assign_local(X: _np.ndarray, cents: list) -> _np.ndarray:
-    """Per-row index into ``cents`` of the nearest centroid under the exact
-    decimal metric, ties by centroid id (``min(struct(d2, cid))`` replica).
-    ``cents`` must be sorted ascending by id."""
-    C = _np.asarray([c[-1] for c in cents], dtype=_np.float64)
-    d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    best = _np.argmin(d2, axis=1)  # first minimum = lowest cid
-    mind = d2[_np.arange(len(X)), best]
-    # scale-aware near-tie window: float64 summation error grows with the
-    # d2 magnitude (~dims * eps * d2), so an absolute 1e-6 alone would
-    # miss genuine ties on large-magnitude vectors
-    tol = 1e-6 + 1e-9 * float(d2.max(initial=0.0))
-    near = d2 <= (mind[:, None] + tol)
-    for i in _np.flatnonzero(near.sum(axis=1) > 1):
-        cand = _np.flatnonzero(near[i])
-        exact = [(_fold_d2(X[i], C[j]), j) for j in cand]
-        best[i] = min(exact)[1]
-    return best
 
 
 def _exact_means(V12: _np.ndarray, assign: _np.ndarray, n_cents: int):
@@ -710,8 +742,9 @@ def kmeans_train(
     iters: int = 2,
 ) -> list:
     """Lloyd's k-means, expressed as DataFrame ops so it runs at corpus
-    scale: assignment is a broadcast cross-join + groupBy-min; the centroid
-    update is posexplode + per-(cluster, dim) exact decimal sums. Only the
+    scale: assignment is ``assign_clusters`` (a numpy argmin under
+    ``mapInArrow``); the centroid update is posexplode + per-(cluster,
+    dim) exact decimal sums. Only the
     k x d centroid matrix is collected per iteration (a few KB) — the
     corpus never leaves the executors. Deterministic end-to-end: decimal
     sums are order-independent, means are exact-sum / count in doubles,
@@ -721,23 +754,22 @@ def kmeans_train(
     At 100 TB, train on a sample (``corpus.sample(...)``) and reuse the
     centroids; assignment of the full corpus stays fully distributed.
 
-    When the training input is plan-estimated small (< 256 MB), the whole
-    algorithm runs driver-local instead — one collect job replaces
-    ``2 * iters`` driver-synchronous Spark jobs, with bit-identical output
-    (see the exact-decimal replica notes above)."""
+    When the training input holds at most ``_LOCAL_TRAIN_MAX_ROWS``
+    (100k) rows (``collect_small``'s cap), the whole algorithm runs
+    driver-local instead — one collect job replaces ``2 * iters``
+    driver-synchronous Spark jobs, with bit-identical output (see the
+    exact-decimal replica notes above)."""
     local_rows = _collect_if_small(corpus, id_col, vec)
     if local_rows is not None:
         cents = _kmeans_train_local(local_rows, k, iters)
         if cents is not None:
             return cents
-    spark = corpus.sparkSession
     init_rows = (
         corpus.orderBy(id_col).limit(k).select(vec).collect()
     )
     cents = [(i, [float(x) for x in r[0]]) for i, r in enumerate(init_rows)]
     for _ in range(iters):
-        cdf = _centroid_df(spark, cents)
-        assigned = assign_clusters(corpus, cdf, vec=vec, id_col=id_col)
+        assigned = assign_clusters(corpus, cents, vec=vec, id_col=id_col)
         ex = assigned.select("cid", F.posexplode(F.col(vec)).alias("dim", "val"))
         sums = ex.groupBy("cid", "dim").agg(
             F.sum(F.col("val").cast("double").cast("decimal(38,12)")).alias("__s"),
@@ -781,39 +813,19 @@ def kmeans_ivf_topk(
     which is what lifts recall on clustered embeddings at the same probe
     budget. Every stage is a broadcast or equi-join — no all-pairs.
 
-    Size-gated local fast path (guide §2.4): when the corpus is
-    plan-estimated small it is collected ONCE and both training and the
-    final corpus assignment run driver-local (bit-identical replicas, see
-    _kmeans_train_local / _assigned_local_df) — one collect job replaces
-    the training jobs plus a corpus re-scan and the per-row k x d
-    exact-decimal assignment. At scale the distributed path is unchanged:
-    train on a sample, assign fully distributed."""
-    spark = queries.sparkSession
-    local_rows = _collect_if_small(corpus, corpus_id, corpus_vec)
-    cents = _kmeans_train_local(local_rows, k_clusters, iters) \
-        if local_rows is not None else None
-    if cents is None:
-        cents = kmeans_train(corpus, vec=corpus_vec, id_col=corpus_id,
-                             k=k_clusters, iters=iters)
-    cdf = _centroid_df(spark, cents)
-    assigned = None
-    if local_rows is not None:
-        la = _assigned_local_df(spark, corpus, corpus_id, corpus_vec,
-                                local_rows, cents, with_vec=True)
-        if la is not None:
-            assigned = la.select(
-                F.col(corpus_id).alias("neighbor_id"),
-                F.col(corpus_vec).alias("__cv"),
-                "cid",
-            )
-    if assigned is None:
-        assigned = assign_clusters(
-            corpus, cdf, vec=corpus_vec, id_col=corpus_id
-        ).select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(corpus_vec).alias("__cv"),
-            "cid",
-        )
+    Training is ``kmeans_train`` (driver-local for a corpus of at most
+    100k rows); the corpus assignment is ``assign_clusters`` at every
+    size. At scale: train on a sample, assign fully distributed."""
+    cents = kmeans_train(corpus, vec=corpus_vec, id_col=corpus_id,
+                         k=k_clusters, iters=iters)
+    cdf = _centroid_df(queries.sparkSession, cents)
+    assigned = assign_clusters(
+        corpus, cents, vec=corpus_vec, id_col=corpus_id
+    ).select(
+        F.col(corpus_id).alias("neighbor_id"),
+        F.col(corpus_vec).alias("__cv"),
+        "cid",
+    )
     qd = queries.crossJoin(F.broadcast(cdf)).select(
         F.col(query_id).alias("query_id"),
         F.col(query_vec).alias("__qv"),
@@ -879,17 +891,16 @@ def pq_train(
 ) -> list:
     """Per-subspace k-means codebooks (product quantization — Jegou,
     Douze, Schmid, "Product quantization for nearest neighbor search",
-    TPAMI 2011). All m subspaces train in the SAME jobs: vectors explode
-    to (id, subspace, subvec) rows once, assignment is one broadcast join
-    keyed by subspace, the update one grouped exact-decimal mean — so the
-    training cost is independent of m. Deterministic like kmeans_train
+    TPAMI 2011). All m subspaces train in the SAME jobs: assignment codes
+    every subspace of a batch in one ``mapInArrow`` pass (``pq_encode``'s
+    assigner), the update is one grouped exact-decimal mean — so the
+    number of jobs is independent of m. Deterministic like kmeans_train
     (init = the k_codes lowest-id vectors' slices), hence SQL-mirrorable.
 
     Returns [(s, code, centroid_subvec)] with m * k_codes entries.
 
     Small training inputs dispatch to the exact driver-local replica, like
     :func:`kmeans_train`."""
-    spark = corpus.sparkSession
     if dim is None:
         dim = len(corpus.select(vec).first()[0])
     if dim % m:
@@ -900,8 +911,6 @@ def pq_train(
         cents = _pq_train_local(local_rows, m, k_codes, iters, w)
         if cents is not None:
             return cents
-    sub = checkpoint_df(_subspace_rows(corpus, vec, id_col, m, w), eager=True)
-
     init = (
         corpus.orderBy(id_col).limit(k_codes).selectExpr(
             f"{id_col} AS vid", f"{vec} AS v"
@@ -913,18 +922,12 @@ def pq_train(
         for s in range(m)
     ]
     for _ in range(iters):
-        cdf = _pq_centroid_df(spark, cents)
-        d2 = dist2_decimal_expr(F.col("subvec"), F.col("__cvec")).alias("__d2")
-        scored = sub.join(F.broadcast(cdf), on="s").select(
-            "vid", "s", "subvec", "code", d2
-        )
-        best = scored.groupBy("vid", "s").agg(
-            F.min(F.struct(F.col("__d2"), F.col("code"))).alias("__m"),
-            F.first("subvec").alias("subvec"),
-        )
-        ex = best.select(
-            "s", F.col("__m.code").alias("code"),
-            F.posexplode(F.col("subvec")).alias("dim", "val"),
+        # element pos of the vector is element pos % w of subspace pos div w
+        ex = _pq_codes(corpus, cents, vec, id_col, m, w).select(
+            "codes", F.posexplode(F.col(vec)).alias("pos", "val")
+        ).where(F.col("pos") < m * w).selectExpr(
+            f"pos div {w} AS s", f"codes[pos div {w}] AS code",
+            f"pos % {w} AS dim", "val",
         )
         rows = (
             ex.groupBy("s", "code", "dim")
@@ -961,16 +964,28 @@ def pq_encode(
 ) -> DataFrame:
     """Assign every vector its per-subspace code: (vid, s, code) long
     format — the m-byte compressed representation that replaces the full
-    vector in candidate scoring (and in shuffles)."""
-    w = dim // m
-    spark = corpus.sparkSession
-    cdf = _pq_centroid_df(spark, cents)
-    sub = _subspace_rows(corpus, vec, id_col, m, w)
-    d2 = dist2_decimal_expr(F.col("subvec"), F.col("__cvec")).alias("__d2")
-    scored = sub.join(F.broadcast(cdf), on="s").select("vid", "s", "code", d2)
-    return scored.groupBy("vid", "s").agg(
-        F.min(F.struct(F.col("__d2"), F.col("code"))).alias("__m")
-    ).select("vid", "s", F.col("__m.code").alias("code"))
+    vector in candidate scoring (and in shuffles). Code s is the entry of
+    subspace s nearest to ``slice(vec, s * w + 1, w)``, by the exact
+    decimal distance, ties by code (see ``_assign_local``)."""
+    return _pq_codes(corpus, cents, vec, id_col, m, dim // m).select(
+        "vid", F.posexplode("codes").alias("s", "code")
+    )
+
+
+def _pq_codes(corpus: DataFrame, cents: list, vec: str, id_col: str,
+              m: int, w: int) -> DataFrame:
+    """(vid, vec, codes): ``codes[s]`` is the code of subspace s nearest
+    to the vector's s-th ``w``-wide slice, all m from one numpy pass per
+    batch under ``mapInArrow``."""
+    books = [[(c, v) for cs, c, v in sorted(cents) if cs == s] for s in range(m)]
+    return _map_nearest(
+        corpus.select(F.col(id_col).alias("vid"), vec), books, w,
+        T.StructField("codes", T.ArrayType(T.IntegerType(), False), False),
+        lambda ids: _pa.ListArray.from_arrays(
+            _pa.array(_np.arange(0, ids.size + 1, m, dtype=_np.int32)),
+            _pa.array(ids.ravel().astype(_np.int32)),
+        ),
+    )
 
 
 def ivfpq_topk(
@@ -1012,9 +1027,9 @@ def ivfpq_topk(
     w = dim // m
 
     # coarse quantizer: learned cells + corpus assignment (existing IVF).
-    # One shared collect feeds both local trainers when the corpus is
-    # plan-estimated small; otherwise each falls back to its distributed
-    # training pipeline independently.
+    # One shared collect feeds both local trainers when the corpus holds
+    # at most _LOCAL_TRAIN_MAX_ROWS rows; otherwise each falls back to its
+    # distributed training pipeline independently.
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     local_rows = _collect_if_small(corpus, corpus_id, corpus_vec)
@@ -1029,28 +1044,11 @@ def ivfpq_topk(
         pcents = pq_train(corpus, vec=corpus_vec, id_col=corpus_id, m=m,
                           k_codes=k_codes, iters=pq_iters, dim=dim)
     cdf = _centroid_df(spark, ccents)
-    # size-gated local fast path (guide §2.4): the corpus was already
-    # collected for training — coarse assignment and PQ encoding are pure
-    # functions of it, so compute both driver-local (bit-identical
-    # replicas) instead of re-scanning the corpus twice and re-running the
-    # exact-decimal distance evaluation distributed. Distributed path
-    # unchanged when the corpus is big (the documented 100 TB shape:
-    # vectors touched exactly twice, embarrassingly parallel).
-    assigned = codes = None
-    if local_rows is not None:
-        la = _assigned_local_df(spark, corpus, corpus_id, corpus_vec,
-                                local_rows, ccents, with_vec=False)
-        lc = _codes_local_df(spark, corpus, corpus_id, local_rows, pcents,
-                             m, dim // m)
-        if la is not None and lc is not None:
-            assigned = la.withColumnRenamed(corpus_id, "neighbor_id")
-            codes = lc.withColumnRenamed("vid", "neighbor_id")
-    if assigned is None or codes is None:
-        assigned = assign_clusters(
-            corpus, cdf, vec=corpus_vec, id_col=corpus_id
-        ).select(F.col(corpus_id).alias("neighbor_id"), "cid")
-        codes = pq_encode(corpus, pcents, vec=corpus_vec, id_col=corpus_id,
-                          m=m, dim=dim).withColumnRenamed("vid", "neighbor_id")
+    assigned = assign_clusters(
+        corpus, ccents, vec=corpus_vec, id_col=corpus_id
+    ).select(F.col(corpus_id).alias("neighbor_id"), "cid")
+    codes = pq_encode(corpus, pcents, vec=corpus_vec, id_col=corpus_id,
+                      m=m, dim=dim).withColumnRenamed("vid", "neighbor_id")
 
     # query-side: probed cells + per-subspace distance tables
     qd = queries.crossJoin(F.broadcast(cdf)).select(
@@ -1211,7 +1209,8 @@ def semantic_dedup(
     decision is a pure pairwise predicate restatable in SQL).
 
     Scale shape: training touches only the k x d centroid matrix on the
-    driver; assignment is a broadcast join; candidate generation is a
+    driver; assignment is ``assign_clusters`` (a numpy argmin per batch,
+    no join); candidate generation is a
     self-equi-join on cluster id — pair count is sum over clusters of
     |cluster|^2 / 2 rather than |corpus|^2 / 2, and k_clusters is the
     knob that bounds it (at 100 TB pick k so the largest cell fits a
@@ -1220,32 +1219,16 @@ def semantic_dedup(
     Output: (id_col, cid, kept) — one row per input row, kept=false for
     dropped near-duplicates.
     """
-    spark = corpus.sparkSession
-    # size-gated local fast path (guide §2.4, same as kmeans_ivf_topk):
-    # a small corpus is collected ONCE and training + assignment run
-    # driver-local, bit-identical to the distributed replicas
-    local_rows = _collect_if_small(corpus, id_col, vec)
-    cents = _kmeans_train_local(local_rows, k_clusters, iters) \
-        if local_rows is not None else None
-    if cents is None:
-        cents = kmeans_train(
-            corpus, vec=vec, id_col=id_col, k=k_clusters, iters=iters
-        )
-    assigned = None
-    if local_rows is not None:
-        assigned = _assigned_local_df(
-            spark, corpus, id_col, vec, local_rows, cents, with_vec=True
-        )
-    if assigned is None:
-        cdf = _centroid_df(spark, cents)
-        # `assigned` is referenced THREE times (both pair-join sides and
-        # the final keep join): checkpoint so the broadcast-cross-join
-        # assignment pass runs once, not three times (§2.4;
-        # checkpoint_df honors the reliable-checkpoint escape hatch)
-        assigned = checkpoint_df(
-            assign_clusters(corpus, cdf, vec=vec, id_col=id_col),
-            eager=False,
-        )
+    cents = kmeans_train(
+        corpus, vec=vec, id_col=id_col, k=k_clusters, iters=iters
+    )
+    # `assigned` is referenced THREE times (both pair-join sides and the
+    # final keep join): checkpoint so the assignment pass runs once, not
+    # three times (§2.4; checkpoint_df honors the reliable-checkpoint
+    # escape hatch)
+    assigned = checkpoint_df(
+        assign_clusters(corpus, cents, vec=vec, id_col=id_col), eager=False
+    )
     # precompute each row's norm ONCE before the pair join — recomputing it
     # per pair would triple the dot-product work (the per-pair op sequence
     # is unchanged, so the rounded cosine stays bit-identical)

@@ -1079,9 +1079,10 @@ k_remove_repeated = _param_geom_kernel(
 _k_buffer_slow = _param_geom_kernel(lambda g, w, q: alg.buffer(g, float(w), int(q)))
 
 
-def k_buffer(s, w, q):
-    """ST_Buffer with a fully vectorized fast path for the common case:
-    an all-XY-point column, positive widths, uniform quadsegs. Builds every
+def k_buffer(s, w, q=8):
+    """ST_Buffer(geom, width[, quadsegs]), quadsegs 8 when omitted as in
+    PostGIS, with a fully vectorized fast path for the common case: an
+    all-XY-point column, positive widths, uniform quadsegs. Builds every
     circle ring in one (rows, verts, 2) numpy op and packs the WKB polygons
     in one buffer — byte-identical to the per-row path (same op order)."""
     vals = list(s)

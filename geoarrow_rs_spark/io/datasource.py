@@ -1482,10 +1482,9 @@ def register_datasources(spark):
     """Register the Python data sources on this session (idempotent;
     sources the session already has are left as they are).
 
-    Only the two expected benign cases are swallowed — the API not
-    existing (Spark < 4) and re-registration of the same source. Any
-    other failure is a real registration problem and is re-raised so
-    ``format("flatgeobuf")`` doesn't silently go missing.
+    Only the one expected benign case is swallowed — re-registration of
+    the same source. Any other failure is a real registration problem and
+    is re-raised so ``format("flatgeobuf")`` doesn't silently go missing.
 
     Side effect (warned, not silent): the readers implement
     ``pushFilters()``, and Spark refuses to plan any reader that defines
@@ -1494,9 +1493,7 @@ def register_datasources(spark):
     session-wide: other Python data sources in the session that define
     ``pushFilters`` start being consulted too.
     """
-    registry = getattr(spark, "dataSource", None)
-    if registry is None:
-        return  # Spark < 4: Python DataSource API unavailable
+    registry = spark.dataSource
     flag = "spark.sql.python.filterPushdown.enabled"
     try:
         cur = spark.conf.get(flag, None)

@@ -16,9 +16,12 @@ generated per row (the covering generator,
 file metadata is written two ways: a ``_geo_metadata.json`` sidecar next
 to the parts (fast driver reads, partition scheme lives only here) AND the
 spec-mandated ``geo`` key in every part file's footer (matching
-rust/geoparquet/src/writer/metadata.rs:670), stamped post-write by a
-distributed pyarrow rewrite, so external readers (geopandas, DuckDB
-spatial, the reference) see repo-written datasets as GeoParquet.
+rust/geoparquet/src/writer/metadata.rs:670), so external readers
+(geopandas, DuckDB spatial, the reference) see repo-written datasets as
+GeoParquet. ``write_geoparquet`` saves through the ``geoparquet`` Python
+data source, whose tasks write each footer in place;
+``write_geoparquet_partitioned`` stamps them post-write by a distributed
+pyarrow rewrite.
 """
 
 from __future__ import annotations
@@ -138,12 +141,16 @@ def write_geoparquet(
     encoding: str = "WKB",
     geometry_types=None,
 ):
-    """Write a DataFrame with a WKB geometry column as GeoParquet.
+    """Write a DataFrame with a WKB geometry column as GeoParquet to a
+    local path, through the ``geoparquet`` Python data source: each task
+    streams its batches into its own part with the geo footer in place,
+    and the file-level bbox is merged from the tasks' bboxes — one scan
+    total. Returns the written ``geo`` metadata.
 
-    The file-level bbox is collected DURING the write job via
-    ``DataFrame.observe`` — one scan total (the old re-read-and-aggregate
-    cost a second full pass over everything just written, which at 100 TB
-    doubles the job).
+    ``mode``: ``overwrite`` or ``append``; ``error``/``errorifexists``
+    raise ``FileExistsError`` and ``ignore`` writes nothing and returns the
+    existing dataset's metadata when ``path`` exists. A non-local path
+    (``scheme://``) raises ``ValueError`` before anything is written.
 
     Native GeoArrow encodings (``encoding="point" / "linestring" /
     "polygon" / "multipoint" / "multilinestring" / "multipolygon"``)
@@ -178,69 +185,41 @@ def write_geoparquet(
         else "WKB"
     )
 
-    # Preferred path: the Python DataSource writer (Spark 4) — each task
-    # streams its batches into its own part with the geo footer already
-    # in place, so the footer-stamping second pass below never runs (at
-    # 100 TB that pass doubles the write job). Falls back to the Spark
-    # parquet sink + stamping for remote/Hadoop destinations, non-
-    # append/overwrite save modes, or Spark < 4.
     local = _local_path(path)
-    if (
-        local is not None
-        and mode in ("overwrite", "append")
-        and getattr(df.sparkSession, "dataSource", None) is not None
-    ):
-        from .datasource import register_datasources
-
-        register_datasources(df.sparkSession)
-        w = (
-            out.write.format("geoparquet").mode(mode)
-            .option("geometry_col", geometry_col)
-            .option("covering", "true" if generate_covering else "false")
-            .option("covering_col", covering_col)
-            .option("encoding", doc_enc)
-            .option("compute_bbox", "true" if compute_bbox else "false")
+    if local is None:
+        raise ValueError(
+            f"write_geoparquet: {path!r} is not a local path; the geoparquet "
+            "data source writes local files only"
         )
-        if crs is not None:
-            w = w.option(
-                "crs",
-                json.dumps(crs) if not isinstance(crs, str) else crs,
-            )
-        if geometry_types is not None:
-            w = w.option("geometry_types", json.dumps(list(geometry_types)))
-        w.save(local)
-        with open(os.path.join(local, SIDECAR)) as f:
-            return json.load(f)
+    # the Python data source takes append/overwrite only: settle the
+    # other two modes here
+    if mode in ("error", "errorifexists", "ignore"):
+        if os.path.exists(local):
+            if mode == "ignore":
+                return read_geo_metadata(local)
+            raise FileExistsError(f"write_geoparquet: {path!r} already exists")
+        mode = "append"
+    from .datasource import register_datasources
 
-    obs = None
-    if compute_bbox and covering_col in out.columns:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        out = out.observe(
-            obs,
-            F.min(f"{covering_col}.xmin").alias("xmin"),
-            F.min(f"{covering_col}.ymin").alias("ymin"),
-            F.max(f"{covering_col}.xmax").alias("xmax"),
-            F.max(f"{covering_col}.ymax").alias("ymax"),
-        )
-    out.write.mode(mode).parquet(path)
-
-    file_bbox = None
-    if obs is not None:
-        m = obs.get
-        if m.get("xmin") is not None:
-            file_bbox = [m["xmin"], m["ymin"], m["xmax"], m["ymax"]]
-
-    doc = _geo_doc(
-        geometry_col, crs, file_bbox, covering_col if generate_covering else None,
-        encoding=doc_enc,
-        geometry_types=geometry_types,
+    register_datasources(df.sparkSession)
+    w = (
+        out.write.format("geoparquet").mode(mode)
+        .option("geometry_col", geometry_col)
+        .option("covering", "true" if generate_covering else "false")
+        .option("covering_col", covering_col)
+        .option("encoding", doc_enc)
+        .option("compute_bbox", "true" if compute_bbox else "false")
     )
-    with open(os.path.join(path, SIDECAR), "w") as f:
-        json.dump(doc, f)
-    _stamp_geo_footers(df.sparkSession, path, doc)
-    return doc
+    if crs is not None:
+        w = w.option(
+            "crs",
+            json.dumps(crs) if not isinstance(crs, str) else crs,
+        )
+    if geometry_types is not None:
+        w = w.option("geometry_types", json.dumps(list(geometry_types)))
+    w.save(local)
+    with open(os.path.join(local, SIDECAR)) as f:
+        return json.load(f)
 
 
 _CELL_PACK = 1 << 21

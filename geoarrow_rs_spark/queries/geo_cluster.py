@@ -272,19 +272,18 @@ ORACLE_GEO_HEXBIN = _hexbin_oracle_sql()
 def geo_cluster_kmeans(spark, sf_dir):
     """ST_ClusterKMeans parity: k-means over 2-D points, reusing the
     embeddings k-means machinery (similarity.kmeans_train /
-    assign_clusters — broadcast centroid assignment, exact decimal
-    distances, deterministic lowest-id init). Output: every point's
-    cluster id after 2 Lloyd's iterations, k=6, mirrored bit-exactly by
-    the unrolled-CTE oracle."""
-    from ..datapipe.similarity import assign_clusters, kmeans_train, _centroid_df
+    assign_clusters — a numpy nearest-centroid argmin per batch, exact
+    decimal distances, deterministic lowest-id init). Output: every
+    point's cluster id after 2 Lloyd's iterations, k=6, mirrored
+    bit-exactly by the unrolled-CTE oracle."""
+    from ..datapipe.similarity import assign_clusters, kmeans_train
 
     c = _t(spark, sf_dir, "customer")
     pts = _spread(c).selectExpr("c_custkey", _KNN_PX, _KNN_PY).select(
         "c_custkey", F.array(F.col("px"), F.col("py")).alias("v")
     )
     cents = kmeans_train(pts, vec="v", id_col="c_custkey", k=6, iters=2)
-    cdf = _centroid_df(spark, cents)
-    out = assign_clusters(pts, cdf, vec="v", id_col="c_custkey")
+    out = assign_clusters(pts, cents, vec="v", id_col="c_custkey")
     return out.select("c_custkey", F.col("cid").cast("long").alias("cluster"))
 
 

@@ -110,9 +110,13 @@ def streaming_dedup(
     (re-armed every time the digest is touched), so only digests unseen
     for the TTL span are evicted and a later duplicate re-emits (the
     same contract as dropDuplicatesWithinWatermark, but by idle time
-    rather than event time). The TTL is a processing-time timeout, so it
-    needs a processing-time trigger: under ``trigger(availableNow=True)``
-    Spark keeps running empty micro-batches and the query never finishes.
+    rather than event time). The TTL is a processing-time timeout
+    (``GroupStateTimeout.ProcessingTimeTimeout``), so it needs a
+    processing-time trigger (``trigger(processingTime=...)``): under
+    ``trigger(availableNow=True)`` Spark keeps running empty micro-batches
+    and the query never finishes, and ``processAllAvailable()`` never
+    returns either. ``trigger(once=True)`` runs its one batch and stops,
+    so no TTL ever fires there.
 
     Works on batch DataFrames too (state degenerates to per-group first)."""
     from pyspark.sql import functions as F
@@ -712,9 +716,12 @@ def streaming_geofence_transitions(
     processing-time span: state stays O(active entities), and an evicted
     entity that reappears re-emits 'enter' for every containing fence
     (cold-start semantics, documented tradeoff). The idle timeout is a
-    processing-time timeout, so it needs a processing-time trigger: under
-    ``trigger(availableNow=True)`` Spark keeps running empty micro-batches
-    and the query never finishes.
+    processing-time timeout (``GroupStateTimeout.ProcessingTimeTimeout``),
+    so it needs a processing-time trigger (``trigger(processingTime=...)``):
+    under ``trigger(availableNow=True)`` Spark keeps running empty
+    micro-batches and the query never finishes, and
+    ``processAllAvailable()`` never returns either. ``trigger(once=True)``
+    runs its one batch and stops, so no entity is ever evicted there.
 
     Batch DataFrames run the identical per-entity walk through
     ``applyInPandas`` (state degenerates to 'no prior history'), so a

@@ -86,6 +86,35 @@ def test_write_overwrite_replaces_old_parts(tmp_path, spark):
     assert side["columns"]["geometry"]["bbox"] == [0.0, 0.0, 49.0, 49.0]
 
 
+def test_write_geoparquet_error_and_ignore_modes(tmp_path, spark):
+    """``mode="error"`` refuses an existing dataset and ``mode="ignore"``
+    leaves it as it is — sidecar bbox and part footers included — and
+    returns its metadata; on a new path both write it."""
+    from geoarrow_rs_spark.io.geoparquet import write_geoparquet
+
+    out = str(tmp_path / "ds")
+    doc = write_geoparquet(_points_df(spark, 20), out, mode="error")
+    assert doc["columns"]["geometry"]["bbox"] == [0.0, 0.0, 19.0, 19.0]
+    stamp = {p: os.stat(p).st_mtime_ns for p in glob.glob(out + "/*")}
+
+    with pytest.raises(FileExistsError):
+        write_geoparquet(_points_df(spark, 5), out, mode="error")
+    assert write_geoparquet(_points_df(spark, 5), out, mode="ignore") == doc
+    assert {p: os.stat(p).st_mtime_ns for p in glob.glob(out + "/*")} == stamp
+    assert spark.read.format("geoparquet").load(out).count() == 20
+
+    fresh = str(tmp_path / "fresh")
+    assert write_geoparquet(_points_df(spark, 5), fresh, mode="ignore")[
+        "columns"]["geometry"]["bbox"] == [0.0, 0.0, 4.0, 4.0]
+
+
+def test_write_geoparquet_remote_path_raises_before_writing(spark):
+    from geoarrow_rs_spark.io.geoparquet import write_geoparquet
+
+    with pytest.raises(ValueError, match="not a local path"):
+        write_geoparquet(_points_df(spark, 5), "s3://bucket/ds")
+
+
 def test_write_crs_and_no_covering(tmp_path, spark):
     out = str(tmp_path / "ds")
     (

@@ -100,6 +100,22 @@ def test_transforms_sql(spark):
     assert r["ca"] == 25.0
 
 
+def test_buffer_quadsegs_defaults_to_8(spark):
+    """The two-argument PostGIS form ST_Buffer(geom, width) uses quadsegs 8,
+    for points (vectorized path) and polygons (per-row path)."""
+    df = spark.createDataFrame([
+        Row(id=0, wkt="POINT (1 2)"),
+        Row(id=1, wkt="POLYGON ((0 0, 4 0, 4 3, 0 0))"),
+        Row(id=2, wkt=None),
+    ]).selectExpr("id", "ST_GeomFromWKT(wkt) AS g")
+    out = df.selectExpr(
+        "id", "ST_Buffer(g, 5D) AS two",
+        "ST_Buffer(g, 5D, 8) AS three",
+    ).orderBy("id").collect()
+    assert [r["two"] for r in out] == [r["three"] for r in out]
+    assert out[0]["two"] is not None and out[2]["two"] is None
+
+
 def test_geojson_roundtrip(spark):
     df = spark.createDataFrame([Row(wkt="LINESTRING (0 0, 10 0, 10 10)")])
     r = df.selectExpr(

@@ -933,12 +933,48 @@ def test_tiff_singleton_channel_and_bad_shapes():
         mm.encode_tiff(np.zeros((5,), np.uint8))
 
 
+def _crossjoin_assign(df, cents, vec="embedding", id_col="vec_id"):
+    """The broadcast cross-join plan ``assign_clusters`` replaced, kept as
+    its oracle: exact decimal distances, ``min(struct(d2, cid))``."""
+    from geoarrow_rs_spark.datapipe import similarity as S
+
+    cdf = S._centroid_df(df.sparkSession, cents)
+    d2 = S.dist2_decimal_expr(F.col(vec), F.col("__cvec")).alias("__d2")
+    scored = df.crossJoin(F.broadcast(cdf)).select(
+        F.col(id_col), F.col(vec), F.col("__cid"), d2
+    )
+    best = scored.groupBy(id_col).agg(
+        F.min(F.struct(F.col("__d2"), F.col("__cid"))).alias("__m"),
+        F.first(vec).alias(vec),
+    )
+    return best.select(id_col, vec, F.col("__m.__cid").alias("cid"))
+
+
+def _crossjoin_pq_encode(corpus, cents, vec="embedding", id_col="vec_id",
+                         m=4, dim=64):
+    """The subspace broadcast-join plan ``pq_encode`` replaced (its oracle)."""
+    from geoarrow_rs_spark.datapipe import similarity as S
+
+    cdf = S._pq_centroid_df(corpus.sparkSession, cents)
+    sub = S._subspace_rows(corpus, vec, id_col, m, dim // m)
+    d2 = S.dist2_decimal_expr(F.col("subvec"), F.col("__cvec")).alias("__d2")
+    scored = sub.join(F.broadcast(cdf), on="s").select("vid", "s", "code", d2)
+    return scored.groupBy("vid", "s").agg(
+        F.min(F.struct(F.col("__d2"), F.col("code"))).alias("__m")
+    ).select("vid", "s", F.col("__m.code").alias("code"))
+
+
+def _sorted_rows(df):
+    # repr: NaN elements compare equal by text, not by value
+    return sorted(map(repr, map(tuple, df.collect())))
+
+
 def test_local_assignment_bit_identical_to_distributed(spark, sf_dir):
-    """r8: the driver-local corpus ASSIGNMENT + PQ ENCODING fast paths
-    (_assigned_local_df / _codes_local_df) must reproduce the distributed
-    assign_clusters / pq_encode exactly — same (id, cid) and (vid, s,
-    code) sets — or the kmeans-IVF / IVF-PQ oracles would silently
-    break."""
+    """The numpy assigner behind ``assign_clusters`` and ``pq_encode``
+    (``_assign_local`` under ``mapInArrow``) reproduces the former
+    cross-join plan exactly on the embeddings corpus — same (id, vec,
+    cid) and (vid, s, code) rows — or the kmeans-IVF / IVF-PQ oracles
+    would silently break."""
     from geoarrow_rs_spark.datapipe import similarity as S
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").where("vec_id >= 8")
@@ -947,16 +983,135 @@ def test_local_assignment_bit_identical_to_distributed(spark, sf_dir):
     cents = S._kmeans_train_local(rows, 8, 2)
     pcents = S._pq_train_local(rows, 4, 8, 2, 16)
 
-    la = S._assigned_local_df(spark, e, "vec_id", "embedding", rows, cents,
-                              with_vec=False)
-    lc = S._codes_local_df(spark, e, "vec_id", rows, pcents, 4, 16)
-    cdf = S._centroid_df(spark, cents)
-    da = S.assign_clusters(e, cdf, vec="embedding", id_col="vec_id") \
-        .select("vec_id", "cid")
-    dc = S.pq_encode(e, pcents, vec="embedding", id_col="vec_id", m=4, dim=64)
+    got = S.assign_clusters(e, cents, vec="embedding", id_col="vec_id")
+    want = _crossjoin_assign(e, cents)
+    assert got.dtypes == want.dtypes
+    assert _sorted_rows(got) == _sorted_rows(want)
+    assert got.count() == e.count()
+    got = S.pq_encode(e, pcents, vec="embedding", id_col="vec_id", m=4, dim=64)
+    assert _sorted_rows(got) == _sorted_rows(_crossjoin_pq_encode(e, pcents))
 
-    assert sorted(map(tuple, la.collect())) == sorted(map(tuple, da.collect()))
-    assert sorted(map(tuple, lc.collect())) == sorted(map(tuple, dc.collect()))
+
+# centroids for the seeded cases: ids 0 and 1 tie exactly for the zero
+# vector (0.5000000000004**2 casts to 0.25 at 12 dp, as 0.5**2 does) while
+# float64 calls id 1 nearer; ids 2 and 3 hold the same values in another
+# order
+_TIE_CENTS = [
+    (0, [0.5000000000004, 0.0, 0.0, 0.0]),
+    (1, [0.5, 0.0, 0.0, 0.0]),
+    (2, [0.1, 0.2, 0.3, 0.7]),
+    (3, [0.7, 0.3, 0.2, 0.1]),
+    (4, [2.0, 2.0, 2.0, 2.0]),
+]
+
+_NAN, _INF = float("nan"), float("inf")
+_ASSIGN_CASES = {
+    "null-vector": [None, [2.0, 2.0, 2.0, 2.0]],
+    "null-element": [[None, 2.0, 2.0, 2.0], [2.0, 2.0, 2.0, None],
+                     [0.1, 0.2, None, 0.7]],
+    "length-mismatch": [[2.0, 2.0, 2.0], [2.0, 2.0, 2.0, 2.0, 2.0], [], [2.0]],
+    "exact-ties": [[0.4, 0.25, 0.25, 0.4], [1.25, 1.0, 1.0, 1.0],
+                   [0.0, 0.0, 0.0, 0.0], [0.4, 0.25, 0.25, 0.4]],
+    "near-ties": [[0.0, 0.0, 0.0, 0.0], [1e-12, 0.0, 0.0, 0.0],
+                  [0.5000000000001, 0.0, 0.0, 0.0],
+                  [0.2500000000002, 0.0, 0.0, 0.0],
+                  [0.4, 0.25 + 4e-13, 0.25, 0.4 - 3e-13]],
+    "duplicate-vectors": [[1.9, 2.0, 2.0, 2.0]] * 3 + [[0.1, 0.2, 0.3, 0.7]] * 2,
+    "nan-inf": [[_NAN, 2.0, 2.0, 2.0], [2.0, _INF, 2.0, 2.0],
+                [2.0, 2.0, 1e200, 2.0], [2.0, 2.0, 2.0, -_INF]],
+    "large": [[1e12, 1e12, 1e12, 1e12], [-3e12, 2.0, 2.0, 2.0]],
+    # centroids of _CASE_CENTS: in "ragged-centroids" id 0 is one value
+    # short, so its distance to a 4-vector is NULL and sorts before every
+    # number, while a 3-vector gets a NULL distance from ids 1-5 only; in
+    # "nan-centroid" id 2's distance is NULL for every vector
+    "ragged-centroids": [[2.0, 2.0, 2.0, 2.0], [2.0, 2.0, 2.0], None, [0.5],
+                         [0.1, 0.2, 0.3]],
+    "nan-centroid": [[2.0, 2.0, 2.0, 2.0], [0.5, 0.0, 0.0, 0.0], [2.0]],
+}
+_CASE_CENTS = {
+    "ragged-centroids": [(0, [2.0, 2.0, 2.0])] + [(c + 1, v) for c, v in _TIE_CENTS],
+    "nan-centroid": [(c, [_NAN, 0.0, 0.0, 0.0] if c == 2 else v) for c, v in _TIE_CENTS],
+}
+
+
+def _edge_frame(spark, vectors, parts=2):
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.DoubleType())),
+    ])
+    rows = list(enumerate(vectors))
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+
+
+def _random_vectors(seed, n=300):
+    """Near ties by construction: the tie centroids' values perturbed in
+    the last decimal places, permuted, duplicated, with NULLs and
+    ragged rows mixed in."""
+    import numpy as np
+
+    rng = np.random.default_rng([20261020, seed])
+    out = []
+    for _ in range(n):
+        u = rng.random()
+        if u < 0.03:
+            out.append(None)
+            continue
+        base = list(_TIE_CENTS[int(rng.integers(len(_TIE_CENTS)))][1])
+        v = [x + float(rng.choice([0.0, 1e-13, -4e-13, 5e-12, 1e-3])) for x in base]
+        v = list(rng.permutation(v)) if rng.random() < 0.3 else v
+        if rng.random() < 0.05:
+            v[int(rng.integers(4))] = None
+        if rng.random() < 0.05:
+            v = v[: int(rng.integers(0, 6))]
+        out.append([None if x is None else float(x) for x in v])
+    return out + out[:20]  # duplicate vectors
+
+
+@pytest.mark.parametrize(
+    "case", list(_ASSIGN_CASES) + [f"random-{i}" for i in range(3)])
+def test_assignment_matches_crossjoin_plan_on_edge_cases(spark, case):
+    """Seeded edge cases against the former cross-join plans: a NULL
+    vector, element or length mismatch makes the distance NULL, which
+    sorts first (lowest such id wins); exact decimal ties go to the lowest id
+    although float64 orders them; NaN and inf terms are NULL too. Several
+    Arrow batches per partition."""
+    from geoarrow_rs_spark.datapipe import similarity as S
+
+    vectors = (_ASSIGN_CASES[case] if case in _ASSIGN_CASES
+               else _random_vectors(int(case.rsplit("-", 1)[1])))
+    df = _edge_frame(spark, vectors)
+    cents = _CASE_CENTS.get(case, _TIE_CENTS)
+    pcents = [(s, c, v[2 * s: 2 * s + 2]) for c, v in cents for s in range(2)]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = S.assign_clusters(df, cents)
+        want = _crossjoin_assign(df, cents)
+        assert got.dtypes == want.dtypes
+        assert _sorted_rows(got) == _sorted_rows(want)
+        got = S.pq_encode(df, pcents, m=2, dim=4)
+        assert _sorted_rows(got) == _sorted_rows(_crossjoin_pq_encode(df, pcents, m=2, dim=4))
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("vector", [[-1e13, 0.0, 0.0, 0.0], [8e12, 8e12, 0.0, 0.0]])
+def test_assignment_overflow_raises_like_crossjoin_plan(spark, vector):
+    """A squared term or partial sum of 1e26 or more does not fit
+    DECIMAL(38,12): the former plan raised (ANSI mode), so the assigner
+    raises too, for the whole vector and for a PQ slice."""
+    from geoarrow_rs_spark.datapipe import similarity as S
+
+    df = _edge_frame(spark, [[1.0, 1.0, 1.0, 1.0], vector])
+    pcents = [(0, 0, [0.0, 0.0, 0.0, 0.0])]
+    for plan in (_crossjoin_assign(df, _TIE_CENTS), S.assign_clusters(df, _TIE_CENTS),
+                 _crossjoin_pq_encode(df, pcents, m=1, dim=4),
+                 S.pq_encode(df, pcents, m=1, dim=4)):
+        with pytest.raises(Exception, match="Decimal"):
+            plan.collect()
 
 
 def test_srp_dim_hint_bit_identical(spark, sf_dir):

@@ -494,8 +494,8 @@ def test_chunk_documents_no_shuffle(spark, sf_dir):
 
 def test_semantic_dedup_pairs_are_equi_join(spark, sf_dir):
     """SemDeDup candidate pairs come from a cluster-id equi-join — never a
-    cartesian over the corpus. Centroid assignment is the one deliberate
-    broadcast NLJ (tiny k x d table); everything else is equi."""
+    cartesian over the corpus. Centroid assignment joins nothing (a numpy
+    argmin per batch under mapInArrow); the pair join is equi."""
     from geoarrow_rs_spark.datapipe.similarity import semantic_dedup
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
