@@ -1,15 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk``: brute-force baseline — collect the (small) query set,
-  score corpus batches with numpy under ``mapInArrow`` (only per-batch
-  top-k candidates leave the scorer), window top-k. Exact; scales linearly
-  in corpus size.
+Two numpy scorers run under ``mapInArrow``, one per ranking rule:
+
+- ``cosine_topk``: brute-force top-k by cosine — collect the (small) query
+  set, score corpus batches with numpy (only per-batch top-k candidates
+  leave the scorer), window top-k. Exact; scales linearly in corpus size.
+  ``quantized_topk`` scores its int8 codes with it (an in-order double
+  fold is the exact integer dot product below 2^53).
+- ``_assign_local``: the n nearest centroids by the exact decimal distance,
+  ties by id. ``assign_clusters`` / ``pq_encode`` take the nearest
+  centroid (PQ code) per corpus vector, ``kmeans_train``/``pq_train``
+  iterate it, and ``kmeans_ivf_topk``/``ivfpq_topk`` take each query's
+  ``nprobe`` cells from it.
+
 - ``ivf_topk``: scale path — coarse quantizer (deterministic grid/LSH
   centroids) partitions the corpus; queries probe only matching partitions.
 - ``srp_bucket_expr``: sign-random-projection bucket for LSH blocking.
-- ``assign_clusters`` / ``pq_encode``: nearest centroid (PQ code) per
-  vector by the exact decimal distance, a numpy argmin per corpus batch
-  under ``mapInArrow``; ``kmeans_train``/``pq_train`` iterate it.
 
 Other dot products use ``F.zip_with`` + ``F.aggregate`` (native, no UDF). For
 cross-engine oracle determinism the decimal variant ``dot_decimal_expr``
@@ -23,14 +29,6 @@ import pyarrow as _pa
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..checkpoint import checkpoint_df, collect_small
-
-
-def dot_expr(v1, v2):
-    return F.aggregate(
-        F.zip_with(v1, v2, lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def dot_decimal_expr(v1, v2, scale: int = 12):
@@ -91,12 +89,10 @@ def dot_inorder_expr(v1, v2, dim_hint: int | None = None):
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine_fast_expr(v1, v2, dim_hint: int | None = None):
+def cosine_fast_expr(v1, v2):
     """Cosine on the in-order double fold (see dot_inorder_expr)."""
-    num = dot_inorder_expr(v1, v2, dim_hint)
-    den = F.sqrt(dot_inorder_expr(v1, v1, dim_hint)) * F.sqrt(
-        dot_inorder_expr(v2, v2, dim_hint)
-    )
+    num = dot_inorder_expr(v1, v2)
+    den = F.sqrt(dot_inorder_expr(v1, v1)) * F.sqrt(dot_inorder_expr(v2, v2))
     return F.when(den > 0, num / den).otherwise(F.lit(0.0))
 
 
@@ -345,25 +341,6 @@ def multiprobe_from_base_expr(base, n_planes: int = 6, radius: int = 1):
     return F.array(*probes)
 
 
-def multiprobe_buckets_expr(
-    vec,
-    n_planes: int = 6,
-    seed: int = 7,
-    radius: int = 1,
-    dim_hint: int | None = None,
-):
-    """Array of probe buckets: the vector's own SRP bucket plus every bucket
-    within the given Hamming radius (radius 1 => n_planes+1 probes). Probing
-    neighbors recovers candidates that a near-boundary projection pushed into
-    an adjacent bucket — the standard multiprobe-LSH recall fix.
-
-    NOTE: the base bucket expression is inlined into every flip; when you
-    can stage the base as a column first, prefer
-    ``srp_bucket_expr`` + ``multiprobe_from_base_expr`` (see ivf_topk)."""
-    base = srp_bucket_expr(vec, n_planes, seed, dim_hint=dim_hint)
-    return multiprobe_from_base_expr(base, n_planes, radius)
-
-
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -547,63 +524,75 @@ def _fold_d2(a, b):
     return acc
 
 
-def _assign_local(X: _np.ndarray, cents: list) -> _np.ndarray:
-    """Per-row index into ``cents`` (sorted ascending by id, vector last)
-    of the centroid ``min(struct(dist2_decimal_expr(x, c), cid))`` picks:
-    the least exact decimal distance, ties by id, a NULL distance before
-    any number. ``X`` holds one float row per vector, NaN for a NULL
-    element; a centroid shorter than ``X.shape[1]`` is padded with NaN
-    (NULL terms)."""
-    n, D = X.shape
-    C = _np.full((len(cents), D), _np.nan)
-    for j, c in enumerate(cents):
-        C[j, : len(c[-1])] = c[-1]
+def _null_first(e):
+    """Sort key of an (exact distance, index) pair: NULL first, then the
+    distance, then the index."""
+    return e[0] is not None, e[0] or 0, e[1]
+
+
+def _assign_local(X: _np.ndarray, cents: list, n: int = 1) -> _np.ndarray:
+    """(rows, min(n, len(cents))) indices into ``cents`` (sorted ascending
+    by id, vector last): per row, the n centroids first in the order of
+    ``(dist2_decimal_expr(x, c) NULLS FIRST, cid)`` — the least exact
+    decimal distances, ties by id, a NULL distance before any number.
+    ``X`` holds one float row per vector, NaN for a NULL element; every
+    centroid has ``X.shape[1]`` values."""
+    rows, D = X.shape
+    C = _np.asarray([c[-1] for c in cents], _np.float64).reshape(len(cents), D)
     with _np.errstate(all="ignore"):
         # NaN-free rows too small to overflow DECIMAL(38,12) anywhere
         bound = (_np.abs(X).max(axis=1, initial=0.0) + _np.abs(C).max(initial=0.0)) ** 2
         clean = bound * D < 1e25
-        d2 = _np.zeros((n, len(C)))
+        d2 = _np.zeros((rows, len(C)))
         for j in range(D):
             d2 += (X[:, j, None] - C[None, :, j]) ** 2
-    best = _np.argmin(d2, axis=1)  # first minimum = lowest cid
-    mind = d2[_np.arange(n), best]
-    near = d2 <= (mind + 1e-6 + 1e-9 * mind)[:, None]
-    for i in _np.flatnonzero(~clean | (near.sum(axis=1) > 1)):
-        cand = _np.flatnonzero(near[i]) if clean[i] else range(len(C))
-        exact = [(_fold_d2(X[i], C[j]), j) for j in cand]
-        best[i] = min(exact, key=lambda e: (e[0] is not None, e[0] or 0, e[1]))[1]
+    order = _np.argsort(d2, axis=1, kind="stable")  # ties: lowest cid first
+    n = min(n, len(C))
+    top = _np.take_along_axis(d2, order[:, : n + 1], axis=1)
+    tol = 1e-6 + 1e-9 * top
+    # rows whose first n + 1 float distances hold a near tie, in or at the
+    # edge of the chosen n, resolve over the exact decimal fold
+    tied = (_np.diff(top, axis=1) <= tol[:, :-1]).any(axis=1)
+    best = order[:, :n]
+    for i in _np.flatnonzero(~clean | tied):
+        cand = (_np.flatnonzero(d2[i] <= top[i, n - 1] + tol[i, n - 1])
+                if clean[i] else range(len(C)))
+        exact = sorted(((_fold_d2(X[i], C[j]), j) for j in cand), key=_null_first)
+        best[i] = [j for _, j in exact[:n]]
     return best
 
 
-def _nearest_ids(arr, books: list, w: int | None = None) -> _np.ndarray:
-    """(rows, len(books)) ids: for each row ``v`` of the ``array<double>``
-    Arrow array and each codebook ``books[s]`` ([(id, vector)] sorted by
-    id), the id ``_assign_local`` picks for ``slice(v, s * w + 1, w)``
-    (all of ``v`` when ``w`` is None)."""
+def _nearest_ids(arr, books: list, w: int | None = None, n: int = 1) -> _np.ndarray:
+    """(rows, len(books) * n) ids: for each row ``v`` of the
+    ``array<double>`` Arrow array and each codebook ``books[s]`` ([(id,
+    vector)] sorted by id, at least n entries), the n ids ``_assign_local``
+    picks for ``slice(v, s * w + 1, w)`` (all of ``v`` when ``w`` is None)."""
     _, starts, lens, vals = _unpack_vectors(arr)
     valid = arr.is_valid().to_numpy(zero_copy_only=False)
-    out = _np.empty((len(arr), len(books)), _np.int64)
+    out = []
     for s, book in enumerate(books):
         lo = s * w if w else 0
         sub = _np.clip(lens - lo, 0, w)
         c_lens = _np.asarray([len(v) for _, v in book])
-        D = c_lens.max()
-        X = _np.full((len(arr), D), _np.nan)
-        fit = valid & (sub == D)
-        X[fit] = _gather(vals, starts + lo, _np.flatnonzero(fit), D)
-        for r in _np.flatnonzero(valid & (sub != D)):
-            k = min(sub[r], D)
-            X[r, :k] = vals[starts[r] + lo: starts[r] + lo + k]
-        best = _assign_local(X, book)
+        fit = valid & (sub[:, None] == c_lens).all(axis=1)
+        best = _np.empty((len(arr), min(n, len(book))), _np.int64)
+        rows = _np.flatnonzero(fit)
+        if rows.size:  # none when the centroids differ in length
+            best[rows] = _assign_local(
+                _gather(vals, starts + lo, rows, c_lens.max()), book, n)
         # zip_with pads the shorter vector with NULL, so the distance to a
-        # centroid of another length is NULL: the first such id wins
-        mism = sub[:, None] != c_lens
-        best = _np.where(mism.any(axis=1), _np.argmax(mism, axis=1), best)
-        out[:, s] = _np.asarray([i for i, _ in book])[best]
-    return out
+        # centroid of another length (or from a NULL vector) is NULL; rows
+        # that meet one rank exactly here
+        for r in _np.flatnonzero(~fit):
+            v = vals[starts[r] + lo: starts[r] + lo + sub[r]]
+            exact = sorted(((_fold_d2(v, c) if valid[r] and len(c) == len(v) else None, j)
+                            for j, (_, c) in enumerate(book)), key=_null_first)
+            best[r] = [j for _, j in exact[:n]]
+        out.append(_np.asarray([i for i, _ in book])[best])
+    return _np.concatenate(out, axis=1)
 
 
-def _map_nearest(src: DataFrame, books: list, w, field, column) -> DataFrame:
+def _map_nearest(src: DataFrame, books: list, w, field, column, n: int = 1) -> DataFrame:
     """``src`` (id, vector) with ``field`` appended: ``column`` builds it
     from each batch's ``_nearest_ids``. No rows when a codebook is empty."""
     schema = T.StructType(src.schema.fields + [field])
@@ -613,7 +602,7 @@ def _map_nearest(src: DataFrame, books: list, w, field, column) -> DataFrame:
         for b in batches:
             if live:
                 vecs = b.column(1).cast(_pa.list_(_pa.float64()), safe=False)
-                yield b.append_column(field.name, column(_nearest_ids(vecs, books, w)))
+                yield b.append_column(field.name, column(_nearest_ids(vecs, books, w, n)))
 
     return src.mapInArrow(run, schema)
 
@@ -636,6 +625,25 @@ def assign_clusters(
     )
 
 
+def _probe_cells(queries: DataFrame, query_id: str, query_vec: str,
+                 cents: list, nprobe: int) -> DataFrame:
+    """(query_id, __qv, cid): one row per query row and each of its
+    ``nprobe`` cells, the centroids first in the order of
+    ``(dist2_decimal_expr(v, c) NULLS FIRST, cid)`` — ``_assign_local``
+    asked for n nearest, per query batch under ``mapInArrow``."""
+    src = queries.select(F.col(query_id).alias("query_id"),
+                         F.col(query_vec).alias("__qv"))
+    return _map_nearest(
+        src, [sorted(cents, key=lambda c: c[0])], None,
+        T.StructField("__cids", T.ArrayType(T.LongType(), False), False),
+        lambda ids: _pa.ListArray.from_arrays(
+            _pa.array(_np.arange(len(ids) + 1, dtype=_np.int32) * ids.shape[1]),
+            _pa.array(ids.ravel()),
+        ),
+        n=max(nprobe, 0),
+    ).select("query_id", "__qv", F.explode("__cids").alias("cid"))
+
+
 # ---------------------------------------------------------------------------
 # Driver-local exact trainer (small-corpus fast path)
 #
@@ -653,15 +661,17 @@ _LOCAL_TRAIN_MAX_ROWS = 100_000
 
 
 def _collect_if_small(corpus: DataFrame, id_col: str, vec: str):
-    """[(id, [float, ...])] sorted by id if the training input holds at
-    most ``_LOCAL_TRAIN_MAX_ROWS`` rows, else None (caller uses the
-    distributed path)."""
+    """[(id, [float, ...])] sorted by id if the training input holds one
+    to ``_LOCAL_TRAIN_MAX_ROWS`` rows, no NULL vector among them and all
+    of one length; else None (the caller takes the distributed path, which
+    skips NULL vectors and trains on ragged ones)."""
     pdf = collect_small(corpus.select(id_col, vec), _LOCAL_TRAIN_MAX_ROWS)
-    if pdf is None:
+    vecs = [] if pdf is None else pdf[vec].tolist()
+    if any(v is None for v in vecs) or len({len(v) for v in vecs}) != 1:
         return None
     rows = [
         (i, [float(x) for x in v])
-        for i, v in zip(pdf[id_col].tolist(), pdf[vec])
+        for i, v in zip(pdf[id_col].tolist(), vecs)
     ]
     rows.sort(key=lambda r: r[0])
     return rows
@@ -700,12 +710,12 @@ def _int64_sum_safe(X: _np.ndarray) -> bool:
 
 def _kmeans_train_local(rows: list, k: int, iters: int) -> list:
     X = _np.asarray([v for _, v in rows], dtype=_np.float64)
-    if X.ndim != 2 or not _int64_sum_safe(X):
+    if not _int64_sum_safe(X):
         return None
     cents = [(i, list(X[i])) for i in range(min(k, len(rows)))]
     V12 = _dec12_int_matrix(X)
     for _ in range(iters):
-        assign = _assign_local(X, cents)
+        assign = _assign_local(X, cents)[:, 0]
         by_idx = _exact_means(V12, assign, len(cents))
         cents = sorted((cents[j][0], mean) for j, mean in by_idx)
     return cents
@@ -713,7 +723,7 @@ def _kmeans_train_local(rows: list, k: int, iters: int) -> list:
 
 def _pq_train_local(rows: list, m: int, k_codes: int, iters: int, w: int) -> list:
     X = _np.asarray([v for _, v in rows], dtype=_np.float64)
-    if X.ndim != 2 or not _int64_sum_safe(X):
+    if not _int64_sum_safe(X):
         return None
     n_init = min(k_codes, len(rows))
     cents = sorted(
@@ -727,7 +737,7 @@ def _pq_train_local(rows: list, m: int, k_codes: int, iters: int, w: int) -> lis
         for s in range(m):
             sub_cents = [(c, v) for (cs, c, v) in cents if cs == s]
             Xs = X[:, s * w : (s + 1) * w]
-            assign = _assign_local(Xs, sub_cents)
+            assign = _assign_local(Xs, sub_cents)[:, 0]
             by_idx = _exact_means(V12[:, s * w : (s + 1) * w], assign, len(sub_cents))
             new_cents.extend((s, sub_cents[j][0], mean) for j, mean in by_idx)
         cents = sorted(new_cents)
@@ -811,14 +821,18 @@ def kmeans_ivf_topk(
     cosine rerank inside the probed cells. The learned partitioning adapts
     to the data distribution (vs the data-agnostic SRP planes of ivf_topk),
     which is what lifts recall on clustered embeddings at the same probe
-    budget. Every stage is a broadcast or equi-join — no all-pairs.
+    budget. The probe and rerank meet in an equi-join on cell id — no
+    all-pairs.
 
     Training is ``kmeans_train`` (driver-local for a corpus of at most
     100k rows); the corpus assignment is ``assign_clusters`` at every
-    size. At scale: train on a sample, assign fully distributed."""
+    size. Each query row's cells are the ``nprobe`` centroids first by
+    (exact decimal distance NULLS FIRST, cid), from the same assigner per
+    query batch (``_probe_cells``); rows that share a query id each probe
+    their own cells. At scale: train on a sample, assign fully
+    distributed."""
     cents = kmeans_train(corpus, vec=corpus_vec, id_col=corpus_id,
                          k=k_clusters, iters=iters)
-    cdf = _centroid_df(queries.sparkSession, cents)
     assigned = assign_clusters(
         corpus, cents, vec=corpus_vec, id_col=corpus_id
     ).select(
@@ -826,18 +840,7 @@ def kmeans_ivf_topk(
         F.col(corpus_vec).alias("__cv"),
         "cid",
     )
-    qd = queries.crossJoin(F.broadcast(cdf)).select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_vec).alias("__qv"),
-        F.col("__cid"),
-        dist2_decimal_expr(F.col(query_vec), F.col("__cvec")).alias("__d2"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("__d2").asc(), F.col("__cid").asc())
-    probes = (
-        qd.withColumn("__pr", F.row_number().over(wq))
-        .where(F.col("__pr") <= nprobe)
-        .select("query_id", "__qv", F.col("__cid").alias("cid"))
-    )
+    probes = _probe_cells(queries, query_id, query_vec, cents, nprobe)
     cands = probes.join(assigned, on="cid")
     scored = cands.select(
         "query_id",
@@ -1019,6 +1022,10 @@ def ivfpq_topk(
     vectors, not cell residuals) so every stage stays a plain
     deterministic join, bit-exactly mirrored by the SQL oracle.
 
+    Each query row probes the ``nprobe`` centroids first by (exact
+    decimal distance NULLS FIRST, cid), chosen per query batch by the
+    nearest-centroid assigner (``_probe_cells``), as the corpus cells are.
+
     Returns (query_id, neighbor_id, adc_d2, rank) — rank by estimated
     distance, ascending, ties on neighbor id."""
     spark = queries.sparkSession
@@ -1043,7 +1050,6 @@ def ivfpq_topk(
     if pcents is None:
         pcents = pq_train(corpus, vec=corpus_vec, id_col=corpus_id, m=m,
                           k_codes=k_codes, iters=pq_iters, dim=dim)
-    cdf = _centroid_df(spark, ccents)
     assigned = assign_clusters(
         corpus, ccents, vec=corpus_vec, id_col=corpus_id
     ).select(F.col(corpus_id).alias("neighbor_id"), "cid")
@@ -1051,17 +1057,7 @@ def ivfpq_topk(
                       m=m, dim=dim).withColumnRenamed("vid", "neighbor_id")
 
     # query-side: probed cells + per-subspace distance tables
-    qd = queries.crossJoin(F.broadcast(cdf)).select(
-        F.col(query_id).alias("query_id"),
-        F.col("__cid"),
-        dist2_decimal_expr(F.col(query_vec), F.col("__cvec")).alias("__d2"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("__d2").asc(), F.col("__cid").asc())
-    probes = (
-        qd.withColumn("__pr", F.row_number().over(wq))
-        .where(F.col("__pr") <= nprobe)
-        .select("query_id", F.col("__cid").alias("cid"))
-    )
+    probes = _probe_cells(queries, query_id, query_vec, ccents, nprobe)
     qsub = _subspace_rows(queries, query_vec, query_id, m, w).withColumnRenamed(
         "vid", "query_id"
     )
@@ -1120,11 +1116,6 @@ def quantize_expr(vec, amax):
     )
 
 
-def _int_dot_expr(v1, v2):
-    prods = F.zip_with(v1, v2, lambda a, b: (a * b).cast("long"))
-    return F.aggregate(prods, F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
 def quantized_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1135,11 +1126,16 @@ def quantized_topk(
     k: int = 10,
 ) -> DataFrame:
     """Brute-force top-k over int8 scalar-quantized embeddings: 4x less
-    candidate traffic than float32 and EXACT integer dot products (an
-    int64 sum of int8 products — bit-deterministic, no float-order
-    concerns at all). The quantized cosine ranks candidates; at 100 TB
-    this is the memory-bound rerank you run inside IVF cells, with the
-    codes shuffling as d bytes instead of d floats.
+    candidate traffic than float32, ranked by the quantized cosine. At
+    100 TB this is the memory-bound rerank you run inside IVF cells, with
+    the codes shuffling as d bytes instead of d floats.
+
+    Spark quantizes both sides (``quantize_expr``); ``cosine_topk`` scores
+    the integer vectors. Its in-order double fold equals the exact integer
+    dot product while every partial sum stays below 2^53 in magnitude,
+    where doubles hold integers exactly. Corpus codes lie in [-127, 127];
+    only a query component some 10^5 times its dimension's corpus max-abs
+    (at d = 64) comes near that bound.
 
     Output: query_id, neighbor_id, qcosine, rank.
     """
@@ -1167,25 +1163,8 @@ def quantized_topk(
         F.col(corpus_id).alias("neighbor_id"),
         quantize_expr(F.col(corpus_vec), am_col).alias("__cq"),
     )
-    q = q.select(
-        "query_id", "__qq",
-        F.sqrt(_int_dot_expr(F.col("__qq"), F.col("__qq")).cast("double")).alias("__qn"),
-    )
-    c = c.select(
-        "neighbor_id", "__cq",
-        F.sqrt(_int_dot_expr(F.col("__cq"), F.col("__cq")).cast("double")).alias("__cn"),
-    )
-    den = F.col("__qn") * F.col("__cn")
-    num = _int_dot_expr(F.col("__qq"), F.col("__cq")).cast("double")
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.when(den > 0, num / den).otherwise(F.lit(0.0)), 8).alias("qcosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qcosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return cosine_topk(q, c, "query_id", "neighbor_id", "__qq", "__cq",
+                       k).withColumnRenamed("cosine", "qcosine")
 
 
 # ---------------------------------------------------------------------------
@@ -1199,7 +1178,6 @@ def semantic_dedup(
     k_clusters: int = 8,
     iters: int = 2,
     threshold: float = 0.35,
-    dim_hint: int | None = None,
 ) -> DataFrame:
     """Semantic deduplication (SemDeDup, Abbas et al. 2023): k-means
     clusters the embedding space, then cosine pairs are examined ONLY
@@ -1216,6 +1194,10 @@ def semantic_dedup(
     knob that bounds it (at 100 TB pick k so the largest cell fits a
     shuffle partition, exactly like the IVF cell sizing).
 
+    The pair cosine is the in-order double fold of ``cosine_fast_expr``,
+    unrolled to the trained centroids' dimension when they all share one
+    (rows of another length take the fold; bit-identical either way).
+
     Output: (id_col, cid, kept) — one row per input row, kept=false for
     dropped near-duplicates.
     """
@@ -1229,10 +1211,13 @@ def semantic_dedup(
     assigned = checkpoint_df(
         assign_clusters(corpus, cents, vec=vec, id_col=id_col), eager=False
     )
-    # precompute each row's norm ONCE before the pair join — recomputing it
-    # per pair would triple the dot-product work (the per-pair op sequence
-    # is unchanged, so the rounded cosine stays bit-identical)
-    norm = F.sqrt(dot_inorder_expr(F.col(vec), F.col(vec), dim_hint))
+    # unroll the folds to the trained centroids' length when they share
+    # one (dot_inorder_expr checks each row's size, so the result is the
+    # same bit for bit); precompute each row's norm ONCE before the pair
+    # join — recomputing it per pair would triple the dot-product work
+    dims = {len(c) for _, c in cents}
+    dim = dims.pop() if len(dims) == 1 else None
+    norm = F.sqrt(dot_inorder_expr(F.col(vec), F.col(vec), dim))
     a = assigned.select(
         F.col(id_col).alias("__aid"), F.col(vec).alias("__av"),
         norm.alias("__an"), "cid",
@@ -1242,7 +1227,7 @@ def semantic_dedup(
         norm.alias("__bn"), "cid",
     )
     den = F.col("__an") * F.col("__bn")
-    num = dot_inorder_expr(F.col("__av"), F.col("__bv"), dim_hint)
+    num = dot_inorder_expr(F.col("__av"), F.col("__bv"), dim)
     sim = F.round(F.when(den > 0, num / den).otherwise(F.lit(0.0)), 8)
     dup_ids = (
         a.join(b, on="cid")

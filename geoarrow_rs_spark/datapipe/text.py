@@ -62,13 +62,6 @@ def alpha_ratio(text) -> Column:
     return F.when(ln > 0, letters.cast("double") / ln.cast("double")).otherwise(F.lit(0.0))
 
 
-def upper_ratio(text) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    ln = F.length(t)
-    uppers = F.length(F.regexp_replace(t, "[^A-Z]", ""))
-    return F.when(ln > 0, uppers.cast("double") / ln.cast("double")).otherwise(F.lit(0.0))
-
-
 def digit_ratio(text) -> Column:
     t = F.col(text) if isinstance(text, str) else text
     ln = F.length(t)

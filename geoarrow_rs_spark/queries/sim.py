@@ -636,10 +636,10 @@ FROM q LEFT JOIN hits ON q.query_id = hits.query_id
 
 
 def sim_quantized_topk(spark, sf_dir):
-    """int8 scalar-quantized brute-force top-k: per-dim max-abs scales
-    from the corpus, symmetric round-to-127 encode, EXACT int64 dot
-    products (no float accumulation anywhere in the score), quantized
-    cosine rank. Oracle replays scale/encode/score in list SQL."""
+    """int8 scalar-quantized brute-force top-k: per-dim max-abs scales,
+    round-to-127 encode, codes ranked by cosine_topk (its double fold is
+    the EXACT integer dot product below 2^53). Oracle replays
+    scale/encode/score in list SQL with BIGINT sums."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 8)
     corpus = e.where(F.col("vec_id") >= 8)
@@ -768,35 +768,16 @@ FROM best WHERE rn = 1
 
 def sim_text_hash_retrieval(spark, sf_dir):
     """Model-free text retrieval end to end: documents feature-hash to
-    dim-32 INTEGER vectors (text.hash_embed — the hashing trick, exact
-    arithmetic), then cosine top-5 with exact int64 dot products. The
-    text->vector->ANN bridge with no floats anywhere until the final
+    dim-32 INTEGER vectors (text.hash_embed), then cosine_topk takes the
+    top 5 (its double fold is the EXACT integer dot product below 2^53).
+    The text->vector->ANN bridge with no floats anywhere until the final
     cosine division."""
     d = _t(spark, sf_dir, "documents")
     vecs = text.hash_embed(d, dim=32)
-    q = vecs.where(F.col("doc_id") < 3).select(
-        F.col("doc_id").alias("query_id"), F.col("hvec").alias("__qv")
-    )
-    c = vecs.where(F.col("doc_id") >= 3).select(
-        F.col("doc_id").alias("neighbor_id"), F.col("hvec").alias("__cv")
-    )
-    idot = similarity._int_dot_expr
-    den = F.sqrt(idot(F.col("__qv"), F.col("__qv")).cast("double")) * F.sqrt(
-        idot(F.col("__cv"), F.col("__cv")).cast("double")
-    )
-    num = idot(F.col("__qv"), F.col("__cv")).cast("double")
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.when(den > 0, num / den).otherwise(F.lit(0.0)), 8).alias("hcosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hcosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= 5)
-    )
+    q = vecs.where(F.col("doc_id") < 3)
+    c = vecs.where(F.col("doc_id") >= 3)
+    out = similarity.cosine_topk(q, c, "doc_id", "doc_id", "hvec", "hvec", k=5)
+    return out.withColumnRenamed("cosine", "hcosine")
 
 
 _HE_B = "CAST(concat('0x', substr(md5(concat('he:', w)), 1, 8)) AS BIGINT) % 32"
@@ -849,9 +830,7 @@ def sim_semantic_dedup(spark, sf_dir):
     lower-id cluster-mate >= 0.35 (keep-first). The oracle replays
     training, assignment, and the pairwise threshold in unrolled CTEs."""
     e = _t(spark, sf_dir, "embeddings")
-    out = similarity.semantic_dedup(
-        e, k_clusters=8, iters=2, threshold=0.35, dim_hint=64
-    )
+    out = similarity.semantic_dedup(e, k_clusters=8, iters=2, threshold=0.35)
     return out.select("vec_id", F.col("cid").cast("bigint").alias("cid"), "kept")
 
 

@@ -179,19 +179,6 @@ def ellipsoidal_area(g):
     return total
 
 
-def ellipsoidal_signed_area(g):
-    """Signed ellipsoidal area (shell orientation respected)."""
-    if g is None:
-        return None
-    total = 0.0
-    for p in iter_parts(g):
-        if p.kind == POLYGON and p.data:
-            shell = _ring_ellipsoidal_area(p.data[0])
-            holes = sum(abs(_ring_ellipsoidal_area(r)) for r in p.data[1:])
-            total += shell - math.copysign(holes, shell)
-    return total
-
-
 def _seg_lengths(line):
     d = np.diff(line[:, :2], axis=0)
     return np.hypot(d[:, 0], d[:, 1])

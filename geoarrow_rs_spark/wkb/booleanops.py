@@ -38,17 +38,6 @@ from .core import (
 _SNAP = 1e-9
 
 
-def _poly_rings(g):
-    """list of rings (np arrays, closed) across polygon parts, with ring->part map."""
-    rings = []
-    for p in iter_parts(g):
-        if p.kind == POLYGON and p.data:
-            for r in p.data:
-                if len(r) >= 4:
-                    rings.append(np.asarray(r[:, :2], dtype=np.float64))
-    return rings
-
-
 def _polys_of(g):
     """list of polygon part ring-lists (each a list of rings)."""
     out = []

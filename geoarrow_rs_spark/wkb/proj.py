@@ -255,12 +255,6 @@ def utm_zone_params(epsg):
     return zone * 6.0 - 183.0, fn
 
 
-def utm_epsg_for(lon_deg, lat_deg):
-    """EPSG code of the natural UTM zone for a lon/lat (no Norway exceptions)."""
-    zone = int(np.floor((float(lon_deg) + 180.0) / 6.0)) % 60 + 1
-    return (32600 if float(lat_deg) >= 0 else 32700) + zone
-
-
 # ---------------------------------------------------------------------------
 # Geodetic datum shifts: geographic <-> geocentric (ECEF) + 7-parameter
 # Helmert position-vector transformation (EPSG method 9606). Used for

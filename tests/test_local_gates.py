@@ -69,6 +69,21 @@ def data(spark, sf_dir):
     )
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     d["train_corpus"] = e.where("vec_id >= 8")
+    # 11 seeded 2-d vectors, then each adversarial variant of them
+    vecs = [[float(x) for x in v] for v in np.round(rng.uniform(-3, 3, (11, 2)), 3)]
+    adversarial = {
+        "null-vector": {4: None},
+        "ragged": {4: [1.0, 2.0, 3.0]},
+        "null-element": {4: [None, 1.0]},
+        "nan": {4: [float("nan"), 1.0]},
+        "inf": {4: [1.0, float("inf")]},
+    }
+    for name, change in adversarial.items():
+        d[f"train_{name}"] = spark.createDataFrame(
+            [(i, change.get(i, v)) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<double>",
+        )
+    d["train_empty"] = spark.createDataFrame([], "vec_id long, embedding array<double>")
     from geoarrow_rs_spark.datapipe.similarity import cosine_topk
 
     c = e.where(F.col("vec_id") >= 6)
@@ -145,6 +160,24 @@ def _train(d):
             pq_train(e, m=4, k_codes=8, iters=2, dim=64))
 
 
+def _train_small(name):
+    """k-means and PQ training on an 11-row input: both routes train, or
+    both raise the same error (compared as its type)."""
+    from geoarrow_rs_spark.datapipe.similarity import kmeans_train, pq_train
+
+    def run(d):
+        out = []
+        for train in (lambda e: kmeans_train(e, k=3, iters=2),
+                      lambda e: pq_train(e, m=2, k_codes=3, iters=2, dim=2)):
+            try:
+                out.append(repr(train(d[f"train_{name}"])))
+            except Exception as exc:
+                out.append(type(exc).__name__)
+        return out
+
+    return run
+
+
 CASES = {
     "knn-uniform": _knn("uniform", "uniform"),
     "knn-lattice-far": _knn_lattice_far,
@@ -165,6 +198,10 @@ CASES = {
     "anf-k32-hops3": _anf(32, 3),
     "mmr-embeddings": _mmr,
     "train-kmeans-pq": _train,
+    # inputs the local route declines: the gate a NULL vector, ragged or
+    # empty input; the int64 headroom check a NULL element, NaN or inf
+    **{f"train-{name}": _train_small(name) for name in
+       ("null-vector", "ragged", "null-element", "nan", "inf", "empty")},
 }
 
 

@@ -964,6 +964,30 @@ def _crossjoin_pq_encode(corpus, cents, vec="embedding", id_col="vec_id",
     ).select("vid", "s", F.col("__m.code").alias("code"))
 
 
+def _crossjoin_probes(queries, query_id, query_vec, cents, nprobe):
+    """The broadcast cross-join probe choice of ``kmeans_ivf_topk`` and
+    ``ivfpq_topk`` that ``_probe_cells`` replaced, kept as its oracle (same
+    signature): per query id, the ``nprobe`` centroids first by (exact
+    decimal distance NULLS FIRST, cid)."""
+    from pyspark.sql import Window
+
+    from geoarrow_rs_spark.datapipe import similarity as S
+
+    cdf = S._centroid_df(queries.sparkSession, cents)
+    qd = queries.crossJoin(F.broadcast(cdf)).select(
+        F.col(query_id).alias("query_id"),
+        F.col(query_vec).alias("__qv"),
+        F.col("__cid"),
+        S.dist2_decimal_expr(F.col(query_vec), F.col("__cvec")).alias("__d2"),
+    )
+    wq = Window.partitionBy("query_id").orderBy(F.col("__d2").asc(), F.col("__cid").asc())
+    return (
+        qd.withColumn("__pr", F.row_number().over(wq))
+        .where(F.col("__pr") <= nprobe)
+        .select("query_id", "__qv", F.col("__cid").alias("cid"))
+    )
+
+
 def _sorted_rows(df):
     # repr: NaN elements compare equal by text, not by value
     return sorted(map(repr, map(tuple, df.collect())))
@@ -1024,8 +1048,9 @@ _ASSIGN_CASES = {
     # short, so its distance to a 4-vector is NULL and sorts before every
     # number, while a 3-vector gets a NULL distance from ids 1-5 only; in
     # "nan-centroid" id 2's distance is NULL for every vector
+    # and a 3-vector with a NULL element is NULL to every id, so id 0 wins
     "ragged-centroids": [[2.0, 2.0, 2.0, 2.0], [2.0, 2.0, 2.0], None, [0.5],
-                         [0.1, 0.2, 0.3]],
+                         [0.1, 0.2, 0.3], [2.0, None, 2.0]],
     "nan-centroid": [[2.0, 2.0, 2.0, 2.0], [0.5, 0.0, 0.0, 0.0], [2.0]],
 }
 _CASE_CENTS = {
@@ -1109,9 +1134,90 @@ def test_assignment_overflow_raises_like_crossjoin_plan(spark, vector):
     pcents = [(0, 0, [0.0, 0.0, 0.0, 0.0])]
     for plan in (_crossjoin_assign(df, _TIE_CENTS), S.assign_clusters(df, _TIE_CENTS),
                  _crossjoin_pq_encode(df, pcents, m=1, dim=4),
-                 S.pq_encode(df, pcents, m=1, dim=4)):
+                 S.pq_encode(df, pcents, m=1, dim=4),
+                 _crossjoin_probes(df, "vec_id", "embedding", _TIE_CENTS, 2),
+                 S._probe_cells(df, "vec_id", "embedding", _TIE_CENTS, 2)):
         with pytest.raises(Exception, match="Decimal"):
             plan.collect()
+
+
+@pytest.mark.parametrize(
+    "case", list(_ASSIGN_CASES) + [f"random-{i}" for i in range(3)])
+def test_probe_cells_match_crossjoin_plan_on_edge_cases(spark, case):
+    """Each query's ``nprobe`` cells from the assigner equal the former
+    cross-join window's at nprobe 1, 2, 3 and one above the centroid
+    count, on the assigner's seeded edge cases: same rows, names, types."""
+    from geoarrow_rs_spark.datapipe import similarity as S
+
+    vectors = (_ASSIGN_CASES[case] if case in _ASSIGN_CASES
+               else _random_vectors(int(case.rsplit("-", 1)[1])))
+    df = _edge_frame(spark, vectors)
+    cents = _CASE_CENTS.get(case, _TIE_CENTS)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        for nprobe in (1, 2, 3, len(cents) + 1):
+            got = S._probe_cells(df, "vec_id", "embedding", cents, nprobe)
+            want = _crossjoin_probes(df, "vec_id", "embedding", cents, nprobe)
+            assert got.columns == want.columns and got.dtypes == want.dtypes
+            assert _sorted_rows(got) == _sorted_rows(want), nprobe
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_probe_cells_are_chosen_per_query_row(spark):
+    """Rows that share a query id (NULL included) each probe their own
+    cells: the former window picked ``nprobe`` cells from the union of
+    their centroid distances. Per row, the choice is the former plan's."""
+    from geoarrow_rs_spark.datapipe import similarity as S
+
+    df = _edge_frame(spark, [[2.0, 2.0, 2.0, 1.9], [0.1, 0.2, 0.3, 0.6],
+                             [0.7, 0.3, 0.2, 0.2], [0.5, 0.0, 0.1, 0.0],
+                             [2.0, 2.1, 2.0, 2.0]])
+    df = df.withColumn("__row", F.col("vec_id")).withColumn(
+        "vec_id", F.when(F.col("vec_id") < 2, 1).when(F.col("vec_id") < 4, None)
+        .otherwise(F.col("vec_id")))
+    for nprobe in (1, 2):
+        got = S._probe_cells(df, "vec_id", "embedding", _TIE_CENTS, nprobe)
+        per_row = _crossjoin_probes(df, "__row", "embedding", _TIE_CENTS, nprobe).join(
+            df.select(F.col("__row").alias("query_id"), "vec_id"), "query_id"
+        ).select(F.col("vec_id").alias("query_id"), "__qv", "cid")
+        assert _sorted_rows(got) == _sorted_rows(per_row)
+        assert got.count() == 5 * nprobe
+        assert _crossjoin_probes(df, "vec_id", "embedding", _TIE_CENTS,
+                                 nprobe).count() == 3 * nprobe
+
+
+def test_ivf_topk_match_former_probe_plan(spark, sf_dir, monkeypatch):
+    """``kmeans_ivf_topk`` and ``ivfpq_topk`` give the rows, names and types
+    they gave with the cross-join probe (patched back in as
+    ``_probe_cells``) on the embeddings corpus and a seeded edge-case
+    corpus, at nprobe 1, 3 and above ``k_clusters``."""
+    from geoarrow_rs_spark.datapipe import similarity as S
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    edge = _edge_frame(spark, [v for v in _random_vectors(0)
+                               if v is not None and len(v) == 4])
+    runs = []
+    for nprobe in (1, 3, 9):
+        runs.append(lambda n=nprobe: S.kmeans_ivf_topk(
+            e.where("vec_id < 8"), e.where("vec_id >= 8"), k=5, k_clusters=8,
+            iters=2, nprobe=n))
+        runs.append(lambda n=nprobe: S.ivfpq_topk(
+            e.where("vec_id < 8"), e.where("vec_id >= 8"), k=5, k_clusters=8,
+            iters=2, nprobe=n, m=4, k_codes=8, pq_iters=2, dim=64))
+    runs.append(lambda: S.kmeans_ivf_topk(
+        edge.where("vec_id < 12"), edge, k=4, k_clusters=5, iters=2, nprobe=2))
+    runs.append(lambda: S.ivfpq_topk(
+        edge.where("vec_id < 12"), edge, k=4, k_clusters=5, iters=2, nprobe=2,
+        m=2, k_codes=4, pq_iters=2, dim=4))
+    got = [run() for run in runs]
+    monkeypatch.setattr(S, "_probe_cells", _crossjoin_probes)
+    for g, run in zip(got, runs):
+        want = run()
+        assert g.dtypes == want.dtypes
+        assert _sorted_rows(g) == _sorted_rows(want)
 
 
 def test_srp_dim_hint_bit_identical(spark, sf_dir):

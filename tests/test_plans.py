@@ -432,7 +432,6 @@ def test_catalog_wide_no_unintended_cartesian(spark, sf_dir):
         "q11_important_values",      # scalar threshold row
         "q22_idle_customers",        # scalar avg balance row
         "sim_near_dup_pairs",        # broadcast query set, exact refine
-        "sim_kmeans_ivf_topk",       # broadcast centroid set
         "text_bm25_topk",            # single-row corpus stats
         "dedup_lsh_eval",            # deliberate bounded all-pairs EVAL sample
     }
@@ -506,9 +505,11 @@ def test_semantic_dedup_pairs_are_equi_join(spark, sf_dir):
 
 
 def test_tfidf_and_quantized_native_no_cartesian(spark, sf_dir):
-    """tf-idf and int8-quantized scoring stay fully native (no Python
-    eval) and plan no CartesianProduct — their cross joins are all
-    broadcast single-row/tiny tables (BroadcastNestedLoopJoin)."""
+    """tf-idf and int8-quantized scoring run no Python UDF (no
+    ArrowEvalPython/BatchEvalPython; the quantized codes are scored by
+    cosine_topk's numpy scorer under mapInArrow) and plan no
+    CartesianProduct — tf-idf's cross joins are broadcast single-row/tiny
+    tables (BroadcastNestedLoopJoin)."""
     from geoarrow_rs_spark.datapipe.corpus import tfidf_topk
     from geoarrow_rs_spark.datapipe.similarity import quantized_topk
 
@@ -520,6 +521,29 @@ def test_tfidf_and_quantized_native_no_cartesian(spark, sf_dir):
         plan = _plan(df)
         assert "CartesianProduct" not in plan
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_integer_and_ivf_probe_sites_plan_no_nested_loop(spark, sf_dir):
+    """The four rankings that moved onto a numpy scorer plan no
+    BroadcastNestedLoopJoin or CartesianProduct: quantized_topk and the
+    text-hash retrieval score through cosine_topk, and kmeans_ivf_topk /
+    ivfpq_topk take their probe cells from the nearest-centroid assigner."""
+    from geoarrow_rs_spark.datapipe import similarity as S
+    from geoarrow_rs_spark.queries import QUERIES
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = e.where(F.col("vec_id") < 4)
+    c = e.where(F.col("vec_id") >= 4)
+    for df in (
+        S.quantized_topk(q, c, k=3),
+        QUERIES["sim_text_hash_retrieval"][0](spark, sf_dir),
+        S.kmeans_ivf_topk(q, c, k=3, k_clusters=4, iters=1, nprobe=2),
+        S.ivfpq_topk(q, c, k=3, k_clusters=4, iters=1, nprobe=2, m=4,
+                     k_codes=4, pq_iters=1, dim=64),
+    ):
+        plan = _plan(df)
+        assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan, plan
+        assert "MapInArrow" in plan, plan
 
 
 def test_stratified_sample_single_exchange(spark, sf_dir):
